@@ -4,7 +4,9 @@ idempotent silver/gold, event-time partition layout, P3 pruning."""
 from __future__ import annotations
 
 import json
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from wistia_etl_pipeline_spark.incremental.watermark import JsonStateStore
@@ -247,3 +249,40 @@ def test_bronze_write_failure_advances_nothing(spark, tmp_path):
 
     s3 = pipe.run_once(["m1", "m2"])  # converged
     assert {v["action"] for v in s3.values()} == {"skip"}
+
+
+def test_crash_inside_silver_swap_converges_on_rerun(spark, tmp_path, crash_swap):
+    """A run that dies after any filesystem step of the silver MERGE's
+    rename swap, followed by runs until every media skips, ends with the
+    silver, dim and gold of a run that never crashed. m2 skips the
+    crashed run, so its silver rows live only in the swapped table."""
+
+    def scenario(root, step):
+        fake = FakeWistia()
+        pipe = _mk(spark, root, fake)
+        pipe.gold_exact = True  # bit-identical gold across the two runs
+        pipe.run_once(["m1", "m2"])
+        fake.events["m1"].append(_event("m1e4", "2024-01-02T15:00:00Z", 1.0, "v9", "m1"))
+        fake.meta["m1"]["updated"] = "2024-01-03T00:00:00Z"
+        with crash_swap(step, str(root / "silver")) as steps:
+            if step is None:
+                pipe.run_once(["m1", "m2"])
+            else:
+                with pytest.raises(RuntimeError, match="injected crash"):
+                    pipe.run_once(["m1", "m2"])
+        for _ in range(3):
+            if {v["action"] for v in pipe.run_once(["m1", "m2"]).values()} == {"skip"}:
+                break
+        else:
+            pytest.fail("runs did not converge to skip")
+        tables = {
+            t: Counter(map(tuple, spark.read.parquet(str(root / t)).collect()))
+            for t in ("silver", "dim", "gold")
+        }
+        return tables, steps["done"]
+
+    want, n_steps = scenario(tmp_path / "ref", None)
+    assert n_steps == 3
+    for step in range(1, n_steps + 1):
+        got, _ = scenario(tmp_path / f"crash{step}", step)
+        assert got == want, f"crash after silver swap step {step}"

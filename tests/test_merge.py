@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Row
+import os
+
+import pytest
+from pyspark.sql import Row, functions as F
 
 from wistia_etl_pipeline_spark.operators.merge import merge_into_path, upsert
+from wistia_etl_pipeline_spark.sources.txlog import TxLogTable
 
 
 def _rows(df):
@@ -35,7 +39,7 @@ def test_upsert_composite_key(spark):
         [Row(media_id="m1", dt="d1", v=1), Row(media_id="m1", dt="d2", v=2)]
     )
     stage = spark.createDataFrame([Row(media_id="m1", dt="d2", v=22)])
-    out = upsert(target, stage, ["media_id", "dt"], broadcast_stage=True)
+    out = upsert(target, stage, ["media_id", "dt"])
     assert _rows(out) == [("m1", "d1", 1), ("m1", "d2", 22)]
 
 
@@ -71,3 +75,80 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     after = len(list(pathlib.Path(path).rglob("*.parquet")))
     assert after <= n < before
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows_before
+
+
+@pytest.mark.parametrize("protocol", ["swap", "txlog"])
+def test_both_commit_protocols_write_one_merge_plan(spark, tmp_path, protocol):
+    """merge_into_path and TxLogTable.merge write the same MERGE plan:
+    the same rows, every stage row computed exactly once (the stage cut),
+    and a small merge clustered into one file."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(k):
+        calls.add(1)
+        return k
+
+    target = spark.range(100).select(F.col("id").alias("k"), F.lit("old").alias("v"))
+    stage = spark.range(90, 110).select(counted("id").alias("k"), F.lit("new").alias("v"))
+    path = str(tmp_path / "t")
+    if protocol == "swap":
+        merge_into_path(spark, target, path, ["k"])
+        merge_into_path(spark, stage, path, ["k"])
+        got = spark.read.parquet(path)
+        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    else:
+        table = TxLogTable(path)
+        table.overwrite(target)
+        table.merge(spark, stage, ["k"])
+        got = table.read(spark)
+        files = table._manifest(table.current_version())["files"]
+    assert _rows(got) == [(k, "old" if k < 90 else "new") for k in range(110)]
+    assert calls.value == 20
+    assert len(files) == 1
+
+
+def _crash_then_replay(spark, tmp_path, crash_swap, name, setup, op):
+    """Run ``op`` on a table built by ``setup`` with its swap killed after
+    each filesystem step in turn, then rerun ``op``: every replay must
+    end at the rows of an uninterrupted ``op`` and leave no ``__old``."""
+    ref = str(tmp_path / f"{name}_ref")
+    setup(ref)
+    with crash_swap(None, ref) as steps:
+        op(ref)
+    want = _rows(spark.read.parquet(ref))
+    assert steps["done"] == 3  # rename aside, rename in, drop the old
+    for step in range(1, steps["done"] + 1):
+        path = str(tmp_path / f"{name}_{step}")
+        setup(path)
+        with crash_swap(step, path) as crashed, pytest.raises(
+            RuntimeError, match="injected crash"
+        ):
+            op(path)
+        assert crashed["crashed"]
+        op(path)  # the replay
+        assert _rows(spark.read.parquet(path)) == want, f"crash after swap step {step}"
+        assert not os.path.exists(path + "__old")
+
+
+def test_merge_swap_crash_at_every_step_converges_on_replay(spark, tmp_path, crash_swap):
+    base = spark.createDataFrame([(k, f"v{k}") for k in range(100)], "k long, v string")
+    delta = spark.createDataFrame(
+        [(k, f"w{k}") for k in range(95, 105)], "k long, v string"
+    )
+    _crash_then_replay(
+        spark, tmp_path, crash_swap, "merge",
+        lambda path: merge_into_path(spark, base, path, ["k"]),
+        lambda path: merge_into_path(spark, delta, path, ["k"]),
+    )
+
+
+def test_compact_swap_crash_at_every_step_converges_on_replay(spark, tmp_path, crash_swap):
+    from wistia_etl_pipeline_spark.sources.writers import compact_parquet
+
+    base = spark.createDataFrame([(k, f"v{k}") for k in range(100)], "k long, v string")
+    _crash_then_replay(
+        spark, tmp_path, crash_swap, "compact",
+        lambda path: base.repartition(4).write.parquet(path),
+        lambda path: compact_parquet(spark, path),
+    )

@@ -4,6 +4,9 @@ idempotent foreachBatch merge, windowed rollup."""
 from __future__ import annotations
 
 import json
+from collections import Counter
+
+import pytest
 
 from wistia_etl_pipeline_spark.streaming.pipeline import (
     deduped_silver_stream,
@@ -828,3 +831,45 @@ def test_stream_state_partitions_derivation(spark, tmp_path):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(
             S.STREAM_SHUFFLE_PARTITIONS
         )
+
+
+def test_merge_sink_crash_inside_swap_converges_after_restart(spark, tmp_path, crash_swap):
+    """The vanilla merge sink dies after each filesystem step of its
+    rename swaps in turn (two micro-batches, one file each); restarting
+    the query on the same checkpoint replays the uncommitted batch and
+    ends with the target of a query that never crashed."""
+
+    def scenario(root, step):
+        bronze = root / "bronze"
+        _write_jsonl(bronze / "f1.json", [
+            _event("e1", "2024-01-01T10:00:00Z"),
+            _event("e2", "2024-01-01T11:00:00Z"),
+        ])
+        _write_jsonl(bronze / "f2.json", [
+            _event("e2", "2024-01-01T11:00:00Z"),
+            _event("e3", "2024-01-01T12:00:00Z"),
+        ])
+        target, ckpt = str(root / "silver"), str(root / "ckpt")
+
+        def run():
+            run_silver_stream(
+                spark, str(bronze), target, ckpt, max_files_per_trigger=1
+            ).awaitTermination(120)
+
+        with crash_swap(step, target) as steps:
+            if step is None:
+                run()
+            else:
+                with pytest.raises(Exception, match="injected crash"):
+                    run()
+        if step is not None:
+            run()  # the restart
+        return Counter(map(tuple, spark.read.parquet(target).collect())), steps["done"]
+
+    want, n_steps = scenario(tmp_path / "ref", None)
+    assert {r[0] for r in want} == {"e1", "e2", "e3"}
+    # the bootstrap swap takes two steps, every later one three
+    assert n_steps >= 5 and (n_steps - 2) % 3 == 0
+    for step in range(1, n_steps + 1):
+        got, _ = scenario(tmp_path / f"crash{step}", step)
+        assert got == want, f"crash after swap step {step}"

@@ -79,6 +79,30 @@ def test_concurrent_reader_survives_commit(spark, tmp_path):
     assert _rows(t.read(spark)) != before  # fresh read sees v1
 
 
+def test_manifest_without_file_list_is_refused(spark, tmp_path):
+    """A directory-scan manifest (no file list) fails loudly on read,
+    append and vacuum; vacuum must never collect the data it names."""
+    import json
+
+    import pytest
+
+    t = TxLogTable(str(tmp_path / "t"))
+    t.overwrite(_target(spark))
+    data_dir = os.path.dirname(os.path.join(t.path, t._manifest(0)["files"][0]["path"]))
+    with open(os.path.join(t.log_dir, "00000000.json"), "w") as f:
+        json.dump({"version": 0, "data_dir": os.path.relpath(data_dir, t.path)}, f)
+    before = sorted(os.listdir(data_dir))
+    for op in (
+        lambda: t.read(spark),
+        lambda: t.append(_stage(spark)),
+        lambda: t.vacuum(keep_versions=1),
+    ):
+        with pytest.raises(ValueError, match="file list"):
+            op()
+    assert sorted(os.listdir(data_dir)) == before
+    assert os.listdir(os.path.join(t.path, "data")) == [os.path.basename(data_dir)]
+
+
 def test_put_if_absent_is_exclusive(tmp_path):
     dst = str(tmp_path / "00000001.json")
 
@@ -105,12 +129,12 @@ def test_lost_race_retries_against_fresh_snapshot(spark, tmp_path):
     real_commit = t._commit
     interleaved = {"done": False}
 
-    def racing_commit(version, data_dir, **kw):
+    def racing_commit(version, meta):
         if not interleaved["done"]:
             interleaved["done"] = True
             other = TxLogTable(t.path)
             other.merge(spark, spark.createDataFrame([Row(k="c", v=300)]), ["k"])
-        return real_commit(version, data_dir, **kw)
+        return real_commit(version, meta)
 
     t._commit = racing_commit
     t.merge(spark, _stage(spark), ["k"])

@@ -15,19 +15,26 @@ the reference:
   (the second application deletes-and-reinserts identical rows);
 - **stage wins**: every key present in stage takes stage's row.
 
+:func:`merge_plan` is the one MERGE plan: the stage cut once, the
+upsert, the output clustered by key. Both commit protocols write it —
+the rename swap here (:func:`merge_into_path`) and the transaction log
+(``sources/txlog.TxLogTable.merge``); they differ only in how the
+result becomes visible.
+
 Scale notes (100 TB):
-- The anti-join is the only shuffle, keyed on the upsert key. When the
-  stage is small relative to the target (the common incremental case —
-  a day's delta vs years of history), ``broadcast_stage=True`` turns
-  it into a broadcast anti-join: the 100 TB target never shuffles.
+- The stage is always broadcast: the incremental contract keeps it
+  delta-sized (a day's delta vs years of history), so the anti-join
+  never shuffles the 100 TB target. The only exchange over the target
+  is the key clustering of the rewrite.
 - :func:`merge_into_path` materializes via write-temp-then-swap. On
   vanilla Parquet, overwrite-in-place is not atomic for concurrent
   readers (SURVEY.md §7.4); on a table format with ACID commit
   semantics (Delta/Iceberg) a real ``MERGE INTO`` replaces this whole
   module — the logical plan here is the portable fallback.
-- With a partitioned target, pass ``partition_filter`` to rewrite only
-  the partitions the stage touches (dynamic partition overwrite), not
-  the whole table.
+- The swap is crash-safe under replay: every swap user first runs
+  :func:`_recover_swap`, which rolls an interrupted swap back (target
+  gone, ``__old`` present) or finishes it (both present), so a crash
+  at any filesystem step converges when the same MERGE runs again.
 """
 
 from __future__ import annotations
@@ -37,37 +44,24 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def upsert(
-    target: DataFrame,
-    stage: DataFrame,
-    keys: Sequence[str],
-    *,
-    broadcast_stage: bool = False,
-) -> DataFrame:
-    """Delete-then-insert by key, as one declarative plan.
+def upsert(target: DataFrame, stage: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Delete-then-insert by key, as one declarative plan; the stage is
+    the broadcast side of the anti-join.
 
     Reference: wistia_stored_procedures.py:9-11 (DELETE USING = left
     anti join on the keep side) + :13-36 (INSERT from stage).
     """
-    probe = F.broadcast(stage) if broadcast_stage else stage
-    kept = target.join(probe.select(*keys), list(keys), "left_anti")
+    kept = target.join(F.broadcast(stage).select(*keys), list(keys), "left_anti")
     return kept.unionByName(stage.select(*target.columns))
 
 
-def merge_into_path(
-    spark: SparkSession,
-    stage: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    *,
-    partition_by: Sequence[str] = (),
-) -> None:
-    """Materialized MERGE against a Parquet path: read target, upsert,
-    write to a temp path, swap. The swap is a rename — near-atomic on
-    posix/HDFS, best-effort on object stores (use Delta/Iceberg for
-    true ACID; this is the vanilla-Parquet fallback, SURVEY.md §7.4).
-    """
-    if _exists(spark, path):
+def merge_plan(
+    stage: DataFrame, target: DataFrame | None, keys: Sequence[str]
+) -> DataFrame:
+    """The rows a MERGE of ``stage`` into ``target`` writes, clustered by
+    key. ``target=None`` bootstraps the table from the stage alone."""
+    merged = stage
+    if target is not None:
         # The stage subtree feeds TWO consumers in the merged plan —
         # the broadcast anti-join probe and the insert union leg — and
         # Spark does not reuse a broadcast exchange as a union input,
@@ -75,12 +69,7 @@ def merge_into_path(
         # rollup) would execute twice per merge (r12; NOTES rule #7).
         # One lazy cut point = one computation, and the checkpoint is
         # delta-sized by the incremental contract.
-        stage = stage.localCheckpoint(eager=False)
-        target = spark.read.parquet(path)
-        merged = upsert(target, stage, keys, broadcast_stage=True)
-    else:
-        merged = stage
-    tmp = path.rstrip("/") + "__tmp_merge"
+        merged = upsert(target, stage.localCheckpoint(eager=False), keys)
     # Cluster the rewrite by key before it lands (guide §6 output
     # sizing, r13): without this the file count is whatever the merged
     # plan's partitioning happens to be — target-file-count + stage
@@ -91,33 +80,64 @@ def merge_into_path(
     # at any scale, one file for a delta-sized table locally — the same
     # hash write-distribution a table format (Iceberg
     # write.distribution-mode=hash) applies to MERGE output.
-    merged = merged.repartition(*[F.col(k) for k in keys])
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    return merged.repartition(*[F.col(k) for k in keys])
+
+
+def merge_into_path(
+    spark: SparkSession, stage: DataFrame, path: str, keys: Sequence[str]
+) -> None:
+    """Materialized MERGE against a Parquet path: read target, write
+    :func:`merge_plan` to a temp path, swap. The swap is a rename —
+    near-atomic on posix/HDFS, best-effort on object stores (use
+    Delta/Iceberg for true ACID; this is the vanilla-Parquet fallback,
+    SURVEY.md §7.4).
+    """
+    _recover_swap(spark, path)
+    target = spark.read.parquet(path) if _exists(spark, path) else None
+    tmp = path.rstrip("/") + "__tmp_merge"
+    merge_plan(stage, target, keys).write.mode("overwrite").parquet(tmp)
     _swap(spark, tmp, path)
 
 
+def _hpath(spark: SparkSession, path: str):
+    return spark._jvm.org.apache.hadoop.fs.Path(path)
+
+
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop filesystem holding ``path``."""
+    return _hpath(spark, path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return fs.exists(hpath)
+    return _fs(spark, path).exists(_hpath(spark, path))
+
+
+def _old(path: str) -> str:
+    return path.rstrip("/") + "__old"
+
+
+def _recover_swap(spark: SparkSession, path: str) -> None:
+    """Undo what a crash inside :func:`_swap` left behind; run before
+    reading ``path``. Target gone and ``__old`` present: the crash fell
+    between the two renames, so ``__old`` is the table — rename it
+    back. Both present: the new table landed, so drop ``__old``. A stale
+    temp directory needs nothing: the next write overwrites it."""
+    fs = _fs(spark, path)
+    live, old = _hpath(spark, path), _hpath(spark, _old(path))
+    if fs.exists(old):
+        if fs.exists(live):
+            fs.delete(old, True)
+        else:
+            fs.rename(old, live)
 
 
 def _swap(spark: SparkSession, tmp: str, path: str) -> None:
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    htmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    trash = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    if fs.exists(trash):
-        fs.delete(trash, True)
-    if fs.exists(hpath):
-        fs.rename(hpath, trash)
-    fs.rename(htmp, hpath)
-    if fs.exists(trash):
-        fs.delete(trash, True)
+    """Replace ``path`` by ``tmp``: rename the table aside, rename the
+    new one in, drop the old. Callers run :func:`_recover_swap` first,
+    so ``__old`` is never present on entry."""
+    fs = _fs(spark, path)
+    live, new, old = (_hpath(spark, p) for p in (path, tmp, _old(path)))
+    if fs.exists(live):
+        fs.rename(live, old)
+    fs.rename(new, live)
+    fs.delete(old, True)

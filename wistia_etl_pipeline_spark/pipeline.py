@@ -187,11 +187,6 @@ class BatchPipeline:
 
     # -- stages ----------------------------------------------------------
 
-    def _write_bronze(self, media_id: str, rows: list[dict]) -> None:
-        """S4 — partitioned JSON-lines bronze for one media (kept for
-        direct callers; ``run_once`` batches all media into one write)."""
-        self._write_bronze_batch([(media_id, rows)])
-
     def _write_bronze_batch(self, batches: list[tuple[str, list[dict]]]) -> None:
         """S4 — partitioned JSON-lines bronze, event-time dt grain.
 
@@ -227,10 +222,6 @@ class BatchPipeline:
             .partitionBy("media_id", "dt")
             .json(self.bronze_path)
         )
-
-    def _write_stats(self, media_id: str, result) -> None:
-        """One-media convenience wrapper over ``_write_stats_batch``."""
-        self._write_stats_batch([(media_id, result)])
 
     def _write_stats_batch(self, batches: list[tuple[str, object]]) -> None:
         """Bronze stats feed (S4 second file kind, ``stats_page=N``

@@ -309,7 +309,7 @@ def merge_upsert_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "event_id", "ts", "value"
     )
     target, stage = _latest_slice(events, True), _latest_slice(events, False)
-    return upsert(target, stage, ["event_type"], broadcast_stage=True).select(
+    return upsert(target, stage, ["event_type"]).select(
         F.col("event_type").alias("media_id"),
         "event_id",
         F.unix_micros("ts").alias("received_us"),
@@ -350,7 +350,7 @@ def merge_upsert_composite_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["user_id", "dt", "event_id", "value"]
     target = daily.filter(F.col("ts") < cutoff).select(*cols)
     stage = daily.filter(F.col("ts") >= cutoff).select(*cols)
-    return upsert(target, stage, ["user_id", "dt"], broadcast_stage=True).select(
+    return upsert(target, stage, ["user_id", "dt"]).select(
         F.col("user_id").alias("visitor_key"), "dt", "event_id", "value"
     )
 

@@ -4,15 +4,20 @@ protocol implemented in-repo because neither ships in this environment).
 
 The reference gets transactional upsert for free from Redshift (the
 DELETE+INSERT runs inside a stored procedure,
-wistia_stored_procedures.py:3-85). ``operators/merge.merge_into_path``'s
-rename-swap is only near-atomic: a reader listing the directory during
-the swap can observe a missing or half-populated table. This module
-closes that gap with the same mechanics Delta Lake's protocol uses
-(the "Delta Lake: High-Performance ACID Table Storage" VLDB'20 design):
+wistia_stored_procedures.py:3-85). ``operators/merge.merge_into_path``
+writes the same MERGE plan (``operators/merge.merge_plan``: stage cut
+once, broadcast anti-join upsert, output clustered by key) and makes it
+visible with a rename swap. That swap converges after a crash — its
+next run rolls an interrupted swap back or forward before reading — but
+it is not isolated: a reader listing the directory during the swap can
+observe a missing or half-populated table. ``TxLogTable.merge`` writes
+that plan under this module's protocol instead, which closes the gap
+with the same mechanics Delta Lake's protocol uses (the "Delta Lake:
+High-Performance ACID Table Storage" VLDB'20 design):
 
-- **Immutable versioned data**: every commit writes its full snapshot
-  under a fresh ``data/v{N}-{uuid}/`` directory; no commit ever mutates
-  or deletes files a previous version references.
+- **Immutable versioned data**: every commit writes its new files
+  under a fresh ``data/`` directory; no commit ever mutates or deletes
+  files a previous version references.
 - **Atomic log commit**: a version exists iff ``_txlog/{N}.json``
   exists. The manifest is staged to a temp name and published with a
   PUT-IF-ABSENT (hard-link-then-unlink — atomic and exclusive on
@@ -20,17 +25,21 @@ closes that gap with the same mechanics Delta Lake's protocol uses
   equivalent a conditional PUT / DynamoDB LogStore — that swap is the
   single storage-specific primitive, isolated in ``_put_if_absent``).
 - **Readers pin a snapshot**: ``read()`` resolves the highest committed
-  manifest and scans only that version's directory. A crash between
-  data write and log commit leaves an orphan directory that no reader
-  ever sees; concurrent readers of version N keep working (and can
+  manifest and scans only the files it lists. A crash between data
+  write and log commit leaves an orphan directory that no reader ever
+  sees; concurrent readers of version N keep working (and can
   re-collect) while N+1 commits, because N's files are never touched.
 - **Optimistic concurrency**: two writers racing to version N both
   write data, one wins the put-if-absent, the loser re-reads the NEW
   snapshot, recomputes its upsert, and retries at N+1 — merge is
-  serializable, not last-write-wins.
-- **vacuum()** removes data directories no longer referenced by the
-  retained manifests — the only deletion in the protocol, explicitly
-  decoupled from commits so readers get a grace window.
+  serializable, not last-write-wins. Every write (overwrite, append,
+  partition overwrite, merge, delete, compact, Z-order) runs this one
+  loop, ``TxLogTable._commit_loop``.
+- **vacuum()** removes data files no longer referenced by the retained
+  manifests — the only deletion in the protocol, explicitly decoupled
+  from commits so readers get a grace window. Every manifest must list
+  its files (``_manifest`` refuses one that does not), so vacuum can
+  never mistake a snapshot's data for garbage.
 
 Scale note: this module commits O(1) small manifests per operation; the
 data write itself is the same distributed parquet write as the vanilla
@@ -51,7 +60,7 @@ import json
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -147,6 +156,14 @@ def _collect_file_stats(
             entry["partition"] = parts
         out.append(entry)
     return out
+
+
+def _may_match(entry: dict, where: tuple[str, object, object]) -> bool:
+    """False iff the manifest file entry's min/max for ``where``'s column
+    proves it holds no row in ``[lo, hi]``."""
+    col, lo, hi = where
+    rng = (entry.get("stats") or {}).get(col)
+    return rng is None or not (rng[1] < lo or rng[0] > hi)
 
 
 def _evolve_schema(head_json: str | None, df: DataFrame, *, merge_schema: bool) -> str:
@@ -259,34 +276,75 @@ class TxLogTable:
 
     def _manifest(self, version: int) -> dict:
         with open(os.path.join(self.log_dir, f"{version:08d}.json")) as f:
-            return json.load(f)
+            manifest = json.load(f)
+        if "files" not in manifest:
+            # A directory-scan manifest from before manifests listed
+            # their files: treated as file-level it would read as empty
+            # and vacuum would collect its data, so refuse it loudly.
+            raise ValueError(
+                f"version {version} of {self.path} is a directory-scan "
+                "manifest without a file list; rewrite the table with "
+                "overwrite()"
+            )
+        return manifest
 
-    def _commit(self, version: int, data_dir: str | None, *, meta: dict | None = None) -> bool:
-        """Publish ``version``. ``data_dir`` (may be None for file-list
-        commits like append) is recorded for provenance; the
-        authoritative content is ``meta["files"]``. False = lost race."""
+    def _commit(self, version: int, meta: dict) -> bool:
+        """Publish ``meta`` as the manifest of ``version``. False = lost
+        race."""
         os.makedirs(self.log_dir, exist_ok=True)
-        doc = {"version": version}
-        if data_dir is not None:
-            doc["data_dir"] = os.path.relpath(data_dir, self.path)
-        doc.update(meta or {})
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
-            json.dump(doc, f)
+            json.dump({"version": version, **meta}, f)
         return _put_if_absent(tmp, os.path.join(self.log_dir, f"{version:08d}.json"))
 
+    def _commit_loop(
+        self,
+        build: Callable[[int | None, str], dict | None],
+        max_retries: int,
+        *,
+        batch_dir: str | None = None,
+    ) -> int:
+        """The optimistic commit every write goes through. An attempt
+        reads the head version (None for an empty table), calls
+        ``build(head, out)`` to write the next snapshot against it — into
+        ``out``, a fresh data directory, if it writes data at all — and
+        get its manifest, then publishes that manifest put-if-absent. On
+        a lost race ``out`` is an orphan: it is removed and the next
+        attempt rebuilds against the new head. ``build`` returning None
+        commits nothing and returns the head. ``batch_dir`` is data
+        written once before the loop and reused by every attempt; it is
+        removed when the operation fails. Returns the committed version.
+        """
+        for _ in range(max_retries):
+            head = self.current_version()
+            version = 0 if head is None else head + 1
+            out = os.path.join(self.path, f"data/v{version:08d}-{uuid.uuid4().hex[:8]}")
+            try:
+                meta = build(head, out)
+            except BaseException:
+                for d in (out, batch_dir):
+                    if d is not None:
+                        shutil.rmtree(d, ignore_errors=True)
+                raise
+            if meta is None:
+                return head
+            if self._commit(version, meta):
+                return version
+            shutil.rmtree(out, ignore_errors=True)
+        if batch_dir is not None:
+            shutil.rmtree(batch_dir, ignore_errors=True)
+        raise ConcurrentCommitError(f"lost the commit race {max_retries}x on {self.path}")
+
+    def _land(self, df: DataFrame, out: str) -> dict:
+        """Write ``df`` as the snapshot directory ``out``; returns the
+        manifest entries listing it."""
+        df.write.mode("overwrite").parquet(out)
+        return {
+            "files": _collect_file_stats(out, self.stats_cols, rel_root=self.path),
+            "schema": df.schema.json(),
+        }
+
     # -- data -----------------------------------------------------------
-
-    def data_dir(self, version: int) -> str:
-        return os.path.join(self.path, self._manifest(version)["data_dir"])
-
-    def _file_paths(self, manifest: dict) -> list[str] | None:
-        """Absolute paths of the snapshot's parquet files, or None for a
-        directory-scan manifest (no file list recorded)."""
-        files = manifest.get("files")
-        if files is None:
-            return None
-        return [os.path.join(self.path, f["path"]) for f in files]
 
     def read(
         self,
@@ -311,32 +369,19 @@ class TxLogTable:
         if v is None:
             return None
         manifest = self._manifest(v)
-        paths = self._file_paths(manifest)
-        if paths is None:  # legacy directory-scan manifest
-            paths = [self.data_dir(v)]
+        files = manifest["files"]
         if where is not None:
-            col, lo, hi = where
-            files = manifest.get("files")
-            if files is not None:
-                paths = [
-                    os.path.join(self.path, f["path"])
-                    for f in files
-                    if (rng := (f.get("stats") or {}).get(col)) is None
-                    or not (rng[1] < lo or rng[0] > hi)
-                ]
-        if not paths:
+            files = [f for f in files if _may_match(f, where)]
+        # The manifest schema is authoritative: files predating a schema
+        # evolution read their missing columns as null.
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        if not files:
             # Empty snapshot (or every file pruned): an empty frame with
             # the schema the manifest recorded at commit time.
-            schema = StructType.fromJson(json.loads(manifest["schema"]))
             return arrow_local_df(spark, [], schema)
-        reader = spark.read
-        if "schema" in manifest:
-            # The manifest schema is authoritative: files predating a
-            # schema evolution read their missing columns as null.
-            reader = reader.schema(
-                StructType.fromJson(json.loads(manifest["schema"]))
-            )
-        df = reader.parquet(*paths)
+        df = spark.read.schema(schema).parquet(
+            *(os.path.join(self.path, f["path"]) for f in files)
+        )
         if where is not None:
             col, lo, hi = where
             df = df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
@@ -375,13 +420,7 @@ class TxLogTable:
         added: list[str] = []
         prev: set[str] | None = None
         for v in range(since_version, to_v + 1):
-            files = self._manifest(v).get("files")
-            if files is None:
-                raise ValueError(
-                    f"version {v} has no file-list manifest; "
-                    "changes across it cannot be computed"
-                )
-            cur = {f["path"] for f in files}
+            cur = {f["path"] for f in self._manifest(v)["files"]}
             if prev is not None:
                 if prev - cur:  # files removed: rewrite commit
                     if on_rewrite == "snapshot":
@@ -406,32 +445,14 @@ class TxLogTable:
         v = self.current_version() if version is None else version
         if v is None:
             return 0
-        files = self._manifest(v).get("files") or []
-        if where is None or not files:
-            return len(files)
-        col, lo, hi = where
-        n = 0
-        for f in files:
-            rng = (f.get("stats") or {}).get(col)
-            if rng is None or not (rng[1] < lo or rng[0] > hi):
-                n += 1
-        return n
+        files = self._manifest(v)["files"]
+        return sum(where is None or _may_match(f, where) for f in files)
 
     def overwrite(self, df: DataFrame, *, max_retries: int = 5) -> int:
         """Commit ``df`` as a full replacement snapshot; returns the
         committed version."""
         self._check_constraints(df)
-        for _ in range(max_retries):
-            v = self.current_version()
-            next_v = 0 if v is None else v + 1
-            data_dir = os.path.join(
-                self.path, f"data/v{next_v:08d}-{uuid.uuid4().hex[:8]}"
-            )
-            df.write.mode("overwrite").parquet(data_dir)
-            if self._commit(next_v, data_dir, meta=self._files_meta(df, data_dir)):
-                return next_v
-            shutil.rmtree(data_dir, ignore_errors=True)  # lost race: orphan
-        raise ConcurrentCommitError(f"lost the commit race {max_retries}x on {self.path}")
+        return self._commit_loop(lambda _head, out: self._land(df, out), max_retries)
 
     def append(
         self, df: DataFrame, *, merge_schema: bool = False, max_retries: int = 5
@@ -453,41 +474,19 @@ class TxLogTable:
         refused: parquet files with conflicting physical types can't
         share one scan schema — that's a rewrite, not an append."""
         self._check_constraints(df)
-        data_dir = os.path.join(self.path, f"data/a-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(data_dir)
-        batch_files = _collect_file_stats(data_dir, self.stats_cols, rel_root=self.path)
-        for _ in range(max_retries):
-            v = self.current_version()
-            if v is None:
-                prior = []
-                schema_json = df.schema.json()
-            else:
-                m = self._manifest(v)
-                prior = m.get("files")
-                if prior is None:  # legacy head without a file list:
-                    # appending would silently drop it — refuse.
-                    shutil.rmtree(data_dir, ignore_errors=True)
-                    raise ValueError(
-                        "append requires a file-list manifest at the head; "
-                        "re-commit the table with overwrite() first"
-                    )
-                try:
-                    schema_json = _evolve_schema(
-                        m.get("schema"), df, merge_schema=merge_schema
-                    )
-                except ValueError:
-                    shutil.rmtree(data_dir, ignore_errors=True)
-                    raise
-            next_v = 0 if v is None else v + 1
-            meta = {
-                "files": prior + batch_files,
-                "schema": schema_json,
+        batch_dir = os.path.join(self.path, f"data/a-{uuid.uuid4().hex[:8]}")
+        df.write.mode("overwrite").parquet(batch_dir)
+        batch_files = _collect_file_stats(batch_dir, self.stats_cols, rel_root=self.path)
+
+        def build(head, _out):
+            m = {"files": [], "schema": None} if head is None else self._manifest(head)
+            return {
+                "files": m["files"] + batch_files,
+                "schema": _evolve_schema(m["schema"], df, merge_schema=merge_schema),
                 "append": True,
             }
-            if self._commit(next_v, None, meta=meta):
-                return next_v
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise ConcurrentCommitError(f"lost the commit race {max_retries}x on {self.path}")
+
+        return self._commit_loop(build, max_retries, batch_dir=batch_dir)
 
     def overwrite_partitions(
         self, df: DataFrame, partition_cols: Sequence[str], *, max_retries: int = 5
@@ -521,54 +520,36 @@ class TxLogTable:
         staged = df
         for c in cols:
             staged = staged.withColumn(_PART_PREFIX + c, F.col(c))
-        data_dir = os.path.join(self.path, f"data/p-{uuid.uuid4().hex[:8]}")
+        batch_dir = os.path.join(self.path, f"data/p-{uuid.uuid4().hex[:8]}")
         staged.write.partitionBy(*(_PART_PREFIX + c for c in cols)).mode(
             "overwrite"
-        ).parquet(data_dir)
-        new_files = _collect_file_stats(data_dir, self.stats_cols, rel_root=self.path)
+        ).parquet(batch_dir)
+        new_files = _collect_file_stats(batch_dir, self.stats_cols, rel_root=self.path)
         touched = {
             tuple(f["partition"][c] for c in cols)
             for f in new_files
             if "partition" in f
         }
-        for _ in range(max_retries):
-            v = self.current_version()
+
+        def build(head, _out):
             keep: list[dict] = []
-            if v is not None:
-                prior = self._manifest(v).get("files")
-                if prior is None:
-                    shutil.rmtree(data_dir, ignore_errors=True)
+            for f in [] if head is None else self._manifest(head)["files"]:
+                part = f.get("partition")
+                if part is None or any(c not in part for c in cols):
                     raise ValueError(
-                        "overwrite_partitions requires a file-list manifest "
-                        "at the head; re-commit with overwrite() first"
+                        f"head file {f['path']} has no partition values "
+                        f"for {cols}; cannot replace partitions safely"
                     )
-                for f in prior:
-                    part = f.get("partition")
-                    if part is None or any(c not in part for c in cols):
-                        shutil.rmtree(data_dir, ignore_errors=True)
-                        raise ValueError(
-                            f"head file {f['path']} has no partition values "
-                            f"for {cols}; cannot replace partitions safely"
-                        )
-                    if tuple(part[c] for c in cols) not in touched:
-                        keep.append(f)
-            next_v = 0 if v is None else v + 1
-            meta = {
+                if tuple(part[c] for c in cols) not in touched:
+                    keep.append(f)
+            return {
                 "files": keep + new_files,
                 "schema": df.schema.json(),
                 "partitioned_by": cols,
                 "replaced_partitions": sorted(touched),
             }
-            if self._commit(next_v, None, meta=meta):
-                return next_v
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise ConcurrentCommitError(f"lost the commit race {max_retries}x on {self.path}")
 
-    def _files_meta(self, df: DataFrame, data_dir: str) -> dict:
-        return {
-            "files": _collect_file_stats(data_dir, self.stats_cols, rel_root=self.path),
-            "schema": df.schema.json(),
-        }
+        return self._commit_loop(build, max_retries, batch_dir=batch_dir)
 
     def merge(
         self,
@@ -576,34 +557,22 @@ class TxLogTable:
         stage: DataFrame,
         keys: Sequence[str],
         *,
-        broadcast_stage: bool = True,
         max_retries: int = 5,
     ) -> int:
-        """Serializable MERGE (delete-then-insert by key): recomputes
-        the upsert against the CURRENT snapshot on every attempt, so a
+        """Serializable MERGE (delete-then-insert by key): writes
+        ``operators/merge.merge_plan`` — the plan the rename-swap path
+        writes — against the CURRENT snapshot on every attempt, so a
         lost commit race never produces last-write-wins anomalies.
         Returns the committed version."""
-        from ..operators.merge import upsert
+        from ..operators.merge import merge_plan
 
         self._check_constraints(stage)
-        for _ in range(max_retries):
-            v = self.current_version()
-            target = self.read(spark, version=v)
-            merged = (
-                stage
-                if target is None
-                else upsert(target, stage, keys, broadcast_stage=broadcast_stage)
-            )
-            next_v = 0 if v is None else v + 1
-            data_dir = os.path.join(
-                self.path, f"data/v{next_v:08d}-{uuid.uuid4().hex[:8]}"
-            )
-            merged.write.mode("overwrite").parquet(data_dir)
-            meta = {"merge_keys": list(keys), **self._files_meta(merged, data_dir)}
-            if self._commit(next_v, data_dir, meta=meta):
-                return next_v
-            shutil.rmtree(data_dir, ignore_errors=True)
-        raise ConcurrentCommitError(f"lost the commit race {max_retries}x on {self.path}")
+
+        def build(head, out):
+            merged = merge_plan(stage, self.read(spark, version=head), keys)
+            return {"merge_keys": list(keys), **self._land(merged, out)}
+
+        return self._commit_loop(build, max_retries)
 
     def delete(
         self,
@@ -631,50 +600,24 @@ class TxLogTable:
         from pyspark.sql.types import StructType
 
         col, lo, hi = where
-        for _ in range(max_retries):
-            v = self.current_version()
-            if v is None:
-                raise ValueError(f"nothing to delete from at {self.path}")
-            m = self._manifest(v)
-            files = m.get("files")
-            if files is None:
-                raise ValueError(
-                    "delete requires a file-list manifest at the head; "
-                    "re-commit the table with overwrite() first"
-                )
-            carried, touched = [], []
-            for f in files:
-                rng = (f.get("stats") or {}).get(col)
-                if rng is not None and (rng[1] < lo or rng[0] > hi):
-                    carried.append(f)
-                else:
-                    touched.append(f)
+
+        def build(head, out):
+            m = self._manifest(self._require(head, "delete from"))
+            touched = [f for f in m["files"] if _may_match(f, where)]
             if not touched:
-                return v  # pruning proved a no-op: nothing to commit
-            schema = StructType.fromJson(json.loads(m["schema"]))
+                return None  # pruning proved a no-op: nothing to commit
+            carried = [f for f in m["files"] if not _may_match(f, where)]
             kept = (
-                spark.read.schema(schema)
-                .parquet(
-                    *(os.path.join(self.path, f["path"]) for f in touched)
-                )
+                spark.read.schema(StructType.fromJson(json.loads(m["schema"])))
+                .parquet(*(os.path.join(self.path, f["path"]) for f in touched))
                 .where(
-                    ~(
-                        (F.col(col) >= F.lit(lo))
-                        & (F.col(col) <= F.lit(hi))
-                    )
+                    ~((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
                     | F.col(col).isNull()
                 )
             )
-            next_v = v + 1
-            data_dir = os.path.join(
-                self.path, f"data/v{next_v:08d}-{uuid.uuid4().hex[:8]}"
-            )
-            kept.write.mode("overwrite").parquet(data_dir)
-            new_files = _collect_file_stats(
-                data_dir, self.stats_cols, rel_root=self.path
-            )
-            meta = {
-                "files": carried + new_files,
+            landed = self._land(kept, out)
+            return {
+                "files": carried + landed["files"],
                 "schema": m["schema"],
                 "delete": {
                     "where": [col, lo, hi],
@@ -682,12 +625,13 @@ class TxLogTable:
                     "files_carried": len(carried),
                 },
             }
-            if self._commit(next_v, None, meta=meta):
-                return next_v
-            shutil.rmtree(data_dir, ignore_errors=True)
-        raise ConcurrentCommitError(
-            f"lost the commit race {max_retries}x on {self.path}"
-        )
+
+        return self._commit_loop(build, max_retries)
+
+    def _require(self, head: int | None, what: str) -> int:
+        if head is None:
+            raise ValueError(f"nothing to {what} at {self.path}")
+        return head
 
     # -- maintenance ----------------------------------------------------
 
@@ -704,21 +648,12 @@ class TxLogTable:
         pre-compaction files once retention passes. Counts as a rewrite
         for ``read_changes`` (no rows changed, but file identity did —
         consumers mid-range restate from the snapshot)."""
-        for _ in range(max_retries):
-            v = self.current_version()
-            if v is None:
-                raise ValueError(f"nothing to compact at {self.path}")
-            snapshot = self.read(spark, version=v).coalesce(target_files)
-            next_v = v + 1
-            data_dir = os.path.join(
-                self.path, f"data/v{next_v:08d}-{uuid.uuid4().hex[:8]}"
-            )
-            snapshot.write.mode("overwrite").parquet(data_dir)
-            meta = {"compaction": True, **self._files_meta(snapshot, data_dir)}
-            if self._commit(next_v, data_dir, meta=meta):
-                return next_v
-            shutil.rmtree(data_dir, ignore_errors=True)
-        raise ConcurrentCommitError(f"lost the commit race {max_retries}x on {self.path}")
+
+        def build(head, out):
+            snapshot = self.read(spark, version=self._require(head, "compact"))
+            return {"compaction": True, **self._land(snapshot.coalesce(target_files), out)}
+
+        return self._commit_loop(build, max_retries)
 
     def optimize_zorder(
         self,
@@ -742,11 +677,8 @@ class TxLogTable:
         ``vacuum``. Returns the committed version."""
         from .writers import zorder_value
 
-        for _ in range(max_retries):
-            v = self.current_version()
-            if v is None:
-                raise ValueError(f"nothing to optimize at {self.path}")
-            snapshot = self.read(spark, version=v)
+        def build(head, out):
+            snapshot = self.read(spark, version=self._require(head, "optimize"))
             scaled, z = zorder_value(snapshot, cluster_cols, bits=bits)
             clustered = (
                 scaled.withColumn("__zorder", z)
@@ -754,21 +686,9 @@ class TxLogTable:
                 .sortWithinPartitions("__zorder")
                 .drop("__zorder", *[f"__z_{c}" for c in cluster_cols])
             )
-            next_v = v + 1
-            data_dir = os.path.join(
-                self.path, f"data/v{next_v:08d}-{uuid.uuid4().hex[:8]}"
-            )
-            clustered.write.mode("overwrite").parquet(data_dir)
-            meta = {
-                "zorder_by": list(cluster_cols),
-                **self._files_meta(clustered, data_dir),
-            }
-            if self._commit(next_v, data_dir, meta=meta):
-                return next_v
-            shutil.rmtree(data_dir, ignore_errors=True)
-        raise ConcurrentCommitError(
-            f"lost the commit race {max_retries}x on {self.path}"
-        )
+            return {"zorder_by": list(cluster_cols), **self._land(clustered, out)}
+
+        return self._commit_loop(build, max_retries)
 
     def vacuum(self, *, keep_versions: int = 2) -> list[str]:
         """Delete data FILES not referenced by the newest
@@ -781,24 +701,16 @@ class TxLogTable:
         keep_versions = max(1, keep_versions)  # never unlink the head
         vs = self.versions()
         keep_files: set[str] = set()
-        keep_dirs: set[str] = set()
         for v in vs[-keep_versions:]:
-            m = self._manifest(v)
-            files = m.get("files")
-            if files is not None:
-                keep_files.update(
-                    os.path.abspath(os.path.join(self.path, f["path"])) for f in files
-                )
-            if "data_dir" in m:  # legacy directory-scan manifests
-                keep_dirs.add(os.path.abspath(os.path.join(self.path, m["data_dir"])))
+            keep_files.update(
+                os.path.abspath(os.path.join(self.path, f["path"]))
+                for f in self._manifest(v)["files"]
+            )
         removed = []
         data_root = os.path.join(self.path, "data")
         if os.path.isdir(data_root):
             live_dirs: set[str] = set()  # contain kept content (subtree)
             for dirpath, dirs, files in os.walk(data_root, topdown=False):
-                if os.path.abspath(dirpath) in keep_dirs:
-                    live_dirs.add(os.path.abspath(dirpath))
-                    continue
                 kept_here = any(
                     os.path.abspath(os.path.join(dirpath, fn)) in keep_files
                     for fn in files

@@ -108,17 +108,16 @@ def compact_parquet(
     overhead, tiny row groups defeating column-stat pruning). Compact
     rewrites the table into ~``target_file_mb`` files via the same
     write-temp-then-swap used by the MERGE (operators/merge.py), so
-    readers never observe a partial table. Returns the output file
-    count. Run it on a cadence, not per-batch — it rewrites the table.
+    readers never observe a partial table, and the same recovery on
+    entry, so a compaction interrupted mid-swap converges when rerun.
+    Returns the output file count. Run it on a cadence, not per-batch —
+    it rewrites the table.
     """
-    from ..operators.merge import _swap
+    from ..operators.merge import _fs, _hpath, _recover_swap, _swap
 
+    _recover_swap(spark, path)
     df = spark.read.parquet(path)
-    jsc = spark._jsc
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    size = fs.getContentSummary(hpath).getLength()
+    size = _fs(spark, path).getContentSummary(_hpath(spark, path)).getLength()
     n_files = max(1, int(size // (target_file_mb * 1024 * 1024)) + 1)
     tmp = path.rstrip("/") + "__tmp_compact"
     writer = df.repartition(n_files).write.mode("overwrite")

@@ -26,7 +26,8 @@ Scale notes:
   of replay history would accumulate in the state store.
 - ``foreachBatch`` may re-execute a batch after failure; the MERGE by
   key makes re-execution converge (the at-least-once → effectively-
-  exactly-once contract the reference gets from D1+A7).
+  exactly-once contract the reference gets from D1+A7), also when the
+  failure fell inside the sink's rename swap (``merge_batch_sink``).
 """
 
 from __future__ import annotations
@@ -116,12 +117,15 @@ def merge_batch_sink(
     within-batch duplicates are collapsed first so the merge key is
     unique.
 
-    ``acid=True`` commits through the transaction-log table
-    (sources/txlog.py): concurrent readers keep their snapshot while
-    micro-batches land, and a crash mid-batch leaves the previous
-    version intact — streaming maintenance of a serving table without
-    a read outage. The vanilla path stays the default (one fewer
-    indirection when nothing reads the target mid-stream)."""
+    Both commit paths write the same plan (``operators/merge.merge_plan``).
+    The default rename swap (``merge_into_path``) recovers an interrupted
+    swap on entry, so a query that dies mid-swap and restarts replays the
+    batch onto the intact table. ``acid=True`` commits through the
+    transaction-log table (sources/txlog.py) instead: concurrent readers
+    also keep their snapshot while micro-batches land — streaming
+    maintenance of a serving table without a read outage. The swap stays
+    the default (one fewer indirection when nothing reads the target
+    mid-stream)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = dedup_exact(batch_df, keys)
