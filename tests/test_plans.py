@@ -132,7 +132,7 @@ def test_sorted_write_enables_row_group_skipping(spark, sf_dir, tmp_path):
     from wistia_etl_pipeline_spark.session import load_table
     from wistia_etl_pipeline_spark.sources.writers import write_sorted_parquet
 
-    events = load_table(spark, sf_dir, "events", raw=True).select("ts", "value")
+    events = load_table(spark, sf_dir, "events").select("ts", "value")
     sorted_path = str(tmp_path / "sorted")
     unsorted_path = str(tmp_path / "unsorted")
     # tiny block size → several row groups even at test scale
@@ -210,7 +210,7 @@ def test_zorder_write_tightens_both_columns(spark, sf_dir, tmp_path):
         write_zorder_parquet,
     )
 
-    events = load_table(spark, sf_dir, "events", raw=True).select("ts", "value")
+    events = load_table(spark, sf_dir, "events").select("ts", "value")
     zpath, spath = str(tmp_path / "z"), str(tmp_path / "s")
     opts = {"parquet.block.size": str(32 * 1024)}
     write_zorder_parquet(events, zpath, cluster_cols=["ts", "value"],

@@ -771,6 +771,28 @@ def test_stage_time_ordered_contract(spark, tmp_path):
     assert total == kept
 
 
+def test_stream_state_partitions_unknown_size_floors(spark, tmp_path):
+    """A source without statistics reports Spark's
+    ``defaultSizeInBytes`` placeholder (Long.MaxValue): its size is
+    unknown, so the width floors at the static default instead of
+    clamping to 2048 — alone or next to a sized source."""
+    from wistia_etl_pipeline_spark import session as S
+
+    stats_less = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1,), (2,)]), "a int"
+    )
+    size = stats_less._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(size) >= (1 << 63) - 1  # the placeholder, not a size
+
+    src = str(tmp_path / "src")
+    spark.range(1000).write.parquet(src)
+    assert S.stream_state_partitions(spark, stats_less) == S.STREAM_SHUFFLE_PARTITIONS
+    assert (
+        S.stream_state_partitions(spark, [src, stats_less])
+        == S.STREAM_SHUFFLE_PARTITIONS
+    )
+
+
 def test_stream_state_partitions_derivation(spark, tmp_path):
     """r13: the streaming state width derives from staged source bytes
     — floors at the static default for MB-scale inputs (bench SFs are

@@ -194,35 +194,17 @@ def watermark_incremental_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5/F3 — the incremental watermark predicate (bronze.py:173-178)
     as a pushed-down scan filter.
 
-    The predicate is applied to the RAW storage column so it reaches
+    The predicate sits straight on the storage column, so it reaches
     the parquet reader (PushedFilters → row-group stats elision);
     filtering a converted column would hide it behind the conversion
     expression and scan everything. At 100 TB this is the difference
-    between reading one day and reading years. The raw domain is
-    whatever the files store — epoch-nanos BIGINT in older testdata
-    generations, micros TIMESTAMP_NTZ in the current one — so the
-    predicate literal is built in that same domain.
+    between reading one day and reading years. ``load_table``'s
+    declared schema reads ``ts`` as session-UTC TimestampType with no
+    conversion, so the literal is built in that domain.
     """
-    import datetime as _dt
-
-    raw = load_table(spark, sf_dir, "events", raw=True)
-    cutoff = _dt.datetime(2024, 1, 15, tzinfo=_dt.timezone.utc)
-    ts_type = dict(raw.dtypes)["ts"]
-    if ts_type == "bigint":  # legacy nanos generation
-        cutoff_nanos = int(cutoff.timestamp()) * 1_000_000_000
-        return raw.filter(F.col("ts") > F.lit(cutoff_nanos)).select(
-            "event_id", F.expr("ts div 1000").alias("received_us")
-        )
-    if ts_type == "timestamp_ntz":  # conf rejected → NTZ-domain literal
-        ntz_cutoff = F.to_timestamp_ntz(F.lit("2024-01-15 00:00:00"))
-        return raw.filter(F.col("ts") > ntz_cutoff).select(
-            "event_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("received_us"),
-        )
-    # inferTimestampNTZ=false: the scan yields LTZ directly — the filter
-    # and projection sit straight on the storage column (full pushdown)
-    ltz_cutoff = F.to_timestamp(F.lit("2024-01-15 00:00:00"))
-    return raw.filter(F.col("ts") > ltz_cutoff).select(
+    events = load_table(spark, sf_dir, "events")
+    cutoff = F.to_timestamp(F.lit("2024-01-15 00:00:00"))
+    return events.filter(F.col("ts") > cutoff).select(
         "event_id", F.unix_micros("ts").alias("received_us")
     )
 

@@ -12,6 +12,13 @@ Reference DDL parity (docstrings cite reference file:line):
 - ``DIM_MEDIA_SCHEMA``    ← wistia_redshift_schemas.py:28-38
 - ``MEDIA_DAILY_AGG_SCHEMA`` ← wistia_redshift_schemas.py:43-52
 - ``WATERMARK_SCHEMA``    ← bronze watermark doc, wistia_pull_wistia_api.py:48-77
+
+``TEST_TABLE_SCHEMAS`` declares the ten seed-42 test tables (TESTDATA.md)
+that ``session.load_table`` reads. Reading them by inference would cost
+every query build a footer-reading Spark job; ``tests/test_schemas.py``
+pins each declaration to the schema Spark infers from every test-data
+directory, so a regenerated table fails there instead of reading a
+renamed column as nulls.
 """
 
 from __future__ import annotations
@@ -142,3 +149,88 @@ WATERMARK_SCHEMA = T.StructType(
         T.StructField("last_received_at", T.StringType()),
     ]
 )
+
+
+# --------------------------------------------------------------------------
+# Test tables (TESTDATA.md) — read by ``session.load_table``.
+# --------------------------------------------------------------------------
+
+
+def _table(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype) for name, dtype in cols])
+
+
+#: The ten test tables, keyed by table name. Timestamps are micros
+#: without a timezone annotation in the files; they read as session-UTC
+#: TimestampType (see ``spark.sql.parquet.inferTimestampNTZ.enabled`` in
+#: ``session.RUNTIME_CONFS``).
+TEST_TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "region": _table(("r_regionkey", T.IntegerType()), ("r_name", T.StringType())),
+    "nation": _table(
+        ("n_nationkey", T.IntegerType()),
+        ("n_name", T.StringType()),
+        ("n_regionkey", T.IntegerType()),
+    ),
+    "customer": _table(
+        ("c_custkey", T.LongType()),
+        ("c_name", T.StringType()),
+        ("c_nationkey", T.IntegerType()),
+        ("c_acctbal", T.DoubleType()),
+        ("c_mktsegment", T.StringType()),
+    ),
+    "supplier": _table(
+        ("s_suppkey", T.LongType()),
+        ("s_name", T.StringType()),
+        ("s_nationkey", T.IntegerType()),
+        ("s_acctbal", T.DoubleType()),
+    ),
+    "part": _table(
+        ("p_partkey", T.LongType()),
+        ("p_name", T.StringType()),
+        ("p_brand", T.StringType()),
+        ("p_type", T.StringType()),
+        ("p_size", T.IntegerType()),
+        ("p_retailprice", T.DoubleType()),
+    ),
+    "orders": _table(
+        ("o_orderkey", T.LongType()),
+        ("o_custkey", T.LongType()),
+        ("o_orderstatus", T.StringType()),
+        ("o_totalprice", T.DoubleType()),
+        ("o_orderdate", T.TimestampType()),
+        ("o_orderpriority", T.StringType()),
+    ),
+    "lineitem": _table(
+        ("l_orderkey", T.LongType()),
+        ("l_partkey", T.LongType()),
+        ("l_suppkey", T.LongType()),
+        ("l_linenumber", T.IntegerType()),
+        ("l_quantity", T.DoubleType()),
+        ("l_extendedprice", T.DoubleType()),
+        ("l_discount", T.DoubleType()),
+        ("l_tax", T.DoubleType()),
+        ("l_returnflag", T.StringType()),
+        ("l_linestatus", T.StringType()),
+        ("l_shipdate", T.TimestampType()),
+    ),
+    "events": _table(
+        ("event_id", T.LongType()),
+        ("ts", T.TimestampType()),
+        ("user_id", T.LongType()),
+        ("event_type", T.StringType()),
+        ("value", T.DoubleType()),
+        ("props", T.StringType()),
+    ),
+    "documents": _table(
+        ("doc_id", T.LongType()),
+        ("text", T.StringType()),
+        ("lang", T.StringType()),
+        ("source", T.StringType()),
+        ("n_chars", T.LongType()),
+    ),
+    "embeddings": _table(
+        ("vec_id", T.LongType()),
+        ("embedding", T.ArrayType(T.FloatType())),
+        ("label", T.IntegerType()),
+    ),
+}

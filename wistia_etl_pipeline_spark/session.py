@@ -12,28 +12,47 @@ instead make the scale-relevant settings explicit so the same code runs on
   UTC-normalized; we make that a hard invariant (SURVEY.md §7.4).
 - **Arrow enabled** — all Python-side exchange (pandas UDFs, toPandas) is
   columnar/batched, never row-at-a-time pickling.
+- **Codegen cache of 2000 classes** (``spark.sql.codegen.cache.maxEntries``,
+  a static conf, so only ``get_spark`` can set it; sizing at
+  ``CODEGEN_CACHE_MAX_ENTRIES``) — Spark's default LRU of 100 generated
+  classes is smaller than one round of the benchmark's small queries, so
+  every warm round recompiled; with 2000 a steady-state round compiles
+  none.
+- **Declared test-table schemas** — ``load_table`` reads with
+  ``schemas.TEST_TABLE_SCHEMAS`` instead of inferring, so building a
+  query runs no footer-reading Spark job.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
+from .schemas import TEST_TABLE_SCHEMAS
+
 #: Runtime-settable SQL confs applied to *any* session handed to the engine
-#: (driver-owned sessions included). Static confs (memory, master) are
-#: deliberately excluded — those belong to the cluster manager.
+#: (driver-owned sessions included). Static confs (memory, master, the
+#: codegen cache size) are deliberately excluded — those belong to the
+#: session builder (``get_spark``) or the cluster manager. Keeping them
+#: out is what keeps ``apply_runtime_confs`` from failing: ``conf.set``
+#: raises for a static conf on every running session.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
-    # The driver's testdata parquet stores TIMESTAMP(NANOS) which Spark's
-    # vectorized reader rejects; read as long and convert (see load_table).
+    # Parquet written by other tools as TIMESTAMP(NANOS) (pandas/pyarrow
+    # output handed to ``jobs`` as input) is rejected by Spark's reader;
+    # this reads such columns as epoch-nanos longs instead. The test
+    # tables are micros: a nanos one fails at ``load_table``'s scan,
+    # where the declared schema says TimestampType.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Current testdata stores TIMESTAMP(MICROS) with no timezone
-    # annotation, which Spark 4 infers as TIMESTAMP_NTZ by default. Read
+    # The test tables store TIMESTAMP(MICROS) with no timezone
+    # annotation, which Spark 4 infers as TIMESTAMP_NTZ by default. Infer
     # it as session-local TimestampType instead (UTC session ⇒ identical
-    # epoch values): timestamp predicates then push down to the parquet
-    # scan directly — a cast-to-LTZ projection would hide every ts
-    # filter from row-group pruning (the P3/P5 scale story).
+    # epoch values), the type ``schemas.TEST_TABLE_SCHEMAS`` declares,
+    # so a plain ``spark.read.parquet`` of a test table agrees with
+    # ``load_table``. Timestamp predicates push down to the scan: no
+    # cast projection hides them from row-group pruning.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -70,12 +89,18 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     AQE) does not depend on who built the SparkSession. Also ships the
     engine package to executor Python workers (pandas-UDF / mapInPandas
     stages deserialize functions by module reference).
+
+    Raises ``RuntimeError`` naming every key the session refused, after
+    setting the rest: a refused invariant would change results or cost.
     """
+    refused = []
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            pass  # non-settable on this build/runtime — keep going
+        except PySparkException as exc:
+            refused.append(f"{key} ({exc.getCondition() or type(exc).__name__})")
+    if refused:
+        raise RuntimeError("session refused runtime confs: " + ", ".join(refused))
     _ship_package(spark)
     return spark
 
@@ -138,13 +163,20 @@ def stream_state_partitions(spark: SparkSession, source=None) -> int:
     if source is None:
         return STREAM_SHUFFLE_PARTITIONS
     paths = source if isinstance(source, (list, tuple)) else [source]
+    unknown = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
     size = 0
     for p in paths:
         df = spark.read.parquet(p) if isinstance(p, str) else p
         # leaf-relation plan statistics = total file bytes (listing
         # already cached by the schema read every call site does); no
         # job, no scan
-        size += int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        part = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        if part >= unknown:
+            # a source without statistics (an RDD, a Python data source)
+            # reports the ``defaultSizeInBytes`` placeholder: its size is
+            # unknown, not huge
+            return STREAM_SHUFFLE_PARTITIONS
+        size += part
     derived = -(-size // STREAM_STATE_BYTES_PER_PARTITION)  # ceil
     return max(
         STREAM_SHUFFLE_PARTITIONS, min(_STREAM_STATE_MAX_PARTITIONS, derived)
@@ -211,6 +243,17 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # best-effort; plain-JVM queries don't need it
 
 
+#: Entries in Spark's generated-class cache (static conf
+#: ``spark.sql.codegen.cache.maxEntries``, default 100), sized from
+#: measured class counts: one round of the benchmark's eight small
+#: queries compiles 116 distinct classes and the first medallion op 24,
+#: so the default LRU evicted within a round and every round recompiled
+#: 37-63 classes. 2000 holds either workload many times over. It does not
+#: hold the whole registry: one pass over all registered queries
+#: compiles 4317 distinct classes (sf0.001).
+CODEGEN_CACHE_MAX_ENTRIES = 2000
+
+
 def get_spark(
     app_name: str = "wistia-etl-pipeline-spark",
     shuffle_partitions: int | None = None,
@@ -231,6 +274,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # catalog tables (bucketed-join tests) land in a scratch dir,
         # not the repo cwd
         .config(
@@ -244,19 +288,6 @@ def get_spark(
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     return apply_runtime_confs(builder.getOrCreate())
-
-
-#: Testdata timestamp columns. Earlier driver generations stored parquet
-#: TIMESTAMP(NANOS) (surfacing as epoch-nanos longs under ``nanosAsLong``);
-#: the current generation stores TIMESTAMP(MICROS) without a timezone
-#: annotation, which Spark 4 reads as TIMESTAMP_NTZ. ``load_table``
-#: normalizes BOTH to session-local TimestampType (UTC session ⇒ the
-#: epoch value is preserved, matching DuckDB's naive micros TIMESTAMP).
-_NANOS_TIMESTAMP_COLS: dict[str, tuple[str, ...]] = {
-    "events": ("ts",),
-    "lineitem": ("l_shipdate",),
-    "orders": ("o_orderdate",),
-}
 
 
 def arrow_local_df(spark: SparkSession, rows: list[dict], schema):
@@ -314,37 +345,22 @@ def arrow_local_df(spark: SparkSession, rows: list[dict], schema):
     )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str, *, raw: bool = False):
-    """Read one driver-generated parquet table (TESTDATA.md).
+def load_table(spark: SparkSession, sf_dir: str, name: str):
+    """Read one test table (TESTDATA.md) with its declared schema.
 
-    A thin projection restores nanos-timestamp columns; everything else
-    stays a plain columnar scan, so Catalyst still pushes filters and
-    prunes columns at the parquet reader.
-
-    ``raw=True`` skips the timestamp conversion: predicates against a
-    CONVERTED column cannot reach the parquet scan (the conversion
-    expression hides the column from pushdown — only IsNotNull
-    survives). Scan-selective queries should filter the raw epoch-nanos
-    long first, then convert; see ``watermark_incremental_filter`` for
-    the pattern. The general scale lesson: keep pushable predicates in
-    the storage column's domain.
+    The schema comes from ``schemas.TEST_TABLE_SCHEMAS``, so the read
+    plans without a Spark job (inference reads a file footer in one) and
+    stays a plain columnar scan: Catalyst pushes filters and prunes
+    columns at the parquet reader, timestamp predicates included. A name
+    with no declared schema raises ``ValueError``; there is no inference
+    fallback.
     """
-    from pyspark.sql import functions as F
-
+    if name not in TEST_TABLE_SCHEMAS:
+        raise ValueError(
+            f"no declared schema for test table {name!r}; "
+            "add it to schemas.TEST_TABLE_SCHEMAS"
+        )
     apply_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if raw:
-        return df
-    dtypes = dict(df.dtypes)
-    for col in _NANOS_TIMESTAMP_COLS.get(name, ()):
-        if col in df.columns and dtypes[col] == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    # Safety net only: with ``inferTimestampNTZ.enabled=false`` (see
-    # RUNTIME_CONFS) untagged micros columns already surface as LTZ and
-    # this loop is a no-op. If a session rejects that conf, normalize
-    # NTZ → session-UTC TimestampType here (value-preserving, but the
-    # cast hides ts predicates from pushdown — prefer the conf).
-    for col, dt in dtypes.items():
-        if dt == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
-    return df
+    return spark.read.schema(TEST_TABLE_SCHEMAS[name]).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
