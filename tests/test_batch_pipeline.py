@@ -1,16 +1,24 @@
 """EP1→EP3 end-to-end: incremental runs with skip/full-pull/resume,
-idempotent silver/gold, event-time partition layout, P3 pruning."""
+idempotent silver/gold, event-time partition layout, and the per-run
+work P3 allows: silver from the pulled batch, dim only on a full pull,
+no schema-inference job."""
 
 from __future__ import annotations
 
 import json
+import uuid
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
+from wistia_etl_pipeline_spark import pipeline as pipeline_mod
 from wistia_etl_pipeline_spark.incremental.watermark import JsonStateStore
 from wistia_etl_pipeline_spark.pipeline import BatchPipeline, WistiaApi
+from wistia_etl_pipeline_spark.schemas import (
+    DIM_MEDIA_SCHEMA,
+    FACT_EVENTS_SCHEMA,
+    MEDIA_DAILY_AGG_SCHEMA,
+)
 from wistia_etl_pipeline_spark.sources.rest_source import PullConfig
 
 
@@ -146,26 +154,6 @@ def test_page_cap_checkpoints_and_resumes(spark, tmp_path):
     assert s3["m1"]["action"] == "full_pull"
 
 
-def test_silver_scan_prunes_partitions(spark, tmp_path):
-    """P3 — the media_id filter must land in PartitionFilters, not as a
-    post-scan predicate (silver.py:24-26's manual path-building, done
-    right)."""
-    fake = FakeWistia()
-    pipe = _mk(spark, tmp_path, fake)
-    pipe.run_once(["m1", "m2"])
-
-    from wistia_etl_pipeline_spark.pipeline import _bronze_read_schema
-
-    scan = (
-        spark.read.schema(_bronze_read_schema())
-        .json(str(tmp_path / "bronze"))
-        .filter(F.col("media_id").isin(["m1"]))
-    )
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    partition_filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "media_id" in partition_filters
-
-
 def test_stats_feed_ingestion(spark, tmp_path):
     """The optional second paginated feed (stats pages) lands in the
     bronze stats path, partitioned by media."""
@@ -251,6 +239,33 @@ def test_bronze_write_failure_advances_nothing(spark, tmp_path):
     assert {v["action"] for v in s3.values()} == {"skip"}
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"run-once-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _tables(spark, root) -> dict:
+    return {
+        t: Counter(map(tuple, spark.read.parquet(str(root / t)).collect()))
+        for t in ("silver", "dim", "gold")
+    }
+
+
+def _run_until_skip(pipe, media_ids):
+    for _ in range(3):
+        if {v["action"] for v in pipe.run_once(media_ids).values()} == {"skip"}:
+            return
+    pytest.fail("runs did not converge to skip")
+
+
 def test_crash_inside_silver_swap_converges_on_rerun(spark, tmp_path, crash_swap):
     """A run that dies after any filesystem step of the silver MERGE's
     rename swap, followed by runs until every media skips, ends with the
@@ -270,19 +285,118 @@ def test_crash_inside_silver_swap_converges_on_rerun(spark, tmp_path, crash_swap
             else:
                 with pytest.raises(RuntimeError, match="injected crash"):
                     pipe.run_once(["m1", "m2"])
-        for _ in range(3):
-            if {v["action"] for v in pipe.run_once(["m1", "m2"]).values()} == {"skip"}:
-                break
-        else:
-            pytest.fail("runs did not converge to skip")
-        tables = {
-            t: Counter(map(tuple, spark.read.parquet(str(root / t)).collect()))
-            for t in ("silver", "dim", "gold")
-        }
-        return tables, steps["done"]
+        _run_until_skip(pipe, ["m1", "m2"])
+        return _tables(spark, root), steps["done"]
 
     want, n_steps = scenario(tmp_path / "ref", None)
     assert n_steps == 3
     for step in range(1, n_steps + 1):
         got, _ = scenario(tmp_path / f"crash{step}", step)
         assert got == want, f"crash after silver swap step {step}"
+
+
+def test_run_once_job_counts(spark, tmp_path):
+    """One RESUME run and one FULL_PULL run against existing tables,
+    pinned by Spark job count: bronze is not re-scanned for silver, no
+    table read infers its schema, and the RESUME run does not merge
+    dim."""
+    fake = FakeWistia()
+    pipe = _mk(spark, tmp_path, fake, max_pages=1)
+    pipe.run_once(["m1", "m2"])
+    resume = _jobs(spark, lambda: pipe.run_once(["m1", "m2"]))
+    assert pipe.state_store.read()["m1"].next_page is None
+    fake.meta["m2"]["updated"] = "2024-01-03T00:00:00Z"
+    full = _jobs(spark, lambda: pipe.run_once(["m1", "m2"]))
+    assert pipe.state_store.read()["m2"].updated == "2024-01-03T00:00:00Z"
+    assert (resume, full) == (12, 15)
+
+
+def test_resume_leaves_dim_untouched(spark, tmp_path):
+    fake = FakeWistia()
+    pipe = _mk(spark, tmp_path, fake, max_pages=1)
+    pipe.run_once(["m1"])
+    dim = tmp_path / "dim"
+    before = {p.name: p.stat().st_mtime_ns for p in dim.iterdir()}
+    assert pipe.run_once(["m1"])["m1"]["action"] == "resume"
+    assert {p.name: p.stat().st_mtime_ns for p in dim.iterdir()} == before
+    assert spark.read.parquet(str(tmp_path / "silver")).count() == 3
+
+
+def test_resume_without_dim_table_seeds_it(spark, tmp_path):
+    """A control document carried over with an open checkpoint (the
+    reference's shape) resumes into empty tables: with no dim table to
+    keep, the RESUME's metadata seeds it, so gold still joins a
+    duration."""
+    (tmp_path / "wm.json").write_text(json.dumps({"m1": {
+        "updated": "2024-01-02T00:00:00Z",
+        "events_checkpoint": {"next_page": 1, "last_received_at": None},
+    }}))
+    pipe = _mk(spark, tmp_path, FakeWistia())
+    assert pipe.run_once(["m1"])["m1"]["action"] == "resume"
+    dim = spark.read.parquet(str(tmp_path / "dim")).collect()
+    assert [(r.media_id, r.duration_seconds) for r in dim] == [("m1", 7200.0)]
+    gold = spark.read.parquet(str(tmp_path / "gold")).where("dt = '2024-01-01'")
+    assert abs(gold.collect()[0].hours_watched - 1.0) < 1e-9  # pv 0.0+0.5 ⋅ 2h
+
+
+def test_silver_merge_failure_converges_on_rerun(spark, tmp_path, monkeypatch):
+    """A run whose silver MERGE raises after its bronze batch landed,
+    followed by runs until every media skips, ends with the silver, dim
+    and gold of a run that never failed: no watermark moved, so the
+    rerun re-pulls the same pages (here a RESUME next to a FULL_PULL)."""
+    real = pipeline_mod.merge_into_path
+
+    def scenario(root, fail_silver_merge):
+        fake = FakeWistia()
+        pipe = _mk(spark, root, fake, max_pages=1)
+        pipe.gold_exact = True  # bit-identical gold across the two runs
+        pipe.run_once(["m1", "m2"])
+        fake.meta["m2"]["updated"] = "2024-01-03T00:00:00Z"
+        fake.events["m2"].append(_event("m2e2", "2024-01-02T15:00:00Z", 1.0, "v9", "m2"))
+        calls = {"silver": 0}
+
+        def merge(spark_, stage, path, keys):
+            if path == pipe.silver_path:
+                calls["silver"] += 1
+                if fail_silver_merge and calls["silver"] == 1:
+                    raise OSError("injected silver MERGE failure")
+            return real(spark_, stage, path, keys)
+
+        with monkeypatch.context() as m:
+            m.setattr(pipeline_mod, "merge_into_path", merge)
+            if fail_silver_merge:
+                with pytest.raises(OSError, match="injected"):
+                    pipe.run_once(["m1", "m2"])
+                assert (root / "bronze" / "media_id=m2").exists()
+        _run_until_skip(pipe, ["m1", "m2"])
+        return _tables(spark, root)
+
+    assert scenario(tmp_path / "failed", True) == scenario(tmp_path / "ref", False)
+
+
+def test_row_naming_another_media_reaches_silver_and_gold(spark, tmp_path):
+    """A row in m1's feed that names m3 is staged with the batch, so it
+    lands in silver and gold re-rolls m3 too, although m3 was not
+    pulled."""
+    fake = FakeWistia()
+    fake.events["m1"].append(_event("m3e1", "2024-01-03T10:00:00Z", 1.0, "v7", "m3"))
+    pipe = _mk(spark, tmp_path, fake)
+    pipe.run_once(["m1"])
+    silver = spark.read.parquet(str(tmp_path / "silver"))
+    assert [r.event_key for r in silver.where("media_id = 'm3'").collect()] == ["m3e1"]
+    gold = {(r.media_id, str(r.dt)): r for r in
+            spark.read.parquet(str(tmp_path / "gold")).collect()}
+    assert gold[("m3", "2024-01-03")].load_count == 1
+
+
+def test_declared_schemas_equal_written_tables(spark, tmp_path):
+    """Gold reads silver and dim with the declared schemas, and the
+    MERGEs check names only; pin the declarations to what is written."""
+    pipe = _mk(spark, tmp_path, FakeWistia())
+    pipe.run_once(["m1", "m2"])
+    for table, declared in (
+        ("silver", FACT_EVENTS_SCHEMA),
+        ("dim", DIM_MEDIA_SCHEMA),
+        ("gold", MEDIA_DAILY_AGG_SCHEMA),
+    ):
+        assert spark.read.parquet(str(tmp_path / table)).schema == declared, table

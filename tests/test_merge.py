@@ -58,6 +58,21 @@ def test_merge_into_path_roundtrip(spark, tmp_path):
     assert _rows(spark.read.parquet(path)) == [("m1", 1), ("m2", 20), ("m3", 3)]
 
 
+@pytest.mark.parametrize("extra", ["target", "stage"])
+def test_merge_into_path_refuses_mismatched_columns(spark, tmp_path, extra):
+    """The target is read with the stage's schema, so a column only one
+    side has must raise: a target-only column would vanish from the
+    rewrite, a stage-only one would fill the old rows with nulls."""
+    path = str(tmp_path / "t")
+    narrow = spark.createDataFrame([("m1", 1)], "media_id string, v long")
+    wide = spark.createDataFrame([("m1", 2, "x")], "media_id string, v long, w string")
+    merge_into_path(spark, wide if extra == "target" else narrow, path, ["media_id"])
+    stage = narrow if extra == "target" else wide
+    with pytest.raises(ValueError, match=r"\['w'\]"):
+        merge_into_path(spark, stage, path, ["media_id"])
+    assert len(spark.read.parquet(path).columns) == (3 if extra == "target" else 2)
+
+
 def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     from wistia_etl_pipeline_spark.sources.writers import compact_parquet
 

@@ -11,8 +11,9 @@ import os
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
-from wistia_etl_pipeline_spark.schemas import TEST_TABLE_SCHEMAS
+from wistia_etl_pipeline_spark.schemas import TEST_TABLE_SCHEMAS, as_nullable
 from wistia_etl_pipeline_spark.session import load_table
 
 _PERFBENCH_DATA = os.path.join(
@@ -58,3 +59,20 @@ def test_load_table_runs_no_spark_job(spark, sf_dir):
 def test_load_table_refuses_undeclared_name(spark, sf_dir):
     with pytest.raises(ValueError, match="no declared schema"):
         load_table(spark, sf_dir, "partsupp")
+
+
+def test_as_nullable_is_the_schema_parquet_reads_back(spark, tmp_path):
+    """A frame's schema through ``as_nullable`` equals the one Spark
+    infers from the Parquet the frame wrote, nested fields included, so
+    a file stream can take it instead of an inference job."""
+    df = spark.range(3).select(
+        F.col("id"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("s"),
+        F.array(F.col("id")).alias("arr"),
+        F.create_map(F.lit("k"), F.struct(F.col("id").alias("c"))).alias("m"),
+        F.current_timestamp().alias("ts"),
+    )
+    assert not df.schema["s"].nullable  # the writer's schema is not nullable
+    path = str(tmp_path / "t")
+    df.write.parquet(path)
+    assert as_nullable(df.schema) == spark.read.parquet(path).schema

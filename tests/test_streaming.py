@@ -839,12 +839,7 @@ def test_stream_state_partitions_derivation(spark, tmp_path):
     # the env override wins over any derivation
     os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "77"
     try:
-        # module-level default is read at import time; the override
-        # path returns it via the env short-circuit
-        assert (
-            S.stream_state_partitions(spark, src)
-            == S.STREAM_SHUFFLE_PARTITIONS
-        )
+        assert S.stream_state_partitions(spark, src) == 77
     finally:
         del os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
 
@@ -853,6 +848,17 @@ def test_stream_state_partitions_derivation(spark, tmp_path):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(
             S.STREAM_SHUFFLE_PARTITIONS
         )
+
+
+def test_stream_shuffle_override_is_read_at_call_time(spark, monkeypatch):
+    """SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS set after the session module
+    was imported still sizes the next scoped stream."""
+    import wistia_etl_pipeline_spark.session as S
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "5")
+    assert S.stream_state_partitions(spark, None) == 5
+    with S.scoped_shuffle_partitions(spark, source=spark.range(10)):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
 
 
 def test_merge_sink_crash_inside_swap_converges_after_restart(spark, tmp_path, crash_swap):

@@ -10,6 +10,9 @@ python -m pytest tests/ -q
 echo "== benchmark self-tests (run_once, merge_upsert_by_key, __tmp_merge attribution) =="
 python -m pytest perfbench -q
 
+echo "== oracle sweep (sf0.001) =="
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} python tools/check_correctness.py /root/testdata/sf0.001
+
 echo "== oracle sweep (sf0.01) =="
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} python tools/check_correctness.py /root/testdata/sf0.01
 

@@ -39,9 +39,10 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 
 def upsert(target: DataFrame, stage: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -91,12 +92,61 @@ def merge_into_path(
     near-atomic on posix/HDFS, best-effort on object stores (use
     Delta/Iceberg for true ACID; this is the vanilla-Parquet fallback,
     SURVEY.md §7.4).
+
+    The target is read with the stage's schema (:func:`_read_target`),
+    so the MERGE runs no schema-inference job; a target whose columns
+    are not exactly the stage's raises ``ValueError`` instead of
+    dropping a target-only column or reading a stage-only one as nulls.
     """
-    _recover_swap(spark, path)
-    target = spark.read.parquet(path) if _exists(spark, path) else None
+    target = _read_target(spark, path, stage.schema)
     tmp = path.rstrip("/") + "__tmp_merge"
     merge_plan(stage, target, keys).write.mode("overwrite").parquet(tmp)
     _swap(spark, tmp, path)
+
+
+def _read_target(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> DataFrame | None:
+    """The MERGE target at ``path`` read with ``schema``, or None when
+    there is no table (no data file once :func:`_recover_swap` ran).
+
+    A declared schema plans the scan without the footer-reading Spark
+    job inference costs. It would also read a column the table lacks as
+    nulls and skip one the schema lacks, so the column names in the
+    footer of one data file, read on the driver, must equal the
+    schema's (data files: Spark's rule, no ``_`` or ``.`` prefix)."""
+    _recover_swap(spark, path)
+    data = _fs(spark, path).globStatus(_hpath(spark, path.rstrip("/") + "/[!_.]*"))
+    if not data:
+        return None
+    have, want = _footer_columns(spark, data[0]), [f.name for f in schema.fields]
+    if sorted(have) != sorted(want):
+        raise ValueError(
+            f"{path}: table columns {sorted(set(have) - set(want))} are not "
+            f"in the stage and stage columns {sorted(set(want) - set(have))} "
+            f"are not in the table"
+        )
+    return spark.read.schema(schema).parquet(path)
+
+
+def _footer_columns(spark: SparkSession, status) -> list[str]:
+    """Top-level column names in the footer of the Parquet file behind
+    the Hadoop ``status``, read on the driver (no Spark job): the schema
+    Spark stored there, else Parquet's own field names."""
+    jvm = spark._jvm
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            status, spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        meta = reader.getFooter().getFileMetaData()
+    finally:
+        reader.close()
+    stored = meta.getKeyValueMetaData().get("org.apache.spark.sql.parquet.row.metadata")
+    if stored is None:
+        return [f.getName() for f in meta.getSchema().getFields()]
+    return [f["name"] for f in json.loads(stored)["fields"]]
 
 
 def _hpath(spark: SparkSession, path: str):

@@ -11,11 +11,17 @@ Differences from the reference, by design:
   reads reference-style page files for migration.
 - Silver/gold are parquet paths maintained by in-engine MERGE (A7) —
   no JDBC hop, no stored procedures, no stage tables.
-- Each silver/gold pass prunes to the partitions touched this run
-  (P3): the filter on ``media_id`` reaches the scan as a
-  PartitionFilter, so an incremental run reads only what it ingested —
-  at 100 TB the difference between a bounded delta job and a full
-  table rewrite.
+- Each pass stages only what this run pulled (P3). Silver's stage is
+  the pulled batch itself, deduplicated — the Arrow frame the bronze
+  write consumed, never a re-scan of bronze history. Gold re-rolls the
+  pulled media plus any other ``media_id`` a staged row names. Dim
+  merges only FULL_PULL metadata: ``decide`` resumes only while
+  ``updated`` has not moved since the FULL_PULL whose dim MERGE
+  committed before its watermark did (the rule SKIP relies on too).
+  Every table is read with its declared schema; each MERGE checks its
+  target's column names in one data-file footer on the driver, so no
+  pass pays a schema-inference job and a column only one side has
+  raises.
 - The watermark state machine (ST1-ST3) decides skip/resume/full-pull
   per media and is folded + persisted at the end; every stage is
   idempotent by key, so a crashed/replayed run converges.
@@ -40,9 +46,14 @@ from .incremental.watermark import (
 )
 from .operators.dedup import dedup_exact
 from .operators.flatten import conform_dim_media, flatten_events
-from .operators.merge import merge_into_path
+from .operators.merge import _exists, merge_into_path
 from .operators.rollup import media_daily_agg
-from .schemas import RAW_EVENT_SCHEMA, RAW_METADATA_SCHEMA
+from .schemas import (
+    DIM_MEDIA_SCHEMA,
+    FACT_EVENTS_SCHEMA,
+    RAW_EVENT_SCHEMA,
+    RAW_METADATA_SCHEMA,
+)
 from .session import arrow_local_df
 from .sources.rest_source import PullConfig, Transport, fetch_pages
 
@@ -93,8 +104,8 @@ class BatchPipeline:
         """
         states = self.state_store.read()
         summary: dict[str, dict] = {}
-        pulled: list[tuple[str, dict]] = []  # (media_id, metadata)
-        staged: list[tuple[str, list[dict]]] = []  # rows awaiting bronze
+        pulled: list[tuple[str, dict, str]] = []  # (media_id, metadata, action)
+        staged: list[dict] = []  # rows awaiting bronze, then silver
         staged_stats: list[tuple[str, object]] = []  # stats feeds, ditto
         folds: list[tuple] = []  # checkpoint folds deferred past the write
 
@@ -128,13 +139,18 @@ class BatchPipeline:
                     )
                     staged_stats.append((media_id, stats))
                     summary[media_id]["stats_pages"] = len(stats.pages)
-                rows = [r for _page, page_rows in result.pages for r in page_rows]
+                # rows missing media_id inherit the id of the feed they
+                # came from; the Hive media_id=…/dt=… layout follows it
+                rows = [
+                    r if r.get("media_id") is not None else {**r, "media_id": media_id}
+                    for _page, page_rows in result.pages
+                    for r in page_rows
+                ]
                 max_received = max(
                     (r.get("received_at") for r in rows if r.get("received_at")),
                     default=None,
                 )
-                if rows:
-                    staged.append((media_id, rows))
+                staged.extend(rows)
                 folds.append(
                     (media_id, state, remote_updated, action, result,
                      max_received)
@@ -142,7 +158,7 @@ class BatchPipeline:
                 summary[media_id].update(
                     events=len(rows), completed=result.completed
                 )
-                pulled.append((media_id, meta))
+                pulled.append((media_id, meta, action))
             except Exception as exc:  # ST6 — isolate per media, keep going
                 summary[media_id] = {"action": "error", "error": repr(exc)}
 
@@ -155,10 +171,11 @@ class BatchPipeline:
         # mid-loop crash). Fetch/parse errors stay isolated per media
         # above; a write failure is an infra failure of the shared
         # stage, so it errors every pulled media at once.
+        batch = None
         if staged or staged_stats:
             try:
                 if staged:
-                    self._write_bronze_batch(staged)
+                    batch = self._write_bronze_batch(staged)
                 # stats land only after bronze: a bronze failure leaves
                 # no stats rows behind, and the per-media OVERWRITE in
                 # _write_stats_batch makes the re-pull's re-write
@@ -166,7 +183,7 @@ class BatchPipeline:
                 if staged_stats:
                     self._write_stats_batch(staged_stats)
             except Exception as exc:
-                for media_id, _ in pulled:
+                for media_id, _meta, _action in pulled:
                     summary[media_id] = {"action": "error", "error": repr(exc)}
                 self.state_store.write(states)
                 return summary
@@ -181,31 +198,22 @@ class BatchPipeline:
             )
 
         if pulled:
-            self._silver_and_gold([m for m, _ in pulled], [meta for _, meta in pulled])
+            self._silver_and_gold(batch, staged, pulled)
         self.state_store.write(states)
         return summary
 
     # -- stages ----------------------------------------------------------
 
-    def _write_bronze_batch(self, batches: list[tuple[str, list[dict]]]) -> None:
+    def _write_bronze_batch(self, rows: list[dict]) -> DataFrame:
         """S4 — partitioned JSON-lines bronze, event-time dt grain.
+        Returns the frame it wrote, which silver stages from.
 
         One write job for the whole run's pull: rows cross the Python→
         JVM boundary as ONE Arrow table (``pa.Table.from_pylist`` over
         the explicit schema) instead of per-row pickled tuples — at the
         flagship's sf0.1 grain that is 40k rows/cycle through Arrow
         instead of 10 pickle round-trips, and 1 write job instead of 5.
-        Rows missing ``media_id`` inherit the id of the feed they came
-        from; the Hive ``media_id=…/dt=…`` layout is unchanged.
         """
-        rows: list[dict] = []
-        for media_id, rs in batches:
-            for r in rs:
-                if r.get("media_id") is None:
-                    r = {**r, "media_id": media_id}
-                rows.append(r)
-        if not rows:
-            return
         df = arrow_local_df(self.spark, rows, RAW_EVENT_SCHEMA)
         # Explicit width (REPARTITION_BY_NUM): a bare repartition(cols)
         # is AQE-coalescible and this model-sized delta coalesces to ONE
@@ -222,6 +230,7 @@ class BatchPipeline:
             .partitionBy("media_id", "dt")
             .json(self.bronze_path)
         )
+        return df
 
     def _write_stats_batch(self, batches: list[tuple[str, object]]) -> None:
         """Bronze stats feed (S4 second file kind, ``stats_page=N``
@@ -261,53 +270,59 @@ class BatchPipeline:
             .json(self.bronze_path.rstrip("/") + "_stats")
         )
 
-    def _silver_and_gold(self, media_ids: list[str], metas: list[dict]) -> None:
+    def _silver_and_gold(
+        self,
+        batch: DataFrame | None,
+        rows: list[dict],
+        pulled: list[tuple[str, dict, str]],
+    ) -> None:
         spark = self.spark
-        # S1 scan of bronze, pruned to the media pulled this run (P3:
-        # the isin filter lands in PartitionFilters — see test_pipeline
-        # plan assertion)
-        bronze = (
-            spark.read.schema(_bronze_read_schema())
-            .json(self.bronze_path)
-            .filter(F.col("media_id").isin(media_ids))
-        )
-        silver_delta = dedup_exact(flatten_events(bronze), ["event_key"])
-        merge_into_path(spark, silver_delta, self.silver_path, ["event_key"])
+        # S1 — silver stages the batch this run pulled (P3), never the
+        # bronze history: a replay re-pulls the same pages, because the
+        # watermark persists only after this pass succeeds
+        if batch is not None:
+            silver_delta = dedup_exact(flatten_events(batch), ["event_key"])
+            merge_into_path(spark, silver_delta, self.silver_path, ["event_key"])
 
-        # dim_media from the metadata fetched this run (P2 + A7 on
-        # media_id). Arrow-built: a pickle-parallelized metadata frame
-        # costs a Python-worker round-trip per core per downstream job
-        # (see session.arrow_local_df).
-        names = [f.name for f in RAW_METADATA_SCHEMA.fields]
-        meta_df = arrow_local_df(
-            spark,
-            [dict(zip(names, _meta_tuple(m))) for m in metas],
-            RAW_METADATA_SCHEMA,
-        )
-        dim_delta = conform_dim_media(meta_df)
-        merge_into_path(spark, dim_delta, self.dim_path, ["media_id"])
+        # dim_media from the metadata of this run's FULL_PULLs (P2 + A7 on
+        # media_id): a RESUME means ``updated`` has not moved since the
+        # FULL_PULL whose dim MERGE committed before its watermark. A
+        # missing table (state carried over from another store) takes
+        # every pulled media. Arrow-built: a pickle-parallelized
+        # metadata frame costs a Python-worker round-trip per core per
+        # downstream job (see session.arrow_local_df).
+        seed_dim = not _exists(spark, self.dim_path)
+        metas = [
+            meta for _media, meta, action in pulled
+            if seed_dim or action == FULL_PULL
+        ]
+        if metas:
+            names = [f.name for f in RAW_METADATA_SCHEMA.fields]
+            meta_df = arrow_local_df(
+                spark,
+                [dict(zip(names, _meta_tuple(m))) for m in metas],
+                RAW_METADATA_SCHEMA,
+            )
+            dim_delta = conform_dim_media(meta_df)
+            merge_into_path(spark, dim_delta, self.dim_path, ["media_id"])
 
-        # gold rollup over the touched media only (EP3, A1-A6), merged
-        # on the composite key (media_id, dt)
-        silver = spark.read.parquet(self.silver_path).filter(
-            F.col("media_id").isin(media_ids)
+        # gold rollup (EP3, A1-A6) over the pulled media plus any other
+        # media a staged row names, merged on the composite key
+        # (media_id, dt). Silver and dim are read with their declared
+        # schemas, no inference job: every MERGE into them checks the
+        # table's columns against its stage, and the stages produce
+        # these schemas (tests/test_batch_pipeline pins both).
+        if batch is None and not _exists(spark, self.silver_path):
+            return  # nothing staged yet: nothing to roll up
+        media_ids = sorted(
+            {media for media, _meta, _action in pulled}
+            | {r["media_id"] for r in rows}
         )
-        dim = spark.read.parquet(self.dim_path)
+        silver = spark.read.schema(FACT_EVENTS_SCHEMA).parquet(self.silver_path)
+        silver = silver.filter(F.col("media_id").isin(media_ids))
+        dim = spark.read.schema(DIM_MEDIA_SCHEMA).parquet(self.dim_path)
         gold_delta = media_daily_agg(silver, dim, exact=self.gold_exact)
         merge_into_path(spark, gold_delta, self.gold_path, ["media_id", "dt"])
-
-
-def _bronze_read_schema():
-    """RAW_EVENT_SCHEMA minus the partition columns Spark re-derives
-    from the directory layout (media_id comes back as a partition
-    column; keeping it in the file schema would shadow it)."""
-    from pyspark.sql import types as T
-
-    keep = [
-        f for f in RAW_EVENT_SCHEMA.fields
-        if f.name not in ("media_id", "_corrupt_record")
-    ]
-    return T.StructType(keep)
 
 
 def _meta_tuple(meta: dict) -> tuple:

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import dedup_exact, dedup_latest_wins
 from ..operators.rollup import daily_rollup
+from ..schemas import as_nullable
 from ..session import (
     apply_runtime_confs,
     arrow_local_df,
@@ -251,7 +252,7 @@ def streaming_gold_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(root, "src")
     events = load_table(spark, sf_dir, "events")
     events.repartition(8).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = as_nullable(events.schema)
 
     stream = (
         spark.readStream.schema(schema)
@@ -279,7 +280,9 @@ def streaming_gold_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state partitions to state volume (session.scoped_shuffle_partitions;
     # the r9 statestore_join_state_audit lesson). Values are partition-
     # count independent; only the store/commit bill changes.
-    with scoped_shuffle_partitions(spark, source=src):
+    with scoped_shuffle_partitions(
+        spark, source=spark.read.schema(schema).parquet(src)
+    ):
         q = (
             agg.writeStream.outputMode("update")
             .foreachBatch(_merge_batch)
@@ -923,7 +926,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.staging import stage_time_ordered
 
     stage_time_ordered(staged, "ts", src, cuts)
-    schema = spark.read.parquet(src).schema
+    schema = as_nullable(staged.schema)
 
     stream = (
         spark.readStream.schema(schema)
@@ -949,7 +952,9 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Session-merge state is per-user and watermark-bounded — state
     # partitions sized to state volume, not compute width (the shared
     # streaming-family rule; see session.scoped_shuffle_partitions).
-    with scoped_shuffle_partitions(spark, source=src):
+    with scoped_shuffle_partitions(
+        spark, source=spark.read.schema(schema).parquet(src)
+    ):
         q = (
             sessions.writeStream.format("parquet")
             .option("path", out)
@@ -1635,7 +1640,7 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.staging import stage_time_ordered
 
     stage_time_ordered(events.unionByName(events), "ts", src, cuts)
-    schema = spark.read.parquet(src).schema
+    schema = as_nullable(events.schema)
 
     stream = (
         spark.readStream.schema(schema)
@@ -1647,7 +1652,9 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Dedup state holds only in-window keys — state partitions sized to
     # state volume (session.scoped_shuffle_partitions, shared rule).
-    with scoped_shuffle_partitions(spark, source=src):
+    with scoped_shuffle_partitions(
+        spark, source=spark.read.schema(schema).parquet(src)
+    ):
         q = (
             deduped.writeStream.format("parquet")
             .option("path", out)

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import dedup_exact, dedup_latest_wins
 from ..operators.rollup import daily_rollup
+from ..schemas import as_nullable
 from ..session import (
     apply_runtime_confs,
     arrow_local_df,
@@ -929,14 +930,16 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v_path = stage_time_ordered(views, "vts", os.path.join(root, "views"), cuts)
     p_path = stage_time_ordered(purch, "pts", os.path.join(root, "purchases"), cuts)
+    v_src = spark.read.schema(as_nullable(views.schema)).parquet(v_path)
+    p_src = spark.read.schema(as_nullable(purch.schema)).parquet(p_path)
     v_stream = (
-        spark.readStream.schema(spark.read.parquet(v_path).schema)
+        spark.readStream.schema(v_src.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(v_path)
         .withWatermark("vts", "30 minutes")
     )
     p_stream = (
-        spark.readStream.schema(spark.read.parquet(p_path).schema)
+        spark.readStream.schema(p_src.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(p_path)
         .withWatermark("pts", "30 minutes")
@@ -955,7 +958,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sized to the 90-minute state horizon, not compute width (the r9
     # statestore_join_state_audit measurement, via the shared
     # session.scoped_shuffle_partitions rule).
-    with scoped_shuffle_partitions(spark, source=[v_path, p_path]):
+    with scoped_shuffle_partitions(spark, source=[v_src, p_src]):
         q = (
             joined.writeStream.format("parquet")
             .option("path", out)

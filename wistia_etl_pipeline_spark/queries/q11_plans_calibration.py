@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import dedup_exact, dedup_latest_wins
 from ..operators.rollup import daily_rollup
+from ..schemas import as_nullable
 from ..session import (
     apply_runtime_confs,
     arrow_local_df,
@@ -2834,7 +2835,7 @@ def streaming_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cuts = ["2024-01-08", "2024-01-15", "2024-01-22", "2100-01-01"]
     stage_time_ordered(events, "ts", src, cuts)
-    schema = spark.read.parquet(src).schema
+    schema = as_nullable(events.schema)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -2848,7 +2849,9 @@ def streaming_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stateless epochs through a Python sink — per-trigger task count
     # scoped to the micro-batch's size, not compute width
     # (session.scoped_shuffle_partitions, shared streaming-family rule).
-    with scoped_shuffle_partitions(spark, source=src):
+    with scoped_shuffle_partitions(
+        spark, source=spark.read.schema(schema).parquet(src)
+    ):
         q = (
             stream.writeStream.format("staged_json")
             .option("path", out)

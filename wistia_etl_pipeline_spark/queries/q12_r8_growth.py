@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..schemas import as_nullable
 from ..session import (
     apply_runtime_confs,
     arrow_local_df,
@@ -1142,8 +1143,9 @@ def streaming_hll_sketch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
     )
-    events.select("user_id").repartition(8).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    staged = events.select("user_id")
+    staged.repartition(8).write.parquet(src)
+    schema = as_nullable(staged.schema)
 
     def regs_of(df: DataFrame) -> DataFrame:
         h = F.conv(
@@ -1182,7 +1184,9 @@ def streaming_hll_sketch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stateless stream; each foreachBatch fold shuffles to <= 64
     # register rows — scoped to state volume, not compute width
     # (session.scoped_shuffle_partitions, shared streaming-family rule).
-    with scoped_shuffle_partitions(spark, source=src):
+    with scoped_shuffle_partitions(
+        spark, source=spark.read.schema(schema).parquet(src)
+    ):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 2)

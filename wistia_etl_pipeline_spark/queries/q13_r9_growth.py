@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..schemas import as_nullable
 from ..session import load_table, scoped_shuffle_partitions
 from ._base import query
 from .q01_core_gold_silver import _dup_corpus
@@ -403,8 +404,9 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(root, "src")
     ckpt = os.path.join(root, "ckpt")
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    ev.select("event_type", "value").repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    staged = ev.select("event_type", "value")
+    staged.repartition(4).write.parquet(src)
+    schema = as_nullable(staged.schema)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "2")
@@ -419,7 +421,9 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compute width (session.scoped_shuffle_partitions — the same rule
     # statestore_join_state_audit below measured and documented); the
     # state source reads numPartitions from checkpoint metadata.
-    with scoped_shuffle_partitions(spark, source=src):
+    with scoped_shuffle_partitions(
+        spark, source=spark.read.schema(schema).parquet(src)
+    ):
         q = (
             stream.writeStream.outputMode("complete")
             .format("noop")
@@ -799,13 +803,13 @@ def statestore_join_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     views.repartition(2).write.parquet(vp)
     purch.repartition(2).write.parquet(pp)
     v_stream = (
-        spark.readStream.schema(spark.read.parquet(vp).schema)
+        spark.readStream.schema(as_nullable(views.schema))
         .option("maxFilesPerTrigger", 1)
         .parquet(vp)
         .withWatermark("vts", "3650 days")
     )
     p_stream = (
-        spark.readStream.schema(spark.read.parquet(pp).schema)
+        spark.readStream.schema(as_nullable(purch.schema))
         .option("maxFilesPerTrigger", 1)
         .parquet(pp)
         .withWatermark("pts", "3650 days")

@@ -59,7 +59,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import load_table, scoped_shuffle_partitions
+from ..schemas import as_nullable
+from ..session import (
+    load_table,
+    scoped_shuffle_partitions,
+    stream_state_partitions,
+)
 from ._base import query
 
 # ---------------------------------------------------------------------------
@@ -265,11 +270,12 @@ def foreachbatch_replay_exactly_once(
     sink = os.path.join(root, "sink")
     ck = os.path.join(root, "ck")
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    ev.select(
+    staged = ev.select(
         "event_type",
         F.expr("CAST(floor(value * 1000000) AS BIGINT)").alias("m"),
-    ).repartition(3).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    )
+    staged.repartition(3).write.parquet(src)
+    schema = as_nullable(staged.schema)
 
     seen: list[int] = []
 
@@ -289,7 +295,9 @@ def foreachbatch_replay_exactly_once(
         # Stateless stream, but each foreachBatch aggregate still
         # shuffles at the session width for ~5 groups — scoped down
         # (session.scoped_shuffle_partitions, shared rule).
-        with scoped_shuffle_partitions(spark, source=src):
+        with scoped_shuffle_partitions(
+            spark, source=spark.read.schema(schema).parquet(src)
+        ):
             q = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", "1")
@@ -543,12 +551,14 @@ def statestore_change_feed_audit(
         micro.where(F.col("event_id") % 4 == i).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = as_nullable(micro.schema)
     # State partitions sized to the ~5-key state, not compute width
     # (session.scoped_shuffle_partitions, shared streaming-family
     # rule); the statestore/changelog readers take numPartitions from
     # checkpoint metadata, so the audit itself is unaffected.
-    with scoped_shuffle_partitions(spark, source=src):
+    with scoped_shuffle_partitions(
+        spark, source=spark.read.schema(schema).parquet(src)
+    ):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -645,8 +655,9 @@ def rocksdb_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(root, "src")
     ckpt = os.path.join(root, "ck")
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    ev.select("event_type", "value").repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    staged = ev.select("event_type", "value")
+    staged.repartition(4).write.parquet(src)
+    schema = as_nullable(staged.schema)
 
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     log_key = (
@@ -666,7 +677,9 @@ def rocksdb_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # trigger — state partitions sized to the 5-key state, not
         # compute width (session.scoped_shuffle_partitions, shared
         # streaming-family rule).
-        with scoped_shuffle_partitions(spark, source=src):
+        with scoped_shuffle_partitions(
+            spark, source=spark.read.schema(schema).parquet(src)
+        ):
             q = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", "2")
@@ -1013,8 +1026,14 @@ def chained_windowed_aggregation(
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     micro = ev.select("event_type", "ts")
     micro.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = as_nullable(micro.schema)
     max_ts = micro.agg(F.max("ts")).collect()[0][0]
+    # TWO stateful operators pay per-partition store maintenance each
+    # trigger for calendar-grain state — state partitions sized to state
+    # volume (session.stream_state_partitions, shared streaming-family
+    # rule). Both runs resume the same checkpoint, so the width is
+    # derived once, before the sentinel lands, and pinned for both.
+    width = stream_state_partitions(spark, spark.read.schema(schema).parquet(src))
 
     def run_once() -> None:
         stream = (
@@ -1032,12 +1051,7 @@ def chained_windowed_aggregation(
             F.max("n").alias("max_daily"),
             F.sum("n").alias("total_events"),
         )
-        # TWO stateful operators pay per-partition store maintenance
-        # each trigger for calendar-grain state — state partitions
-        # sized to state volume (session.scoped_shuffle_partitions,
-        # shared streaming-family rule). Both runs resume the same
-        # checkpoint; the scope pins an identical width for both.
-        with scoped_shuffle_partitions(spark, source=src):
+        with scoped_shuffle_partitions(spark, n=width):
             q = (
                 weekly.select(
                     "event_type",

@@ -151,6 +151,26 @@ WATERMARK_SCHEMA = T.StructType(
 )
 
 
+def as_nullable(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every field, array element and map value nullable:
+    the schema Spark reads a Parquet file back with, whatever the writer
+    declared. A frame just written for a file stream can hand its own
+    schema to ``readStream`` through this, instead of inferring it back
+    from the files in a Spark job."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, as_nullable(f.dataType), True, f.metadata)
+             for f in dtype.fields]
+        )
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(as_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(
+            as_nullable(dtype.keyType), as_nullable(dtype.valueType), True
+        )
+    return dtype
+
+
 # --------------------------------------------------------------------------
 # Test tables (TESTDATA.md) — read by ``session.load_table``.
 # --------------------------------------------------------------------------

@@ -152,14 +152,18 @@ def stream_state_partitions(spark: SparkSession, source=None) -> int:
     bit-identical bench behavior — while a 100 TB backfill derives a
     cluster-scale width instead of serializing on 8 stores. The env
     var stays the operator override for deployments that know their
-    key cardinality (it short-circuits the derivation entirely).
+    key cardinality (it short-circuits the derivation entirely, and is
+    read at each call).
 
     ``source``: a batch DataFrame over the staged input, a parquet
-    path, or a list of paths (stream-stream joins pass both sides).
+    path, or a list of either (stream-stream joins pass both sides).
+    A path costs a schema-inference job; a DataFrame read with the
+    staged frame's schema (``schemas.as_nullable``) costs none.
     ``None`` keeps the static default.
     """
-    if os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"):
-        return STREAM_SHUFFLE_PARTITIONS
+    override = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
+    if override:
+        return int(override)
     if source is None:
         return STREAM_SHUFFLE_PARTITIONS
     paths = source if isinstance(source, (list, tuple)) else [source]
