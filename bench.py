@@ -223,6 +223,27 @@ def _release_cached(spark) -> None:
         pass  # py4j map iteration is an internal API; never break the bench
 
 
+def _payload(spark, timings, cold, sf, n_runs, n_cold) -> dict:
+    """The one-line JSON record. ``cpus`` echoes ``$SPARK_GRAFT_CPUS``;
+    ``effective_parallelism`` and ``master`` are what the session really
+    ran at."""
+    sc = spark.sparkContext
+    return {
+        "metric": "headline_queries_total_wall_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "queries_cold": cold,
+        "value_cold": round(sum(cold.values()), 3),
+        "sf": sf,
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "runs_per_query": n_runs,
+        "cold_runs_per_query": n_cold if cold else 0,
+        "effective_parallelism": sc.defaultParallelism,
+        "master": sc.master,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -261,7 +282,6 @@ def main() -> None:
     timings = {
         name: round(statistics.median(ts), 3) for name, ts in samples.items()
     }
-    total = round(sum(timings.values()), 3)
 
     # Cold-cache companion column (VERDICT r4 #4/#7): extra passes with
     # the cache cleared before EVERY query. The warm medians above stay
@@ -291,20 +311,7 @@ def main() -> None:
             for name, ts in cold_samples.items()
         }
 
-    payload = json.dumps(
-        {
-            "metric": "headline_queries_total_wall_sec",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "queries_cold": cold,
-            "value_cold": round(sum(cold.values()), 3),
-            "sf": sf,
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-            "runs_per_query": n_runs,
-            "cold_runs_per_query": n_cold if cold else 0,
-        }
-    )
+    payload = json.dumps(_payload(spark, timings, cold, sf, n_runs, n_cold))
     # The driver captures stdout-tail only (BENCH_r02 lost its first ~16
     # per-query entries to truncation, VERDICT r2 #7) — persist the full
     # JSON to disk so every round has complete per-query medians.

@@ -8,6 +8,7 @@ import collections
 import numpy as np
 
 from wistia_etl_pipeline_spark import registry
+from wistia_etl_pipeline_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
 GATE_SF = "/root/testdata/sf0.01"
@@ -15,8 +16,8 @@ GATE_SF = "/root/testdata/sf0.01"
 
 def test_bfs_matches_python_bfs(spark):
     got = registry._QUERIES["bfs_customer_supplier_reach"](spark, SF).toPandas()
-    li = registry.load_table(spark, SF, "lineitem")
-    orders = registry.load_table(spark, SF, "orders")
+    li = load_table(spark, SF, "lineitem")
+    orders = load_table(spark, SF, "orders")
     pairs = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_custkey", "l_suppkey")
@@ -26,7 +27,7 @@ def test_bfs_matches_python_bfs(spark):
     )
     seeds = {
         f"C{r.c_custkey}"
-        for r in registry.load_table(spark, SF, "customer")
+        for r in load_table(spark, SF, "customer")
         .where("c_nationkey = 8")
         .collect()
     }
@@ -71,7 +72,7 @@ def test_histogram_quantile_contract(spark):
     assert (err >= 0).all() and (err <= got["bound_millis"]).all()
     # exact column really is the rank statistic (numpy replica)
     ev = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr("event_type", "CAST(floor(value * 1000) AS BIGINT) AS v")
         .toPandas()
     )

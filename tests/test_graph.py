@@ -289,6 +289,22 @@ def test_kcore_random_graph_matches_replica(spark):
     _run_kcore(spark, noisy)
 
 
+def test_kcore_on_a_wide_session_matches_replica(spark):
+    # a session wider than 8 partitions takes the rebalanced-ladder path
+    import random
+
+    rng = random.Random(5)
+    edges = [
+        (a, b) for a in range(30) for b in range(30) if a < b and rng.random() < 0.1
+    ]
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        _run_kcore(spark, edges)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
 def test_kcore_raises_when_bound_too_small(spark):
     # path 0..7 needs 4 peel rounds for k=2 (endpoints inward); with
     # max_rounds=2 the survivors {2,3,4,5} still hold a sub-2-degree
@@ -308,24 +324,33 @@ def test_kcore_raises_when_bound_too_small(spark):
         kcore_peel(df, k=2, max_rounds=0, src="a_id", dst="b_id")
 
 
-def test_kcore_restores_shuffle_partitions_conf(spark):
-    # the frontier-sized ladder mutates spark.sql.shuffle.partitions
-    # under try/finally — both the success and the raise path must
-    # leave the session conf exactly as found.
+def test_kcore_restores_shuffle_partitions_conf(spark, monkeypatch):
+    # the frontier-sized ladder sets its shuffle widths per plan, so the
+    # session conf is left as found because it is never written: any
+    # write to spark.sql.shuffle.partitions — on the success or the
+    # raise path — fails the test
     import pytest
+    from pyspark.sql.conf import RuntimeConfig
 
     from wistia_etl_pipeline_spark.functions.graph import kcore_peel
 
+    real_set = RuntimeConfig.set
+
+    def guarded_set(self, key, value):
+        if key == "spark.sql.shuffle.partitions":
+            raise AssertionError(f"kcore_peel set {key}={value}")
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", guarded_set)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     tri = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2)], "a_id long, b_id long"
     )
     kcore_peel(tri, k=2, src="a_id", dst="b_id").collect()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "a_id long, b_id long"
     )
-    with pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError, match="no fixpoint"):
         kcore_peel(path, k=2, max_rounds=2, src="a_id", dst="b_id")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 

@@ -7,6 +7,7 @@ EXERCISED at test SF (islands merge, bitmaps intersect non-trivially)."""
 from __future__ import annotations
 
 from wistia_etl_pipeline_spark import registry
+from wistia_etl_pipeline_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,7 +20,7 @@ def test_bitmap_matches_exact_distinct(spark):
         .reset_index(drop=True)
     )
     ev = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr("to_date(ts) AS dt", "user_id")
         .where("user_id IS NOT NULL")
         .toPandas()
@@ -41,7 +42,7 @@ def test_bitmap_matches_exact_distinct(spark):
 def test_interval_union_matches_python_sweep(spark):
     got = registry._QUERIES["interval_union_coverage"](spark, SF).toPandas()
     iv = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr(
             "user_id",
             "unix_micros(ts) div 1000000 AS s",

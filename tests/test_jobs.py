@@ -82,3 +82,35 @@ def test_curation_job_writes_split_partitions(spark, sf_dir, tmp_path):
         r.doc_id for r in spark.read.parquet(p).select("doc_id").collect()
     )
     assert ids(out) == ids(out2)
+
+
+def test_curation_job_matches_the_oracle_checked_query(spark, sf_dir, tmp_path):
+    """The job and corpus_curation_e2e run one curation definition: on
+    the query's duplicate-injected corpus the job's per-split document
+    counts and id checksums are the query's rows."""
+    from pyspark.sql import functions as F
+
+    from wistia_etl_pipeline_spark import registry
+    from wistia_etl_pipeline_spark.jobs import main_curation
+    from wistia_etl_pipeline_spark.queries.q04_canaries_curation import (
+        _curation_corpus,
+    )
+    from wistia_etl_pipeline_spark.session import load_table
+
+    corpus = str(tmp_path / "corpus")
+    _curation_corpus(load_table(spark, sf_dir, "documents")).write.parquet(corpus)
+    out = str(tmp_path / "curated")
+    main_curation(["--input", corpus, "--output", out])
+    got = {
+        r["split"]: (r["n"], r["ids"])
+        for r in spark.read.parquet(out)
+        .groupBy("split")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("doc_id").alias("ids"))
+        .collect()
+    }
+    want = {
+        r["split"]: (r["n_docs"], r["id_checksum"])
+        for r in registry._QUERIES["corpus_curation_e2e"](spark, sf_dir).collect()
+    }
+    assert set(want) == {"train", "test"}
+    assert got == want

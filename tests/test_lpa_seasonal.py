@@ -7,6 +7,8 @@ import collections
 
 from wistia_etl_pipeline_spark import registry
 from wistia_etl_pipeline_spark.functions.graph import label_propagation
+from wistia_etl_pipeline_spark.queries.q01_core_gold_silver import _DUP_SHIFT
+from wistia_etl_pipeline_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,18 +51,18 @@ def test_lpa_query_community_structure(spark):
     assert (sizes > 1).any()
     # every injected exact-dup pair (doc, doc+shift) shares a community
     base = got.set_index("node")["community"]
-    orig = got[got["node"] < registry._DUP_SHIFT]["node"]
-    paired = orig[(orig + registry._DUP_SHIFT).isin(base.index)]
+    orig = got[got["node"] < _DUP_SHIFT]["node"]
+    paired = orig[(orig + _DUP_SHIFT).isin(base.index)]
     assert len(paired) > 0
     assert all(
-        base[n] == base[n + registry._DUP_SHIFT] for n in paired
+        base[n] == base[n + _DUP_SHIFT] for n in paired
     )
 
 
 def test_seasonal_backtest_matches_pandas(spark):
     got = registry._QUERIES["seasonal_forecast_backtest"](spark, SF).toPandas()
     ev = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr("event_type", "to_date(ts) AS dt")
         .toPandas()
     )

@@ -4,6 +4,8 @@ window funnel."""
 from __future__ import annotations
 
 from wistia_etl_pipeline_spark import registry
+from wistia_etl_pipeline_spark.queries.q08_timeseries_paths import _FUNNEL_W, _NOVELTY_BATCH
+from wistia_etl_pipeline_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
 GATE_SF = "/root/testdata/sf0.01"
@@ -17,9 +19,9 @@ def test_novelty_matches_python_replica(spark):
         .reset_index(drop=True)
     )
     docs = (
-        registry.load_table(spark, SF, "documents")
+        load_table(spark, SF, "documents")
         .selectExpr(
-            f"doc_id div {registry._NOVELTY_BATCH} AS batch",
+            f"doc_id div {_NOVELTY_BATCH} AS batch",
             "split(trim(text), '\\\\s+') AS t",
         )
         .toPandas()
@@ -46,14 +48,14 @@ def test_novelty_matches_python_replica(spark):
 def test_window_funnel_matches_python_replica(spark):
     got = registry._QUERIES["window_funnel_levels"](spark, SF).toPandas()
     ev = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr(
             "user_id", "event_type", "unix_micros(ts) div 1000000 AS t"
         )
         .where("user_id IS NOT NULL")
         .toPandas()
     )
-    W = registry._FUNNEL_W
+    W = _FUNNEL_W
     for _, r in got.iterrows():
         u = ev[ev["user_id"] == r["user_id"]]
         vs = sorted(u[u["event_type"] == "view"]["t"])

@@ -4,6 +4,7 @@ estimator."""
 from __future__ import annotations
 
 from wistia_etl_pipeline_spark import registry
+from wistia_etl_pipeline_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -11,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 def test_top_paths_matches_pandas(spark):
     got = registry._QUERIES["top_event_paths"](spark, SF).toPandas()
     ev = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr("user_id", "to_date(ts) AS dt", "event_type", "ts",
                     "event_id")
         .where("user_id IS NOT NULL")
@@ -34,7 +35,7 @@ def test_systematic_sample_unbiased_and_bounded(spark):
     assert len(got) == 5
     # estimates are exact-count x10 of the sampled subset (replica)
     ev = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr("event_type", "event_id",
                     "CAST(floor(value * 100) AS BIGINT) AS cents")
         .toPandas()

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from wistia_etl_pipeline_spark import registry
+from wistia_etl_pipeline_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -127,7 +128,7 @@ def test_observe_metrics_match_direct_aggregate(spark):
     from pyspark.sql import functions as F
 
     got = _q(spark, "observe_metrics_audit").collect()[0]
-    ev = registry.load_table(spark, SF, "events")
+    ev = load_table(spark, SF, "events")
     direct = ev.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("user_id").isNull().cast("long")).alias("nn"),

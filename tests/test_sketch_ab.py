@@ -9,6 +9,8 @@ from __future__ import annotations
 import numpy as np
 
 from wistia_etl_pipeline_spark import registry
+from wistia_etl_pipeline_spark.queries.q07_sketches_graph import _KMV_K
+from wistia_etl_pipeline_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -21,7 +23,7 @@ def test_kmv_merge_lemma_and_error_bound(spark):
     assert (got["merge_exact"] == 1).all()
     # estimator sanity: within 4 standard errors (sigma ~ 1/sqrt(k-2))
     rel = (got["union_est"] - got["exact_union"]).abs() / got["exact_union"]
-    assert (rel < 4.0 / np.sqrt(registry._KMV_K - 2)).all(), rel.max()
+    assert (rel < 4.0 / np.sqrt(_KMV_K - 2)).all(), rel.max()
     # tau lesson: jaccard strictly inside (0, 1) for every pair
     assert (got["jaccard_micro"] > 0).all()
     assert (got["jaccard_micro"] < 1_000_000).all()
@@ -90,7 +92,7 @@ def test_ab_chisq_matches_numpy_formula(spark):
 def test_tv_divergence_matches_pandas(spark):
     got = registry._QUERIES["source_tv_divergence"](spark, SF).toPandas()
     docs = (
-        registry.load_table(spark, SF, "documents")
+        load_table(spark, SF, "documents")
         .selectExpr("source", "explode(split(trim(text), '\\\\s+')) AS tok")
         .toPandas()
     )
@@ -115,7 +117,7 @@ def test_tv_zero_for_identical_distribution(spark):
     from pyspark.sql import functions as F
     import tempfile, os
 
-    docs = registry.load_table(spark, SF, "documents").limit(20)
+    docs = load_table(spark, SF, "documents").limit(20)
     one = docs.select(
         "doc_id", "text", F.lit("en").alias("lang"),
         F.lit("only").alias("source"), "n_chars",
@@ -137,7 +139,7 @@ def test_attribution_conserves_credit_exactly(spark):
         spark, SF
     ).toPandas()
     purch = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .where("event_type = 'purchase' AND user_id IS NOT NULL")
         .select(F.floor(F.col("value") * 100).cast("long").alias("cents"))
         .toPandas()
@@ -169,7 +171,7 @@ def test_attribution_weights_replica():
 def test_inverted_index_matches_pandas(spark):
     got = registry._QUERIES["inverted_index_postings"](spark, SF).toPandas()
     docs = (
-        registry.load_table(spark, SF, "documents")
+        load_table(spark, SF, "documents")
         .selectExpr("doc_id", "explode(split(trim(text), '\\\\s+')) AS tok")
         .toPandas()
     )
@@ -186,7 +188,7 @@ def test_inverted_index_matches_pandas(spark):
 def test_item_cooccurrence_matches_pandas(spark):
     got = registry._QUERIES["item_cooccurrence_topk"](spark, SF).toPandas()
     ev = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr(
             "user_id",
             "CAST(get_json_object(props, '$.k') AS BIGINT) AS item",
@@ -242,7 +244,7 @@ def test_mad_matches_numpy_lower_median(spark):
 def test_cohort_triangle_matches_pandas(spark):
     got = registry._QUERIES["user_ltv_cohort"](spark, SF).toPandas()
     ev = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr(
             "user_id", "to_date(ts) AS d", "event_type",
             "CAST(floor(value * 100) AS BIGINT) AS cents",
@@ -303,7 +305,7 @@ def test_churn_hazard_suffix_sum(spark):
 def test_zipf_fit_matches_numpy(spark):
     got = registry._QUERIES["zipf_fit_tokens"](spark, SF).toPandas().iloc[0]
     docs = (
-        registry.load_table(spark, SF, "documents")
+        load_table(spark, SF, "documents")
         .selectExpr("explode(split(trim(text), '\\\\s+')) AS tok")
         .toPandas()
     )

@@ -9,6 +9,7 @@ from __future__ import annotations
 import numpy as np
 
 from wistia_etl_pipeline_spark import registry
+from wistia_etl_pipeline_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -16,7 +17,7 @@ SF = "/root/testdata/sf0.001"
 def test_trend_slope_matches_numpy_polyfit(spark):
     got = registry._QUERIES["user_activity_trend"](spark, SF).toPandas()
     events = (
-        registry.load_table(spark, SF, "events")
+        load_table(spark, SF, "events")
         .selectExpr("user_id", "to_date(ts) AS d")
         .groupBy("user_id", "d")
         .count()

@@ -259,9 +259,11 @@ def main() -> None:
             minhash_near_dup_pairs,
         )
         from wistia_etl_pipeline_spark.functions.graph import pagerank
-        from wistia_etl_pipeline_spark.registry import (
-            _PR_SCALE,
+        from wistia_etl_pipeline_spark.queries.q01_core_gold_silver import (
             _dup_corpus,
+        )
+        from wistia_etl_pipeline_spark.queries.q05_tokens_clustering import (
+            _PR_SCALE,
         )
         from wistia_etl_pipeline_spark.session import load_table
 

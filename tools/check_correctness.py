@@ -5,117 +5,16 @@ DuckDB over the same parquet, then compares row count, column names, and
 an order-insensitive value hash. Use while iterating:
 
     python tools/check_correctness.py [sf_dir] [query ...]
-
-Audit modes (VERDICT r5 #5 — one command whose green output IS the
-driver-verification-debt audit):
-
-    python tools/check_correctness.py --never-checked [sf_dir]
-        Run exactly the registry names that have never appeared in any
-        committed CORRECTNESS_r*.json window.
-    python tools/check_correctness.py --list-never-checked
-        Print that set (registration order) without running anything —
-        the COVERAGE.md closure schedule is generated from this list.
 """
 
 from __future__ import annotations
 
-import glob
 import hashlib
-import json
 import sys
 
 import duckdb
 
 sys.path.insert(0, ".")
-
-
-def never_checked_names(artifacts: list[str] | None = None) -> list[str]:
-    """Registry names absent from every ON-DISK CORRECTNESS_r*.json
-    (committed or not — a driver artifact counts the moment it lands).
-
-    Pass ``artifacts`` (file names relative to the repo root) to compute
-    the debt as-of a pinned artifact set instead — this is how
-    ``tests/test_registry_window.py`` stays green across round
-    boundaries: it pins against ``WINDOW_STATE.json``'s recorded set,
-    not whatever the driver has written since the last rotation.
-    """
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    if artifacts is None:
-        paths = sorted(glob.glob(str(root / "CORRECTNESS_r*.json")))
-    else:
-        paths = [str(root / a) for a in artifacts]
-    checked: set[str] = set()
-    for path in paths:
-        checked |= set(json.load(open(path)).keys())
-    from wistia_etl_pipeline_spark import registry
-
-    return [n for n in registry._REG_ORDER if n not in checked]
-
-
-def _row_green(row: dict) -> bool:
-    return bool(
-        row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match", True)
-        and not row.get("err")
-    )
-
-
-def last_failed_names(artifacts: list[str] | None = None) -> list[str]:
-    """Registry names whose LATEST driver row is a FAIL (VERDICT r7 #2:
-    ever-failed-but-never-recleared is a worse debt than never-checked —
-    the driver's last visible status for the name is still red even if
-    the fix landed rounds ago). Artifact rows are folded in ROUND order
-    (numeric, r10+ safe); a later green row clears an earlier fail.
-
-    Same ``artifacts`` pinning semantics as ``never_checked_names``.
-    """
-    import pathlib
-    import re
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    if artifacts is None:
-        paths = glob.glob(str(root / "CORRECTNESS_r*.json"))
-    else:
-        paths = [str(root / a) for a in artifacts]
-    paths = sorted(
-        paths, key=lambda p: int(re.search(r"r(\d+)", pathlib.Path(p).name).group(1))
-    )
-    latest_ok: dict[str, bool] = {}
-    for path in paths:
-        for name, row in json.load(open(path)).items():
-            latest_ok[name] = _row_green(row)
-    from wistia_etl_pipeline_spark import registry
-
-    return [
-        n for n in registry._REG_ORDER
-        if n in latest_ok and not latest_ok[n]
-    ]
-
-def last_checked_round(artifacts: list[str] | None = None) -> dict[str, int]:
-    """name -> numeric round of the LATEST artifact holding a row for it.
-
-    Feeds the r10+ freshness fill (VERDICT r9 #4): once never-checked
-    debt is zero, window slots go to the least-recently-driver-checked
-    names, oldest round first. Same ``artifacts`` pinning semantics as
-    ``never_checked_names``.
-    """
-    import pathlib
-    import re
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    if artifacts is None:
-        paths = glob.glob(str(root / "CORRECTNESS_r*.json"))
-    else:
-        paths = [str(root / a) for a in artifacts]
-    seen: dict[str, int] = {}
-    for path in paths:
-        rnd = int(re.search(r"r(\d+)", pathlib.Path(path).name).group(1))
-        for name in json.load(open(path)):
-            seen[name] = max(seen.get(name, 0), rnd)
-    return seen
 
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -149,19 +48,8 @@ def main() -> int:
     flags = {a for a in sys.argv[1:] if a.startswith("--")}
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     hostile = "--hostile" in flags
-    if "--list-never-checked" in flags:
-        for n in never_checked_names():
-            print(n)
-        return 0
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    if "--never-checked" in flags:
-        only = set(never_checked_names()) | only
-        if not only:
-            print("driver-verification debt is ZERO: every registry name "
-                  "has a CORRECTNESS_r*.json row")
-            return 0
-        print(f"auditing {len(only)} never-driver-checked queries")
 
     import __spark_entry__ as entrymod
 
@@ -195,6 +83,10 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if name not in oracles:
+            failures += 1
+            print(f"{name:40s} FAIL  no oracle registered")
+            continue
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -202,9 +94,6 @@ def main() -> int:
         except Exception as e:
             failures += 1
             print(f"{name:40s} SPARK-ERROR {type(e).__name__}: {str(e)[:160]}")
-            continue
-        if name not in oracles:
-            print(f"{name:40s} rows-only: {len(srows)} rows, cols={scols}")
             continue
         # Type audit first: DuckDB HUGEINT (SUM of integers) renders as
         # float64 under pandas-based fetches (the driver's path) even

@@ -25,9 +25,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .text import normalize_text, tokens
+from .graph import dup_clusters
+from .text import dataset_split, normalize_text, quality_score, tokens
 
 #: Distinct-shingle cap for the MinHash digest-dictionary path (see
 #: _staged_bands). The dictionary must stay model-sized (it is
@@ -374,6 +375,52 @@ def minhash_near_dup_pairs(
             F.size(F.array_union("a_sh", "b_sh")).alias("lu"),
         )
     return out.select("a_id", "b_id", "jaccard_sim")
+
+
+def curate_corpus(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    *,
+    min_quality: float = 0.5,
+    jaccard: float = 0.8,
+    test_permille: int = 100,
+) -> DataFrame:
+    """The corpus-curation pipeline: ``docs`` with every column kept,
+    restricted to the curated documents, plus ``split``.
+
+      → quality gate (composite heuristic score ≥ ``min_quality``)
+      → exact dedup (min-id winner per normalized-text fingerprint)
+      → near-dup removal (MinHash bands → pair join at ``jaccard`` →
+        distributed connected components → keep cluster minimum)
+      → deterministic train/test split (``test_permille``)
+
+    Every stage is shuffle-bounded: the quality gate is scan-local,
+    exact dedup is one window on the fingerprint key, MinHash banding
+    joins signatures (never documents), the component rounds are
+    O(log n) equi-joins and the split is a pure expression.
+    """
+    q = docs.filter(quality_score(text_col, lang="en") >= min_quality)
+    w = Window.partitionBy(F.md5(normalize_text(F.col(text_col)))).orderBy(id_col)
+    # Three downstream subtrees consume s1 (signature mining, the
+    # keep-list semi join, the split); without a materialization each
+    # recomputes the quality scan + dedup window (NOTES rule #7 — no
+    # ReusedExchange across different downstream plans). At 100 TB
+    # this would be a checkpoint to a table.
+    s1 = (
+        q.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+        .localCheckpoint(eager=False)
+    )
+    pairs = minhash_near_dup_pairs(
+        s1, id_col, text_col,
+        num_hashes=16, bands=4, shingle_k=2, jaccard_threshold=jaccard,
+    ).select("a_id", "b_id")
+    assign = dup_clusters(pairs, universe=s1.select(id_col), id_col=id_col)
+    keep = assign.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
+    s2 = s1.join(keep, id_col, "left_semi")
+    return dataset_split(s2, id_col, test_permille=test_permille)
 
 
 def simhash64(col: Column | str, *, k: int = 1) -> Column:

@@ -444,15 +444,23 @@ def kcore_peel(
       filter-count on the already-checkpointed result — no
       convergence probe, no action inside the loop.
     * **The ladder's shuffles are sized to the materialized
-      frontier.** ``sym`` is already cached when the ladder starts, so
-      its count is one near-free job; below ``_SMALL_FRONTIER`` edges
-      the per-round shuffles run at 8 partitions (the session default
-      spends more on task/stage coordination than on the data — the
-      measured ratio on a 12 k-edge graph was 2.5 s vs 1.5 s), above
-      it the session's partitioning and AQE coalescing govern as
-      usual. The conf is scoped with try/finally (the engine runs
-      queries sequentially per session; same discipline as the
-      state-store audits).
+      frontier, per plan.** ``sym`` is already cached when the ladder
+      starts, so its count is one near-free job; below
+      ``_SMALL_FRONTIER`` edges the ladder's shuffles are capped at 8
+      partitions (a wide session default spends more on task/stage
+      coordination than on the data — the measured ratio on a 12
+      k-edge graph was 2.5 s vs 1.5 s). When the session is wider than
+      8, every aggregate (each round's degrees, the node universe, the
+      final core degrees and round counts) is rebalanced by its key to
+      8 partitions; the aggregate and the final joins reuse that
+      partitioning, and AQE still coalesces the reads. The rebalance
+      moves whole rows (no map-side partial aggregate), so a session
+      at 8 partitions or fewer plans the aggregates as they are. A
+      checkpoint cannot carry the partitioning across rounds: with AQE
+      on, the checkpointed frame reports unknown partitioning.
+      Above the threshold the session's partitioning and AQE
+      coalescing govern as usual. The session conf is never touched
+      (the connected_components / label_propagation rule).
     """
     if max_rounds < 1:
         raise ValueError(f"kcore_peel: max_rounds must be >= 1, got {max_rounds}")
@@ -472,71 +480,71 @@ def kcore_peel(
         .localCheckpoint(eager=False)
     )
     sym = _symmetric(base).distinct().localCheckpoint(eager=True)
-    spark = sym.sparkSession
-    conf = spark.conf
     small_frontier = sym.count() <= _SMALL_FRONTIER
-    prev_parts = conf.get("spark.sql.shuffle.partitions")
-    if small_frontier:
-        conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        nodes = sym.select(F.col("src").alias("node")).distinct()
-        keep_parts: list[DataFrame] = []
-        cur_edges = sym
-        for _ in range(max_rounds):
-            # Lazy checkpoint (r13, ADVICE r11 #3): each round's keep
-            # aggregate is consumed THREE times — both semi-join probes
-            # of the next edge restriction and the final kept_rounds
-            # union — and re-evaluated per consumer without a cut. One
-            # shared RDD = one evaluation. Below the small-frontier
-            # threshold the probes are additionally broadcast-hinted
-            # (an RDD-backed frame has no size statistics, so the
-            # planner would otherwise fall back to a shuffled join for
-            # a probe side we have just proven is node-sized).
-            keep = (
-                cur_edges.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("d"))
-                .where(F.col("d") >= k)
-                .select(F.col("src").alias("node"))
-                .localCheckpoint(eager=False)
-            )
-            keep_parts.append(keep)
-            probe = F.broadcast(keep) if small_frontier else keep
-            cur_edges = (
-                cur_edges.join(probe, F.col("src") == F.col("node"), "left_semi")
-                .join(probe, F.col("dst") == F.col("node"), "left_semi")
-                .localCheckpoint(eager=False)
-            )
+    spark = sym.sparkSession
+    cap = small_frontier and int(spark.conf.get("spark.sql.shuffle.partitions")) > 8
 
-        from functools import reduce
+    def _width(df: DataFrame, key: str) -> DataFrame:
+        # REBALANCE, not repartition(8): AQE may still coalesce the
+        # reads, while a fixed-number repartition runs 8 reduce tasks
+        # however small the frontier
+        return df.hint("rebalance", 8, key) if cap else df
 
-        core_deg = cur_edges.groupBy("src").agg(
-            F.count(F.lit(1)).cast("long").alias("core_deg")
+    nodes = _width(sym.select(F.col("src").alias("node")), "node").distinct()
+    keep_parts: list[DataFrame] = []
+    cur_edges = sym
+    for _ in range(max_rounds):
+        # Lazy checkpoint (r13, ADVICE r11 #3): each round's keep
+        # aggregate is consumed THREE times — both semi-join probes
+        # of the next edge restriction and the final kept_rounds
+        # union — and re-evaluated per consumer without a cut. One
+        # shared RDD = one evaluation. Below the small-frontier
+        # threshold the probes are additionally broadcast-hinted
+        # (an RDD-backed frame has no size statistics, so the
+        # planner would otherwise fall back to a shuffled join for
+        # a probe side we have just proven is node-sized).
+        keep = (
+            _width(cur_edges, "src").groupBy("src")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .where(F.col("d") >= k)
+            .select(F.col("src").alias("node"))
+            .localCheckpoint(eager=False)
         )
-        kept_rounds = (
-            reduce(lambda a, b: a.unionByName(b), keep_parts)
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("m"))
+        keep_parts.append(keep)
+        probe = F.broadcast(keep) if small_frontier else keep
+        cur_edges = (
+            cur_edges.join(probe, F.col("src") == F.col("node"), "left_semi")
+            .join(probe, F.col("dst") == F.col("node"), "left_semi")
+            .localCheckpoint(eager=False)
         )
-        out = (
-            nodes.join(kept_rounds, "node", "left")
-            .select("node", F.coalesce("m", F.lit(0)).alias("m"))
-            .join(core_deg, F.col("node") == F.col("src"), "left")
-            .select(
-                "node",
-                F.when(F.col("m") == max_rounds, F.lit(0))
-                .otherwise(F.col("m") + 1)
-                .cast("long")
-                .alias("peel_round"),
-                F.coalesce("core_deg", F.lit(0)).alias("core_deg"),
-            )
-            .localCheckpoint(eager=True)
+
+    from functools import reduce
+
+    core_deg = _width(cur_edges, "src").groupBy("src").agg(
+        F.count(F.lit(1)).cast("long").alias("core_deg")
+    )
+    kept_rounds = (
+        _width(reduce(lambda a, b: a.unionByName(b), keep_parts), "node")
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("m"))
+    )
+    out = (
+        nodes.join(kept_rounds, "node", "left")
+        .select("node", F.coalesce("m", F.lit(0)).alias("m"))
+        .join(core_deg, F.col("node") == F.col("src"), "left")
+        .select(
+            "node",
+            F.when(F.col("m") == max_rounds, F.lit(0))
+            .otherwise(F.col("m") + 1)
+            .cast("long")
+            .alias("peel_round"),
+            F.coalesce("core_deg", F.lit(0)).alias("core_deg"),
         )
-        n_unconverged = out.where(
-            (F.col("peel_round") == 0) & (F.col("core_deg") < k)
-        ).count()
-    finally:
-        if small_frontier:
-            conf.set("spark.sql.shuffle.partitions", prev_parts)
+        .localCheckpoint(eager=True)
+    )
+    n_unconverged = out.where(
+        (F.col("peel_round") == 0) & (F.col("core_deg") < k)
+    ).count()
     if n_unconverged:
         raise RuntimeError(
             f"kcore_peel: no fixpoint in {max_rounds} rounds "

@@ -26,7 +26,7 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 #: Deterministic priority order for argmax ties (first wins).
-LANG_PRIORITY: tuple[str, ...] = ("en", "de", "es", "fr")
+LANG_ORDER: tuple[str, ...] = ("en", "de", "es", "fr")
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -103,11 +103,11 @@ def quality_score(col: Column | str, *, lang: str = "en") -> Column:
 def lang_id(col: Column | str) -> Column:
     """Stopword-overlap language ID with deterministic priority-order
     tiebreak; 'und' (undetermined) when nothing matches."""
-    scores = {lang: stopword_hits(col, lang) for lang in LANG_PRIORITY}
+    scores = {lang: stopword_hits(col, lang) for lang in LANG_ORDER}
     best = F.greatest(*scores.values())
     expr = F.lit("und")
     # build the WHEN chain in reverse priority so earlier langs win ties
-    for lang in reversed(LANG_PRIORITY):
+    for lang in reversed(LANG_ORDER):
         expr = F.when((scores[lang] > 0) & (scores[lang] == best), F.lit(lang)).otherwise(
             expr
         )

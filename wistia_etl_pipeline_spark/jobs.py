@@ -133,14 +133,9 @@ def main_pipeline(argv: Sequence[str] | None = None) -> dict:
 
 def main_curation(argv: Sequence[str] | None = None) -> None:
     """The corpus-curation pipeline as a job: documents parquet in,
-    curated per-split parquet out (quality gate → exact dedup →
-    near-dup clusters → split; the same stages corpus_curation_e2e
-    differential-tests)."""
-    from pyspark.sql import Window, functions as F
-
-    from .functions.dedupe import minhash_near_dup_pairs
-    from .functions.graph import dup_clusters
-    from .functions.text import dataset_split, normalize_text, quality_score
+    curated per-split parquet out (``functions.dedupe.curate_corpus``,
+    the function corpus_curation_e2e differential-tests)."""
+    from .functions.dedupe import curate_corpus
 
     p = argparse.ArgumentParser(prog="wistia-curation")
     p.add_argument("--input", required=True, help="documents parquet path")
@@ -153,25 +148,14 @@ def main_curation(argv: Sequence[str] | None = None) -> None:
     args = p.parse_args(sys.argv[1:] if argv is None else argv)
 
     spark = _build_session("wistia-curation")
-    docs = spark.read.parquet(args.input)
-    idc, txt = args.id_col, args.text_col
-
-    q = docs.filter(quality_score(txt, lang="en") >= args.min_quality)
-    w = Window.partitionBy(F.md5(normalize_text(F.col(txt)))).orderBy(idc)
-    s1 = (
-        q.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint(eager=False)
+    out = curate_corpus(
+        spark.read.parquet(args.input),
+        args.id_col,
+        args.text_col,
+        min_quality=args.min_quality,
+        jaccard=args.jaccard,
+        test_permille=args.test_permille,
     )
-    pairs = minhash_near_dup_pairs(
-        s1, idc, txt, num_hashes=16, bands=4, shingle_k=2,
-        jaccard_threshold=args.jaccard,
-    ).select("a_id", "b_id")
-    assign = dup_clusters(pairs, universe=s1.select(idc), id_col=idc)
-    keep = assign.filter(F.col(idc) == F.col("cluster_id")).select(idc)
-    s2 = s1.join(keep, idc, "left_semi")
-    out = dataset_split(s2, idc, test_permille=args.test_permille)
     out.write.mode("overwrite").partitionBy("split").parquet(args.output)
 
 

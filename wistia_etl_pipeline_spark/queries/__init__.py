@@ -1,8 +1,8 @@
 """Query chunk modules — import order IS registration order.
 
 Importing ANY chunk module triggers this package __init__ first, which
-imports every chunk in canonical order, so ``_REG_ORDER`` is stable
-regardless of entry point.
+imports every chunk in canonical order, so registration order (the order
+of ``registry.queries()``) is the same whatever the entry point.
 """
 
 from . import _base  # noqa: F401
@@ -21,21 +21,3 @@ from . import q12_r8_growth  # noqa: F401
 from . import q13_r9_growth  # noqa: F401
 from . import q14_r10_growth  # noqa: F401
 from . import q15_r11_growth  # noqa: F401
-
-CHUNKS = (
-    q01_core_gold_silver,
-    q02_sessions_events_e2e,
-    q03_tpch_relational,
-    q04_canaries_curation,
-    q05_tokens_clustering,
-    q06_streaming_retrieval,
-    q07_sketches_graph,
-    q08_timeseries_paths,
-    q09_stats_structures,
-    q10_evals_governance,
-    q11_plans_calibration,
-    q12_r8_growth,
-    q13_r9_growth,
-    q14_r10_growth,
-    q15_r11_growth,
-)

@@ -10,6 +10,7 @@ matter which module a caller imports first.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,18 +21,17 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-_REG_ORDER: dict[str, int] = {}
 
 
 def query(name: str, oracle: str | None = None):
     """Register a (spark, sf_dir) -> DataFrame callable + optional oracle."""
 
     def deco(fn: QueryFn) -> QueryFn:
+        @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             apply_runtime_confs(spark)
             return fn(spark, sf_dir)
 
-        _REG_ORDER[name] = len(_REG_ORDER)
         _QUERIES[name] = wrapped
         if oracle is not None:
             _ORACLES[name] = oracle

@@ -1,8 +1,7 @@
 """Flagship gold rollup, silver flatten/dedup, merge/upsert, star joins, text/dedup/similarity/multimodal extensions, high-water mark.
 
 Mechanically split from the registry monolith in r8; see
-``queries/_base.py`` for the registration contract and
-``registry.py`` (the facade) for ordering/window semantics.
+``queries/_base.py`` for the registration contract.
 """
 
 from __future__ import annotations
@@ -546,17 +545,17 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lang_id_oracle() -> str:
-    from ..functions.text import LANG_PRIORITY
+    from ..functions.text import LANG_ORDER
 
     score_cols = ",\n        ".join(
         f"len(list_intersect(list_distinct({_TOKS}), {_sql_stoplist(lang)})) AS s_{lang}"
-        for lang in LANG_PRIORITY
+        for lang in LANG_ORDER
     )
     # priority-ordered argmax: a language wins if positive and >= all later prios
     cases = []
-    for i, lang in enumerate(LANG_PRIORITY):
-        others = [f"s_{lang} >= s_{o}" for o in LANG_PRIORITY if o != lang][i:]
-        cond = " AND ".join([f"s_{lang} > 0"] + [f"s_{lang} >= s_{o}" for o in LANG_PRIORITY[i + 1:]] + [f"s_{lang} >= s_{o}" for o in LANG_PRIORITY[:i]])
+    for i, lang in enumerate(LANG_ORDER):
+        others = [f"s_{lang} >= s_{o}" for o in LANG_ORDER if o != lang][i:]
+        cond = " AND ".join([f"s_{lang} > 0"] + [f"s_{lang} >= s_{o}" for o in LANG_ORDER[i + 1:]] + [f"s_{lang} >= s_{o}" for o in LANG_ORDER[:i]])
         cases.append(f"WHEN {cond} THEN '{lang}'")
     return f"""
     WITH scored AS (

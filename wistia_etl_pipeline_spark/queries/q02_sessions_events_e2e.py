@@ -1,8 +1,7 @@
 """Sessionization, SimHash, salted agg, pivot/rollup breadth, event analytics windows, bronze-to-gold e2e pipeline.
 
 Mechanically split from the registry monolith in r8; see
-``queries/_base.py`` for the registration contract and
-``registry.py`` (the facade) for ordering/window semantics.
+``queries/_base.py`` for the registration contract.
 """
 
 from __future__ import annotations

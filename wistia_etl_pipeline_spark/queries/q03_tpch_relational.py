@@ -1,8 +1,7 @@
 """TPC-H-shaped relational breadth, skew/sketch anchors, duplicate clusters, curation sampling, SCD2, REST fan-out, corpus stats.
 
 Mechanically split from the registry monolith in r8; see
-``queries/_base.py`` for the registration contract and
-``registry.py`` (the facade) for ordering/window semantics.
+``queries/_base.py`` for the registration contract.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """BPE tokenizer, hopping windows, k-means, SemDeDup, mixtures, TF-IDF and the r4 training-data wave.
 
 Mechanically split from the registry monolith in r8; see
-``queries/_base.py`` for the registration contract and
-``registry.py`` (the facade) for ordering/window semantics.
+``queries/_base.py`` for the registration contract.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Histogram quantiles, label propagation, seasonal/changepoint/ACF time series, event paths, funnels.
 
 Mechanically split from the registry monolith in r8; see
-``queries/_base.py`` for the registration contract and
-``registry.py`` (the facade) for ordering/window semantics.
+``queries/_base.py`` for the registration contract.
 """
 
 from __future__ import annotations

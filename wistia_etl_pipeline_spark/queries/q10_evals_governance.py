@@ -1,8 +1,7 @@
 """Kneser-Ney LM, k-anonymity, audio segments, spatial grid join, BOM rollup, CUPED, NDCG/silhouette/kNN/STL evals.
 
 Mechanically split from the registry monolith in r8; see
-``queries/_base.py`` for the registration contract and
-``registry.py`` (the facade) for ordering/window semantics.
+``queries/_base.py`` for the registration contract.
 """
 
 from __future__ import annotations

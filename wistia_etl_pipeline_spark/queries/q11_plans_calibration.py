@@ -1,8 +1,7 @@
 """Runtime-filter plan demos, calibration, DTW, and the r5+ closing waves.
 
 Mechanically split from the registry monolith in r8; see
-``queries/_base.py`` for the registration contract and
-``registry.py`` (the facade) for ordering/window semantics.
+``queries/_base.py`` for the registration contract.
 """
 
 from __future__ import annotations

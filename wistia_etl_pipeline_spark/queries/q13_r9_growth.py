@@ -822,9 +822,7 @@ def statestore_join_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     )
     ck = os.path.join(root, "ck")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_shuffle_partitions(spark, n=8):
         q = (
             joined.writeStream.format("noop")
             .option("checkpointLocation", ck)
@@ -840,8 +838,6 @@ def statestore_join_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "not finish within 300 s; refusing to read a "
                 "partially-written checkpoint"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     meta = (
         spark.read.format("state-metadata")

@@ -190,11 +190,12 @@ def stream_state_partitions(spark: SparkSession, source=None) -> int:
 class scoped_shuffle_partitions:
     """Context manager: set ``spark.sql.shuffle.partitions`` for the
     duration of a block and restore it on exit (both paths). Safe under
-    the engine's documented sequential-per-session invariant — the same
-    try/finally discipline as ``kcore_peel`` and the state-store
-    audits. Every action that should run at the scoped width must
-    execute INSIDE the block (lazy frames materialized later see the
-    restored session value).
+    the engine's documented sequential-per-session invariant. Its users
+    are the stateful streams, whose state stores take their partition
+    count from this conf; batch operators size their shuffles per plan
+    (``repartition``) instead. Every action that should run at the
+    scoped width must execute INSIDE the block (lazy frames
+    materialized later see the restored session value).
 
     ``source`` (r13): staged stream input (path/DataFrame/list) the
     width is derived from via :func:`stream_state_partitions`; without
