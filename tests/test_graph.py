@@ -289,22 +289,6 @@ def test_kcore_random_graph_matches_replica(spark):
     _run_kcore(spark, noisy)
 
 
-def test_kcore_on_a_wide_session_matches_replica(spark):
-    # a session wider than 8 partitions takes the rebalanced-ladder path
-    import random
-
-    rng = random.Random(5)
-    edges = [
-        (a, b) for a in range(30) for b in range(30) if a < b and rng.random() < 0.1
-    ]
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        _run_kcore(spark, edges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-
-
 def test_kcore_raises_when_bound_too_small(spark):
     # path 0..7 needs 4 peel rounds for k=2 (endpoints inward); with
     # max_rounds=2 the survivors {2,3,4,5} still hold a sub-2-degree
@@ -325,10 +309,9 @@ def test_kcore_raises_when_bound_too_small(spark):
 
 
 def test_kcore_restores_shuffle_partitions_conf(spark, monkeypatch):
-    # the frontier-sized ladder sets its shuffle widths per plan, so the
-    # session conf is left as found because it is never written: any
-    # write to spark.sql.shuffle.partitions — on the success or the
-    # raise path — fails the test
+    # the session conf is left as found because kcore_peel never writes
+    # it: any write to spark.sql.shuffle.partitions — on the success or
+    # the raise path — fails the test
     import pytest
     from pyspark.sql.conf import RuntimeConfig
 

@@ -141,8 +141,7 @@ def connected_components(
     cur = _symmetric(raw).distinct().localCheckpoint(eager=False)
     cur_sig = _materialize(cur)
 
-    # Every round's star shuffles run inside this loop, so the
-    # kcore_peel small-frontier rule applies (r12): below
+    # Every round's star shuffles run inside this loop (r12): below
     # _SMALL_FRONTIER edges the per-round exchanges are
     # coordination-bound at the session's partitioning — run them at 8
     # partitions. Width is a PER-PLAN repartition hint (r13), not a
@@ -379,10 +378,12 @@ def triangle_stats(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id") -
     )
 
 
-#: Edge count below which kcore_peel's per-round shuffles run at 8
-#: partitions: 16 B/edge × 5 M = ~80 MB, ~10 MB per reduce task —
-#: coordination-bound, not data-bound, at any wider fan-out. Larger
-#: frontiers keep the session partitioning (+ AQE coalescing).
+#: Edge count below which a graph frontier counts as small:
+#: connected_components and label_propagation run their per-round
+#: shuffles at 8 partitions, and kcore_peel broadcasts its probes.
+#: 16 B/edge × 5 M = ~80 MB, ~10 MB per reduce task — coordination-bound,
+#: not data-bound, at any wider fan-out. Larger frontiers keep the
+#: session partitioning (+ AQE coalescing).
 _SMALL_FRONTIER = 5_000_000
 
 #: Edge count below which label_propagation broadcasts the per-round
@@ -443,24 +444,17 @@ def kcore_peel(
       a node round ``max_rounds + 1`` would peel, so the raise is a
       filter-count on the already-checkpointed result — no
       convergence probe, no action inside the loop.
-    * **The ladder's shuffles are sized to the materialized
-      frontier, per plan.** ``sym`` is already cached when the ladder
-      starts, so its count is one near-free job; below
-      ``_SMALL_FRONTIER`` edges the ladder's shuffles are capped at 8
-      partitions (a wide session default spends more on task/stage
-      coordination than on the data — the measured ratio on a 12
-      k-edge graph was 2.5 s vs 1.5 s). When the session is wider than
-      8, every aggregate (each round's degrees, the node universe, the
-      final core degrees and round counts) is rebalanced by its key to
-      8 partitions; the aggregate and the final joins reuse that
-      partitioning, and AQE still coalesces the reads. The rebalance
-      moves whole rows (no map-side partial aggregate), so a session
-      at 8 partitions or fewer plans the aggregates as they are. A
-      checkpoint cannot carry the partitioning across rounds: with AQE
-      on, the checkpointed frame reports unknown partitioning.
-      Above the threshold the session's partitioning and AQE
-      coalescing govern as usual. The session conf is never touched
-      (the connected_components / label_propagation rule).
+    * **The aggregates and joins take the session's width.** ``sym``
+      is already cached when the ladder starts, so its count is one
+      near-free job; below ``_SMALL_FRONTIER`` edges it only switches
+      the probes to broadcasts. AQE coalesces the shuffle reads to the
+      frontier's size, so no width is set here and the session conf is
+      never touched. On a 4-vCPU machine at 32 shuffle partitions, the
+      sf0.1 ``kcore_decomposition`` graph (6024 pairs) peeled in a
+      median 1.80 s like this, 1.74 s under an 8-partition session
+      conf scope and 1.72 s with a REBALANCE(8) hint on every aggregate
+      (27 runs each): under 1% of the query, too little to carry a
+      width rule for.
     """
     if max_rounds < 1:
         raise ValueError(f"kcore_peel: max_rounds must be >= 1, got {max_rounds}")
@@ -481,16 +475,7 @@ def kcore_peel(
     )
     sym = _symmetric(base).distinct().localCheckpoint(eager=True)
     small_frontier = sym.count() <= _SMALL_FRONTIER
-    spark = sym.sparkSession
-    cap = small_frontier and int(spark.conf.get("spark.sql.shuffle.partitions")) > 8
-
-    def _width(df: DataFrame, key: str) -> DataFrame:
-        # REBALANCE, not repartition(8): AQE may still coalesce the
-        # reads, while a fixed-number repartition runs 8 reduce tasks
-        # however small the frontier
-        return df.hint("rebalance", 8, key) if cap else df
-
-    nodes = _width(sym.select(F.col("src").alias("node")), "node").distinct()
+    nodes = sym.select(F.col("src").alias("node")).distinct()
     keep_parts: list[DataFrame] = []
     cur_edges = sym
     for _ in range(max_rounds):
@@ -504,7 +489,7 @@ def kcore_peel(
         # planner would otherwise fall back to a shuffled join for
         # a probe side we have just proven is node-sized).
         keep = (
-            _width(cur_edges, "src").groupBy("src")
+            cur_edges.groupBy("src")
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= k)
             .select(F.col("src").alias("node"))
@@ -520,11 +505,11 @@ def kcore_peel(
 
     from functools import reduce
 
-    core_deg = _width(cur_edges, "src").groupBy("src").agg(
+    core_deg = cur_edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("core_deg")
     )
     kept_rounds = (
-        _width(reduce(lambda a, b: a.unionByName(b), keep_parts), "node")
+        reduce(lambda a, b: a.unionByName(b), keep_parts)
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("m"))
     )
