@@ -1,16 +1,43 @@
-"""Benchmark harness — runs the engine's headline queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+"""Benchmark harness — the one timing harness for registry queries.
+
+    python bench.py [name ...]
+
+Times the named queries, in the order given, at ``$SPARK_GRAFT_SF_DIR``
+(default: the sf0.1 test data) on ``local[$SPARK_GRAFT_CPUS]``; with no
+names it times every query of ``queries()`` in registration order. An
+unknown name exits 2, naming it, before a Spark session starts. It
+prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"<name>": sec, ...}, "sf": 0.1}
+     "queries": {"<name>": sec, ...}, "sf": 0.1, ...,
+     "counts": {"<name>": [[jobs, stages], ...]}}
 
-Each query is materialized with the noop sink (full execution, no
-driver-side row transfer) after a warm-up of the session/JIT on a
-small query. Per-query numbers are MEDIANS over
-``$SPARK_GRAFT_BENCH_RUNS`` (default 3) interleaved rounds — the
-whole set runs round-robin so one round's JIT/GC noise can't bias a
-single query — and the headline value is the sum of medians.
+Every sample is one :func:`_run`: the query is materialized with the
+noop sink (full execution, no driver-side row transfer) under its own
+job group, and the cached state it left is released after the timer
+stops. A warm-up query (``gold_daily_rollup``) runs first. ``queries``
+holds MEDIANS over ``$SPARK_GRAFT_BENCH_RUNS`` (default 3) interleaved
+rounds — the whole set runs round-robin so one round's JIT/GC noise
+can't bias a single query — and ``value`` is the sum of medians.
+``queries_cold``/``value_cold`` are the same over
+``$SPARK_GRAFT_BENCH_COLD_RUNS`` (default 3) further rounds
+(``$SPARK_GRAFT_BENCH_COLD=0`` skips them). Since every sample releases
+after its timer, both columns time the same release → run sequence and
+differ only in round position; that is why r13's cold total (277 s)
+sits below its warm total (291 s). Both keys stay because
+``tools/bench_gate.py`` gates both columns against git history.
+
+``counts`` lists ``[jobs, stages]`` for every timed sample of a query,
+warm rounds then cold, as read from ``statusTracker()`` for the
+sample's job group. Jobs a query starts from its own worker threads
+carry the group only when the thread inherits the caller's local
+properties: ``dedup_threshold_sensitivity`` runs its closures on a
+``ThreadPoolExecutor`` through ``pyspark.inheritable_thread_target``,
+so they are counted; a plain thread's jobs would not be.
+
+A run over the whole registry also writes the line to
+``$SPARK_GRAFT_BENCH_OUT`` (default ``BENCH_LOCAL.json``), the record
+``tools/bench_gate.py`` reads; a subset run writes nothing.
 """
 
 from __future__ import annotations
@@ -23,186 +50,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-#: Headline set: one per operator family (SURVEY.md §2 + extensions).
-HEADLINE = [
-    "gold_daily_rollup",          # A1-A6 groupBy/agg
-    "gold_hours_watched",         # A4 broadcast join + sum-product
-    "star_join_revenue",          # J3 multi-join
-    "silver_flatten_project",     # P1 projection + JSON extraction
-    "silver_dedup_latest_wins",   # D1 window dedup
-    "merge_upsert_composite_key", # A7 MERGE
-    "watermark_incremental_filter",  # P5 pushed-down scan filter
-    "global_topk_events",         # TakeOrderedAndProject
-    "text_stats",                 # text analysis expressions
-    "doc_fingerprints",           # fingerprinting (md5/minshingle)
-    "dedup_exact_documents",      # exact corpus dedup
-    "similarity_cosine_topk",     # brute-force cosine top-k
-    "similarity_ann_buckets",     # LSH index build
-    "embedding_near_dup",         # blocked near-dup self-join
-    "multimodal_decode_stats",    # Arrow-batched binary decode
-    "sessionize_events",          # gaps-and-islands window
-    "session_rollup_events",      # built-in session_window
-    "dedup_simhash",              # 60-bit bit-vote signatures
-    "gold_rollup_salted",         # two-phase skew-resistant agg
-    "sql_pricing_summary",        # SQL front-end path
-    "asof_join_last_state",       # as-of join (union+carry-forward)
-    "range_join_errors_in_sessions",  # interval shredding join
-    "rolling_7d_activity",        # window frames
-    "funnel_view_to_purchase",    # conditional-agg funnel
-    "retention_7d",               # offset self-join retention
-    "pivot_event_counts",         # pivot
-    "rollup_engagement",          # grouping sets
-    "percentile_engagement",      # exact percentiles
-    "top_orders_by_revenue",      # selective star join + top-k
-    "supplier_diversity_by_type", # grouped count-distinct
-    "text_chunking",              # token-window fan-out
-    "dataset_split",              # hash split
-    "text_redact_pii",            # regex scrubbing
-    "dedup_simhash_pairs",        # hamming band-join pair production
-    "min_cost_supplier_q2",       # decorrelated correlated subquery
-    "volume_shipping_q7",         # Q7 multi-join date window
-    "market_share_q8",            # Q8 conditional-agg market share
-    "salted_join_first_seen",     # skew-resistant salted join
-    "grouped_outlier_profile",    # grouped-map pandas (median/MAD)
-    "cogroup_asof_checkpoint",    # cogroup pandas (merge_asof per key)
-    "merge_upsert_acid",          # txlog ACID merge
-    "incremental_gold_maintenance",  # partial-aggregate state fold
-    "dedup_clusters",             # large-star/small-star components
-    "stratified_sample_docs",     # shuffle-free stratified sampling
-    "group_capped_docs",          # per-group cap window top-k
-    "order_priority_q4",          # correlated EXISTS semi join
-    "customer_distribution_q13",  # outer-join count histogram
-    "supplier_cnt_q16",           # null-aware NOT IN anti join
-    "large_volume_customers_q18", # IN-over-HAVING semi reduction
-    "global_sales_opportunity_q22",  # scalar subquery + anti join
-    "txlog_time_travel",          # versioned snapshot reads
-    "unpivot_daily_metrics",      # wide->long melt
-    "cube_event_engagement",      # full CUBE grouping sets
-    "corr_profile_docs",          # exact-sum Pearson corr
-    "text_repetition_stats",      # repetition quality screens
-    "scd2_media_state",           # SCD2 validity intervals
-    "top_supplier_q15",           # max-over-aggregate (window form)
-    "small_qty_revenue_q17",      # correlated scalar AVG predicate
-    "disjunctive_pushdown_q19",   # OR-of-conjunctions pushdown
-    "excess_stock_suppliers_q20", # nested IN semi chain
-    "waiting_suppliers_q21",      # double correlation, window form
-    "decontaminate_ngrams",       # benchmark overlap semi join
-    "embedding_centroid_profile", # exact-int centroid stats
-    "sequence_packing",           # fixed-context packing layout
-    "unshipped_orders_q3",        # segment top-k, deterministic ties
-    "local_supplier_volume_q5",   # cyclic join topology
-    "forecast_revenue_q6",        # pure pushdown scan-aggregate
-    "product_profit_q9",          # multi-dim profit rollup
-    "returned_items_q10",         # filtered top-20 by customer
-    "important_stock_q11",        # self-referential HAVING scalar
-    "shipmode_priority_q12",      # conditional integer counts
-    "promo_revenue_q14",          # exact-decimal conditional ratio
-    "rest_fanout_ingest",         # distributed paged ingest (fake API)
-    "rest_datasource_ingest",     # same loop via Python DataSource API
-    "txlog_append_ingest",        # file-level append commits, O(batch)
-    "txlog_incremental_read",     # CDF-style delta consumption
-    "txlog_partition_backfill",   # dynamic partition overwrite
-    "vocab_top_tokens",           # corpus vocabulary build, top-k
-    "doc_token_commonness",       # unigram-LM commonness (exact ints)
-    "doc_rare_terms",             # idf-ranked distinctive terms
-    "asof_join_forward",          # forward as-of (descending carry)
-    "asof_join_nearest",          # nearest as-of (two carries, 1 shuffle)
-    "corpus_pmi_bigrams",         # collocations via PMI lift, top-40
-    "value_histogram",            # equi-width binning per key
-    "argmax_latest_state",        # max_by/min_by aggregate surface
-    "rank_set_suite",             # compound: topk/sets under one hash
-    "behavioral_suite",           # compound: funnel/retention/mix
-    "ingest_error_isolation",     # ST6 fault-injected fan-out
-    "corpus_curation_e2e",        # flagship #2: full curation pipeline
-    "weighted_sample_priority",   # DLT priority sampling, shuffle-free
-    "token_budget_selection",     # budgeted greedy subset, 2-phase
-    "embedding_quantize_int8",    # int8 symmetric quantization digests
-    "window_rank_functions",      # rank/dense/percent/cume/ntile surface
-    "text_sentence_stats",        # sentence segmentation digests
-    "window_value_functions",     # first/last/nth/lead/lag surface
-    "datetime_surface",           # trunc/extract/dow alignment
-    "fuzzy_match_doc_titles",     # blocked edit-distance matching
-    "tokenize_bpe_corpus",        # frozen-BPE vocabulary tokenization
-    "text_chunking_bpe",          # real-token (BPE) context chunking
-    "hopping_window_activity",    # 1-day windows hopping every 6 h
-    "array_hof_surface",          # higher-order array lambda surface
-    "kmeans_embedding_clusters",  # exact-integer Lloyd's clustering
-    "semantic_dedup",             # SemDeDup cluster-blocked drop rule
-    "dataset_mixture_epochs",     # training-mixture replication
-    "doc_tfidf_keywords",         # rational-idf keyword extraction
-    "dedup_incremental_minhash",  # incoming-vs-history band join
-    "table_profile_events",       # one-pass per-column profiling
-    "cluster_prototypes",         # k-bounded census + medoid argmin
-    "embedding_random_projection",  # integer JL projection matmul
-    "source_dup_profile",         # per-source dup-rate report
-    "sketch_count_min_tokens",    # mergeable CMS heavy-hitters
-    "cdc_shared_passages",        # content-defined chunk passage dedup
-    "decontaminate_bloom_prefilter",  # scan-side bloom join pruning
-    "fk_integrity_audit",         # bidirectional FK audit, one join/pair
-    "event_transition_matrix",    # per-user Markov transition counts
-    "pagerank_dup_graph",         # exact-integer PageRank, 3 rounds
-    "txlog_snapshot_diff",        # row-level CDC across a commit chain
-    "pareto_doc_frontier",        # skyline via value-bounded window
-    "ssjoin_prefix_filter",       # exact Jaccard join, prefix filtering
-    "timeseries_gap_fill",        # dense spine + LOCF forward fill
-    "map_functions_surface",      # MapType build/filter/zip roundtrip
-    "ewma_user_activity",         # integer EWMA recurrence fold
-    "negative_sampling_pairs",    # hash-drawn contrastive negatives
-    "data_quality_suite",         # compound: fk/dup/profile/gaps, 1 hash
-    "doc_feature_hashing",        # hashing-trick sparse vectorizer
-    "frequent_token_pairs",       # a-priori pruned pair itemsets
-    "incremental_join_view",      # join-view IVM delta rule
-    "span_corruption_layout",     # T5 denoising mask layout
-    "key_skew_profile",           # pre-salting skew diagnosis report
-    "langid_confusion_matrix",    # lang-id eval confusion matrix
-    "dedup_eval_metrics",         # minhash P/R vs exact ground truth
-    "split_leakage_audit",        # dup contents crossing the split
-    "customer_rfm_segments",      # quintile RFM warehouse scoring
-    # ---- r5: full-registry coverage (VERDICT r4 #7) ----
-    "customer_rfm_boundaries",    # approx-percentile RFM scale path
-    "streaming_gold_rollup",      # multi-batch streaming rollup + merge sink
-    "aqe_skew_join_rollup",       # adaptive skew-split SMJ demo
-    "pipeline_e2e_gold",          # flagship reference e2e (writes + resume)
-    "canary_window_nulls",        # null-order determinism canary
-    "approx_sketch_anchor",       # HLL/percentile sketch error anchors
-    "variant_try_surface",        # VARIANT/try_* error-tolerant parsing
-    "silver_dedup_keys",          # plain key dedup
-    "scalar_surface",             # F1-F7 scalar surface
-    "merge_upsert_by_key",        # single-key MERGE
-    "join_semi_anti_customers",   # semi/anti join pair
-    "window_topk_per_media",      # per-key window top-k
-    "set_intersect_users",        # INTERSECT
-    "set_except_users",           # EXCEPT
-    "text_lang_id",               # n-gram language id
-    "dedup_minhash_lsh",          # standalone MinHash+LSH miner
-    "watermark_high_water_mark",  # running high-water fold
-    "dedup_ngram_jaccard",        # n-gram Jaccard verify join
-    "similarity_ivf_topk",        # IVF bucketed ANN probes
-    "text_quality_filter",        # quality-score gate
-    "visitor_event_profile",      # per-visitor behavioral profile
-    "multimodal_frame_sample",    # deterministic frame sampling
-    "distributed_ingest_fanout",  # executor-side paged REST fan-out
-    "bm25_topk",                  # integer BM25 lexical retrieval
-    "domain_importance_weights",  # DSIR-style data selection
-    "user_activity_trend",        # per-key OLS from sufficient stats
-    "anomaly_days_zscore",        # 2-sigma day flags, integer form
-    "streaming_session_windows",  # merging-window stream, txn file sink
-    "bucketed_join_rollup",       # co-located bucket join, no exchange
-    # ---- r5 continuation ----
-    "triangle_count_dup_graph",   # degree-ordered triangle counting
-    "sketch_hll_visitors",        # from-scratch HLL registers + estimate
-    "sketch_hll_merge_daily",     # daily-sketch MAX-merge rollup proof
-    "rolling_distinct_visitors",  # 7d rolling distinct via explode-dedupe
-    "containment_quote_match",    # exact containment join (quote leak)
-    "bigram_lm_quality",          # bigram-LM fluency scoring (CCNet shape)
-    "coreset_kcenter_embeddings", # greedy k-center diverse coreset
-    "streaming_dedup_ingest",     # dropDuplicatesWithinWatermark stream
-    "embedding_pq_codes",         # product-quantization codebooks+codes
-    "pq_adc_topk",                # PQ asymmetric-distance top-k search
-    "peak_concurrency_daily",     # sweep-line interval concurrency
-    "contiguous_doc_ids",         # two-phase distributed zipWithIndex
-]
-
 
 def _release_cached(spark) -> None:
     """Drop everything the previous query left pinned (VERDICT r5 #4).
@@ -214,19 +61,39 @@ def _release_cached(spark) -> None:
     full-registry run). ``catalog.clearCache()`` releases persist'd
     DataFrames but NOT localCheckpoint RDDs, which live outside the
     catalog — those need explicit unpersist via the persistent-RDD map.
+    A release that fails raises: a silent miss would skew every later
+    timing.
     """
     spark.catalog.clearCache()
-    try:
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist()
-    except Exception:
-        pass  # py4j map iteration is an internal API; never break the bench
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist()
 
 
-def _payload(spark, timings, cold, sf, n_runs, n_cold) -> dict:
+def _run(spark, fn, sf_dir: str, group: str) -> tuple[float, int, int]:
+    """One timed sample of query ``fn``: ``(seconds, jobs, stages)``.
+
+    The noop write runs under job group ``group``; the group is cleared
+    after the timer stops, its job and stage counts are read from the
+    status tracker, and the cached state the query left is released."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    seconds = time.perf_counter() - t0
+    sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = sum(
+        len(info.stageIds) for info in map(tracker.getJobInfo, jobs) if info
+    )
+    _release_cached(spark)
+    return seconds, len(jobs), stages
+
+
+def _payload(spark, timings, cold, sf, n_runs, n_cold, counts) -> dict:
     """The one-line JSON record. ``cpus`` echoes ``$SPARK_GRAFT_CPUS``;
     ``effective_parallelism`` and ``master`` are what the session really
-    ran at."""
+    ran at; ``counts`` holds each query's per-sample ``[jobs, stages]``."""
     sc = spark.sparkContext
     return {
         "metric": "headline_queries_total_wall_sec",
@@ -241,86 +108,66 @@ def _payload(spark, timings, cold, sf, n_runs, n_cold) -> dict:
         "cold_runs_per_query": n_cold if cold else 0,
         "effective_parallelism": sc.defaultParallelism,
         "master": sc.master,
+        "counts": counts,
     }
 
 
-def main() -> None:
+def _names(args: list[str], registered) -> list[str]:
+    """The queries to time: ``args`` in the order given, else every
+    registered name in registration order. An unknown name exits 2."""
+    unknown = [a for a in args if a not in registered]
+    if unknown:
+        print(f"bench.py: not registry queries: {unknown}", file=sys.stderr)
+        raise SystemExit(2)
+    return list(args) or list(registered)
+
+
+def main(argv: list[str] | None = None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    names = _names(sys.argv[1:] if argv is None else argv, qs)
+
     from wistia_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("wistia-etl-pipeline-spark-bench")
-    qs = entrymod.queries()
-    # Safety net: any registry query not yet curated into HEADLINE is
-    # appended automatically, so full-registry bench coverage (VERDICT
-    # r4 #7) cannot silently lapse when queries are added.
-    bench_names = list(HEADLINE) + [n for n in qs if n not in set(HEADLINE)]
-
     # warm-up: JVM/JIT/codegen + parquet footer caches
-    qs["gold_daily_rollup"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    _run(spark, qs["gold_daily_rollup"], sf_dir, "bench:warm-up")
 
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    samples: dict[str, list[float]] = {name: [] for name in bench_names}
-    for _round in range(n_runs):
-        for name in bench_names:
-            fn = qs[name]
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-            _release_cached(spark)
-    # METHODOLOGY (r6, VERDICT r5 #4): each query's leftover pinned
-    # state is released AFTER its timer stops, so a query still reuses
-    # its own persists internally but cannot cache-pollute its
-    # successors or cache-hit its own next round. "Warm" now means
-    # warm JVM/JIT/parquet-footers with a cold storage layer — within
-    # ~1.2x of the cold column by construction. (The r1-r5 warm series
-    # allowed plan-keyed cross-round cache hits AND suffered
-    # storage-pressure inflation; deltas documented in NOTES_r4/r6.)
-
-    timings = {
-        name: round(statistics.median(ts), 3) for name, ts in samples.items()
-    }
-
-    # Cold-cache companion column (VERDICT r4 #4/#7): extra passes with
-    # the cache cleared before EVERY query. The warm medians above stay
-    # the r1+ comparability series; the cold column records the honest
-    # per-run cost of persist/localCheckpoint-heavy queries (plan-keyed
-    # cache hits understate them by up to ~4x — the BENCH_SCALE
-    # methodology lesson). MEDIAN of interleaved passes since r8: the
-    # r7 single-sample column manufactured a phantom +23 % regression
-    # out of ~1 s of JIT/GC noise smeared across 20 small queries
-    # (VERDICT r7 — the judge's median-of-3 re-measurement reproduced
-    # the builder's numbers, not the single sample's). Disable with
-    # SPARK_GRAFT_BENCH_COLD=0; tune passes with
-    # SPARK_GRAFT_BENCH_COLD_RUNS (default 3).
-    cold: dict[str, float] = {}
-    n_cold = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_COLD_RUNS", "3")))
+    n_cold = 0
     if os.environ.get("SPARK_GRAFT_BENCH_COLD", "1") != "0":
-        cold_samples: dict[str, list[float]] = {name: [] for name in bench_names}
-        for _round in range(n_cold):
-            for name in bench_names:
-                _release_cached(spark)
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                cold_samples[name].append(time.perf_counter() - t0)
-        _release_cached(spark)
-        cold = {
-            name: round(statistics.median(ts), 3)
-            for name, ts in cold_samples.items()
+        n_cold = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_COLD_RUNS", "3")))
+    samples: dict[str, list[tuple[float, int, int]]] = {n: [] for n in names}
+    for i in range(n_runs + n_cold):
+        for name in names:
+            samples[name].append(_run(spark, qs[name], sf_dir, f"bench:{name}:{i}"))
+
+    def medians(rounds: slice) -> dict[str, float]:
+        return {
+            name: round(statistics.median(t for t, _, _ in ts[rounds]), 3)
+            for name, ts in samples.items()
         }
 
-    payload = json.dumps(_payload(spark, timings, cold, sf, n_runs, n_cold))
-    # The driver captures stdout-tail only (BENCH_r02 lost its first ~16
-    # per-query entries to truncation, VERDICT r2 #7) — persist the full
-    # JSON to disk so every round has complete per-query medians.
-    local_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    try:
-        with open(local_path, "w") as fh:
-            fh.write(payload + "\n")
-    except OSError:
-        pass  # read-only cwd must not break the driver's stdout contract
+    timings = medians(slice(None, n_runs))
+    cold = medians(slice(n_runs, None)) if n_cold else {}
+    counts = {name: [[j, s] for _, j, s in ts] for name, ts in samples.items()}
+    payload = json.dumps(
+        _payload(spark, timings, cold, sf, n_runs, n_cold, counts)
+    )
+    if set(names) == set(qs):
+        # Stdout may be kept tail-only (BENCH_r02 lost its first ~16
+        # per-query entries to truncation, VERDICT r2 #7) — persist the
+        # full JSON so every round has complete per-query medians.
+        local_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+        try:
+            with open(local_path, "w") as fh:
+                fh.write(payload + "\n")
+        except OSError:
+            pass  # a read-only cwd must not cost the stdout line
     print(payload)
 
 

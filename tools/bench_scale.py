@@ -10,8 +10,13 @@ near 2; the shuffle-bounded designs should sit near 1 (plus a
 data-independent constant that DEFLATES the small-SF exponent — so
 slopes are also reported with the smallest SF excluded).
 
-Usage: python tools/bench_scale.py  (serial — do not run concurrently
-with other Spark sessions; NOTES r3: contention skews medians 2×+).
+Usage: python tools/bench_scale.py [name ...]  (serial — do not run
+concurrently with other Spark sessions; NOTES r3: contention skews
+medians 2×+). With no names it sweeps every registered query in
+registration order, as ``bench.py`` does; each sample is one
+``bench._run`` (noop write, then the cached state released — every
+sample is cold-cache). ``pagerank_dup_graph_6r``, a 6-round twin of
+``pagerank_dup_graph``, runs only when named.
 
 ``--dir=zipf`` (VERDICT r9 #1) sweeps ``.scaledata/zipf/sf*`` instead —
 the growing-vocabulary documents family from
@@ -27,148 +32,20 @@ import json
 import math
 import os
 import statistics
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCALE_DIR = os.path.join(ROOT, ".scaledata")
 
-QUERIES = [
-    "dedup_minhash_lsh",
-    "dedup_simhash_pairs",
-    "dedup_clusters",
-    "corpus_curation_e2e",
-    "fuzzy_match_doc_titles",
-    "token_budget_selection",
-    "similarity_ivf_topk",
-    "embedding_near_dup",
-    "semantic_dedup",
-    "kmeans_embedding_clusters",
-    # r4 late additions: the new iterative / window / prefilter designs
-    "cdc_shared_passages",
-    "pagerank_dup_graph",
-    "decontaminate_bloom_prefilter",
-    # r5 additions (VERDICT r4 #4): the unmeasured heavy families.
-    # Relational tables come from gen_scaledata's r5 extension.
-    "pagerank_dup_graph_6r",      # 2x the rounds: per-round cost flat?
-    "frequent_token_pairs",
-    "data_quality_suite",
-    "customer_rfm_segments",      # exact global-ntile (the weak mark)
-    "customer_rfm_boundaries",    # approx-percentile scale path
-    "sketch_count_min_tokens",
-    "aqe_skew_join_rollup",
-    "streaming_gold_rollup",
-    # r5 continuation: graph density, containment, LM scoring, sketches,
-    # coreset/PQ, sweep-line, distributed zipWithIndex, rolling distinct
-    "triangle_count_dup_graph",
-    "containment_quote_match",
-    "bigram_lm_quality",
-    "rolling_distinct_visitors",
-    "coreset_kcenter_embeddings",
-    "embedding_pq_codes",
-    "pq_adc_topk",
-    "sketch_hll_visitors",
-    "sketch_hll_merge_daily",
-    "peak_concurrency_daily",
-    "contiguous_doc_ids",
-    "streaming_dedup_ingest",
-    # r5 continuation wave 2: graph walks/cores, KMV set algebra,
-    # item-item CF, attribution, retrieval index, stream-stream join,
-    # experimentation + drift + robust-stats aggregates
-    "random_walks_dup_graph",
-    "kcore_decomposition",
-    "sketch_kmv_distinct",
-    "item_cooccurrence_topk",
-    "attribution_position_weighted",
-    "inverted_index_postings",
-    "streaming_stream_join",
-    "experiment_ab_chisq",
-    "source_tv_divergence",
-    "mad_robust_outliers",
-    # r5 continuation wave 3: bitmap index, interval union, BFS layers,
-    # histogram quantile sketch
-    "bitmap_retention_rollup",
-    "interval_union_coverage",
-    "bfs_customer_supplier_reach",
-    "histogram_quantile_estimate",
-    # r5 third-continuation heavy families
-    "duplicate_span_removal",
-    "link_prediction_ra",
-    "heavy_hitters_mg",
-    "multimodal_audio_rms",
-    "event_pattern_match",
-    "rate_limit_audit",
-    "markov_stationary_events",
-    "order_fulfillment_snapshot",
-    "abc_revenue_classification",
-    "sketch_join_size_cms",
-    # r5 fourth-continuation: remaining graph/cluster/selection heavies
-    # plus the session's new families
-    "label_propagation_communities",
-    "dbscan_grid_embeddings",
-    "ann_dim_truncation_recall",
-    "greedy_max_coverage_docs",
-    "graph_assortativity",
-    "bootstrap_ci_hash",
-    "sssp_nation_graph",
-    "trade_edge_churn",
-    "kneser_ney_bigram_lm",
-    "spatial_grid_radius_join",
-    "audio_silence_segments",
-    "k_anonymity_audit",
-    "bom_hierarchy_rollup",
-    "experiment_cuped_adjustment",
-    "retrieval_ndcg_eval",
-    "cluster_silhouette_eval",
-    "knn_label_eval",
-    # r5 fifth-continuation: runtime-filter demos, DTW, calibration,
-    # rank-sum census, ACID delete/zorder, scene cuts, basket rules
-    "bloom_filter_join_prune",
-    "dpp_partition_prune_join",
-    "dtw_activity_profile",
-    "isotonic_calibration",
-    "rank_sum_ab_test",
-    "txlog_delete_user",
-    "txlog_zorder_optimize",
-    "multimodal_scene_cuts",
-    "assoc_rules_brands",
-    "ks_value_drift",
-    "revenue_gini_concentration",
-    "community_modularity_eval",
-    "shard_rebalance_audit",
-    "golden_record_users",
-    "cluster_aware_split",
-    "dedup_threshold_sensitivity",
-    "dataset_release_manifest",
-    "heaps_vocab_growth",
-    "ngram_overlap_eval",
-    "t_closeness_audit",
-    "mcnemar_paired_test",
-    "shapley_channel_attribution",
-    "xcorr_lead_lag",
-    "sql_scripting_surface",
-    "collation_surface",
-    "datasource_writer_sink",
-    "streaming_datasource_sink",
-    # r6: exact-vs-scale twin coverage for the PLANS.md crossover table
-    # (VERDICT r5 #7) — the exact/percentile variants whose scale twins
-    # are already curved
-    "exact_median_two_pass",
-    "trimmed_mean_census",
-    "percentile_engagement",
-    "approx_sketch_anchor",
-    # r6 batch 2: the heaviest remaining uncurved queries by the r5
-    # cold column (BENCH_LOCAL.json), flagship first
-    "pipeline_e2e_gold",
-    "streaming_session_windows",
-    "dedup_eval_metrics",
-    "ssjoin_prefix_filter",
-    "dedup_incremental_minhash",
-    "fk_integrity_audit",
-    "ngram_novelty_by_batch",
-    "decontaminate_ngrams",
-    "star_join_revenue",
-]
 N_RUNS = 3
+
+
+def _sf_dirs(root: str) -> list[tuple[float, str]]:
+    """``(sf, dir)`` for every ``sf*`` dir under ``root``, smallest first."""
+    return sorted(
+        (float(d[2:]), os.path.join(root, d))
+        for d in os.listdir(root)
+        if d.startswith("sf")
+    )
 
 
 def main() -> None:
@@ -180,6 +57,7 @@ def main() -> None:
     # (serial, cold) sweep.
     selected = [a for a in sys.argv[1:] if not a.startswith("-")]
     flags = {a for a in sys.argv[1:] if a.startswith("-")}
+    from bench import _run
     from wistia_etl_pipeline_spark.registry import queries
     from wistia_etl_pipeline_spark.session import get_spark
 
@@ -216,13 +94,9 @@ def main() -> None:
         if not selected:
             print("every registry query already has a BENCH_SCALE curve")
             return
-    run_queries = selected or QUERIES
+    run_queries = selected or list(queries())
 
-    sfs = sorted(
-        (float(d[2:]), os.path.join(scale_dir, d))
-        for d in os.listdir(scale_dir)
-        if d.startswith("sf")
-    )
+    sfs = _sf_dirs(scale_dir)
     # --add-sf=X: measure ONLY that SF for the selected queries and
     # merge the point into their existing curves (VERDICT r6 #5 — add
     # an sf2 point to already-curved families without re-paying their
@@ -283,32 +157,22 @@ def main() -> None:
         )
 
     qs["pagerank_dup_graph_6r"] = _pagerank_6r
-    # warm-up JVM/codegen on the smallest SF
-    qs[QUERIES[0]](spark, sfs[0][1]).write.format("noop").mode("overwrite").save()
+    # warm-up JVM/codegen as bench.py does, on the smallest SF of the
+    # fixed-vocab family (the --dir families lack the events table)
+    warm_dir = _sf_dirs(SCALE_DIR)[0][1]
+    _run(spark, qs["gold_daily_rollup"], warm_dir, "bench_scale:warm-up")
 
     medians: dict[str, dict[str, float]] = {n: {} for n in run_queries}
     for sf, d in sfs:
         for name in run_queries:
-            ts = []
-            for _ in range(N_RUNS):
-                t0 = time.perf_counter()
-                qs[name](spark, d).write.format("noop").mode("overwrite").save()
-                ts.append(time.perf_counter() - t0)
-                # exponents need INDEPENDENT measurements: persisted
-                # intermediates accumulated across 10 queries × 3 SFs
-                # in one JVM were measured distorting the sf1 numbers
-                # ~2× via GC pressure (GCLocker retry warnings) —
-                # every sample here is deliberately cold-cache.
-                # clearCache alone does NOT release localCheckpoint
-                # RDDs (the bench.py r6 lesson) — drop those too.
-                spark.catalog.clearCache()
-                try:
-                    for jrdd in (
-                        spark.sparkContext._jsc.getPersistentRDDs().values()
-                    ):
-                        jrdd.unpersist()
-                except Exception:
-                    pass
+            # exponents need INDEPENDENT measurements: persisted
+            # intermediates accumulated across queries × SFs in one JVM
+            # were measured distorting the sf1 numbers ~2× via GC
+            # pressure, so _run releases after every sample
+            ts = [
+                _run(spark, qs[name], d, f"bench_scale:{name}:sf{sf:g}")[0]
+                for _ in range(N_RUNS)
+            ]
             medians[name][f"{sf:g}"] = round(statistics.median(ts), 3)
             print(f"sf{sf:g} {name}: {medians[name][f'{sf:g}']:.3f}s", flush=True)
 

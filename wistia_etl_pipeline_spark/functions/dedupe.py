@@ -23,8 +23,6 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .graph import dup_clusters
@@ -32,9 +30,9 @@ from .text import dataset_split, normalize_text, quality_score, tokens
 
 #: Distinct-shingle cap for the MinHash digest-dictionary path (see
 #: _staged_bands). The dictionary must stay model-sized (it is
-#: broadcast); 65536 × num_hashes md5 strings ≈ 35 MB. Env-overridable
-#: for A/B measurement (0 disables the dictionary path entirely).
-_MINHASH_DICT_CAP = int(os.environ.get("SPARK_GRAFT_MINHASH_DICT_CAP", "65536"))
+#: broadcast); 65536 × num_hashes md5 strings ≈ 35 MB (0 would disable
+#: the dictionary path entirely).
+_MINHASH_DICT_CAP = 65536
 
 #: Minimum shingle OCCURRENCES before the dictionary engages. The
 #: dictionary path replaces per-occurrence digests with three extra
@@ -44,9 +42,7 @@ _MINHASH_DICT_CAP = int(os.environ.get("SPARK_GRAFT_MINHASH_DICT_CAP", "65536"))
 #: saving <1 s of digests, and at the 150k-doc grain it saved 60 s.
 #: Below this floor the inline path is simply cheaper regardless of
 #: redundancy.
-_MINHASH_DICT_MIN_OCC = int(
-    os.environ.get("SPARK_GRAFT_MINHASH_DICT_MIN_OCC", "2000000")
-)
+_MINHASH_DICT_MIN_OCC = 2_000_000
 
 #: (r12) The former SPARK_GRAFT_MINHASH_MAX_SH_PER_DOC pre-gate is
 #: gone: the exact occurrence count now rides the cache-materializing

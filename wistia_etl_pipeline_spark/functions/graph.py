@@ -39,7 +39,7 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev).where(F.col("src") != F.col("dst"))
 
 
-def _large_star(nbr: DataFrame, w: int | None = None) -> DataFrame:
+def _large_star(nbr: DataFrame) -> DataFrame:
     """(u, v>u) -> (v, m(u)) where m(u) = min(N(u) ∪ {u}).
 
     The per-node minimum rides a window over the SAME src partitioning
@@ -47,15 +47,7 @@ def _large_star(nbr: DataFrame, w: int | None = None) -> DataFrame:
     skew profile) but in ONE exchange instead of two. The output is NOT
     deduplicated: duplicate edges change no window minimum and collapse
     in small-star's round-final distinct, so per round only ONE dedup
-    exchange remains (r4 round-overhead work, VERDICT r3 #4).
-
-    ``w`` is the per-plan width hint (r13): an explicit ``repartition``
-    whose hash(src) partitioning the window reuses, so small frontiers
-    run their one exchange at ``w`` partitions without touching the
-    session conf (thread-safe — the τ-sensitivity query runs three
-    closures concurrently)."""
-    if w:
-        nbr = nbr.repartition(w, F.col("src"))
+    exchange remains (r4 round-overhead work, VERDICT r3 #4)."""
     m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
     return (
         nbr.withColumn("m", m)
@@ -65,24 +57,17 @@ def _large_star(nbr: DataFrame, w: int | None = None) -> DataFrame:
     )
 
 
-def _small_star(nbr: DataFrame, w: int | None = None) -> DataFrame:
+def _small_star(nbr: DataFrame) -> DataFrame:
     """(u, v<=u) -> (v, m(u)) ∪ (u, m(u)), m over the small neighbors.
 
     Same window-for-join trade as large-star; the single ``distinct``
     here is the round's one dedup pass (it bounds edge growth across
-    rounds — Kiveris et al. §3). ``w`` as in :func:`_large_star` (the
-    union ahead of the distinct destroys the window's partitioning, so
-    the dedup exchange gets its own width hint)."""
+    rounds — Kiveris et al. §3)."""
     small = nbr.where(F.col("dst") <= F.col("src"))
-    if w:
-        small = small.repartition(w, F.col("src"))
     with_m = small.withColumn("m", F.min("dst").over(Window.partitionBy("src")))
     moved = with_m.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     center = with_m.select("src", F.col("m").alias("dst"))
-    out = moved.unionByName(center).where(F.col("src") != F.col("dst"))
-    if w:
-        out = out.repartition(w, F.col("src"), F.col("dst"))
-    return out.distinct()
+    return moved.unionByName(center).where(F.col("src") != F.col("dst")).distinct()
 
 
 def connected_components(
@@ -141,20 +126,12 @@ def connected_components(
     cur = _symmetric(raw).distinct().localCheckpoint(eager=False)
     cur_sig = _materialize(cur)
 
-    # Every round's star shuffles run inside this loop (r12): below
-    # _SMALL_FRONTIER edges the per-round exchanges are
-    # coordination-bound at the session's partitioning — run them at 8
-    # partitions. Width is a PER-PLAN repartition hint (r13), not a
-    # session-conf scope: the star windows and the round-final distinct
-    # reuse the explicit hash partitioning, exchange-for-exchange the
-    # same plan as the old conf scope, but with no session-global
-    # mutation — which is what lets the τ-sensitivity query run its
-    # three closures as concurrent jobs on one session. Larger graphs
-    # pass w=None and keep session width + AQE coalescing.
-    w = 8 if cur_sig[0] <= _SMALL_FRONTIER else None
+    # The star shuffles take the session's partitioning, which AQE
+    # coalesces; no conf is touched, so the τ-sensitivity query can run
+    # its three closures as concurrent jobs on one session.
     for _ in range(max_iter):
         nxt = _small_star(
-            _symmetric(_large_star(_symmetric(cur), w)), w
+            _symmetric(_large_star(_symmetric(cur)))
         ).localCheckpoint(eager=False)
         nxt_sig = _materialize(nxt)
         changed = nxt_sig != cur_sig or not nxt.exceptAll(cur).isEmpty()
@@ -379,11 +356,11 @@ def triangle_stats(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id") -
 
 
 #: Edge count below which a graph frontier counts as small:
-#: connected_components and label_propagation run their per-round
-#: shuffles at 8 partitions, and kcore_peel broadcasts its probes.
-#: 16 B/edge × 5 M = ~80 MB, ~10 MB per reduce task — coordination-bound,
-#: not data-bound, at any wider fan-out. Larger frontiers keep the
-#: session partitioning (+ AQE coalescing).
+#: label_propagation runs its per-round shuffles at 8 partitions and
+#: kcore_peel broadcasts its probes. 16 B/edge × 5 M = ~80 MB, ~10 MB
+#: per reduce task — coordination-bound, not data-bound, at any wider
+#: fan-out. Larger frontiers keep the session partitioning (+ AQE
+#: coalescing).
 _SMALL_FRONTIER = 5_000_000
 
 #: Edge count below which label_propagation broadcasts the per-round

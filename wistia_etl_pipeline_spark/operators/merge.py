@@ -42,6 +42,7 @@ from __future__ import annotations
 import json
 from collections.abc import Sequence
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 
@@ -97,15 +98,17 @@ def merge_into_path(
     so the MERGE runs no schema-inference job; a target whose columns
     are not exactly the stage's raises ``ValueError`` instead of
     dropping a target-only column or reading a stage-only one as nulls.
+    The Hadoop filesystem is resolved once and serves every step.
     """
-    target = _read_target(spark, path, stage.schema)
+    fs = _fs(spark, path)
+    target = _read_target(spark, fs, path, stage.schema)
     tmp = path.rstrip("/") + "__tmp_merge"
     merge_plan(stage, target, keys).write.mode("overwrite").parquet(tmp)
-    _swap(spark, tmp, path)
+    _swap(spark, fs, tmp, path)
 
 
 def _read_target(
-    spark: SparkSession, path: str, schema: T.StructType
+    spark: SparkSession, fs, path: str, schema: T.StructType
 ) -> DataFrame | None:
     """The MERGE target at ``path`` read with ``schema``, or None when
     there is no table (no data file once :func:`_recover_swap` ran).
@@ -115,8 +118,8 @@ def _read_target(
     nulls and skip one the schema lacks, so the column names in the
     footer of one data file, read on the driver, must equal the
     schema's (data files: Spark's rule, no ``_`` or ``.`` prefix)."""
-    _recover_swap(spark, path)
-    data = _fs(spark, path).globStatus(_hpath(spark, path.rstrip("/") + "/[!_.]*"))
+    _recover_swap(spark, fs, path)
+    data = fs.globStatus(_hpath(spark, path.rstrip("/") + "/[!_.]*"))
     if not data:
         return None
     have, want = _footer_columns(spark, data[0]), [f.name for f in schema.fields]
@@ -133,9 +136,8 @@ def _footer_columns(spark: SparkSession, status) -> list[str]:
     """Top-level column names in the footer of the Parquet file behind
     the Hadoop ``status``, read on the driver (no Spark job): the schema
     Spark stored there, else Parquet's own field names."""
-    jvm = spark._jvm
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+    reader = _jclass(spark, "org.apache.parquet.hadoop.ParquetFileReader").open(
+        _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(
             status, spark._jsc.hadoopConfiguration()
         )
     )
@@ -149,8 +151,14 @@ def _footer_columns(spark: SparkSession, status) -> list[str]:
     return [f["name"] for f in json.loads(stored)["fields"]]
 
 
+def _jclass(spark: SparkSession, name: str) -> JavaClass:
+    """The JVM class ``name``, by its full name: no py4j round trip
+    (``spark._jvm.org.apache…`` spends one on every package segment)."""
+    return JavaClass(name, spark._jvm._gateway_client)
+
+
 def _hpath(spark: SparkSession, path: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(path)
+    return _jclass(spark, "org.apache.hadoop.fs.Path")(path)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -166,13 +174,13 @@ def _old(path: str) -> str:
     return path.rstrip("/") + "__old"
 
 
-def _recover_swap(spark: SparkSession, path: str) -> None:
+def _recover_swap(spark: SparkSession, fs, path: str) -> None:
     """Undo what a crash inside :func:`_swap` left behind; run before
-    reading ``path``. Target gone and ``__old`` present: the crash fell
-    between the two renames, so ``__old`` is the table — rename it
-    back. Both present: the new table landed, so drop ``__old``. A stale
-    temp directory needs nothing: the next write overwrites it."""
-    fs = _fs(spark, path)
+    reading ``path`` on its filesystem ``fs``. Target gone and
+    ``__old`` present: the crash fell between the two renames, so
+    ``__old`` is the table — rename it back. Both present: the new
+    table landed, so drop ``__old``. A stale temp directory needs
+    nothing: the next write overwrites it."""
     live, old = _hpath(spark, path), _hpath(spark, _old(path))
     if fs.exists(old):
         if fs.exists(live):
@@ -181,11 +189,11 @@ def _recover_swap(spark: SparkSession, path: str) -> None:
             fs.rename(old, live)
 
 
-def _swap(spark: SparkSession, tmp: str, path: str) -> None:
-    """Replace ``path`` by ``tmp``: rename the table aside, rename the
-    new one in, drop the old. Callers run :func:`_recover_swap` first,
-    so ``__old`` is never present on entry."""
-    fs = _fs(spark, path)
+def _swap(spark: SparkSession, fs, tmp: str, path: str) -> None:
+    """Replace ``path`` by ``tmp`` on their filesystem ``fs``: rename the
+    table aside, rename the new one in, drop the old. Callers run
+    :func:`_recover_swap` first, so ``__old`` is never present on
+    entry."""
     live, new, old = (_hpath(spark, p) for p in (path, tmp, _old(path)))
     if fs.exists(live):
         fs.rename(live, old)

@@ -124,9 +124,7 @@ STREAM_SHUFFLE_PARTITIONS = int(
 #: Source-bytes-per-state-partition target for the data-adaptive
 #: derivation below (r13, the VERDICT r12 item): 1 GiB of staged stream
 #: input per state partition.
-STREAM_STATE_BYTES_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_BYTES_PER_PARTITION", str(1 << 30))
-)
+STREAM_STATE_BYTES_PER_PARTITION = 1 << 30
 
 #: Upper clamp for the derived width — bounds the per-trigger
 #: state-store commit fan-out on a real cluster the same way the floor

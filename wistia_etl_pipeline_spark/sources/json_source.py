@@ -1,4 +1,4 @@
-"""Schema'd JSON sources — S1/S2 + the page-shape normalizer (SURVEY.md §2.1).
+"""Schema'd JSON sources — S1 + the page-shape normalizer (SURVEY.md §2.1).
 
 The reference reads bronze JSON with inference (silver.py:29,:73) and
 tolerates two page payload shapes via ``_page_shape`` (bronze.py:135-146):
@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..schemas import RAW_EVENT_SCHEMA, RAW_METADATA_SCHEMA
+from ..schemas import RAW_EVENT_SCHEMA
 
 #: Envelope keys accepted by the reference's ``_page_shape``
 #: (bronze.py:138-143), probed in this order.
@@ -35,17 +35,6 @@ def read_events_json(spark: SparkSession, path_glob: str) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path_glob)
-    )
-
-
-def read_metadata_json(spark: SparkSession, path: str) -> DataFrame:
-    """S2 — single-document JSON scan (silver.py:71-73)."""
-    return (
-        spark.read.schema(RAW_METADATA_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("multiLine", "true")
-        .json(path)
     )
 
 

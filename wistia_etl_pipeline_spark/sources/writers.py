@@ -6,7 +6,8 @@ stored-procedure postaction (silver.py:57-67, :95-107). Spark-first:
 
 - S4 → ``partitionBy("media_id","dt")`` on write gives the identical
   Hive-style ``k=v`` layout, written in parallel by executors.
-- S5 → ``mode("append").saveAsTable`` (or parquet path append).
+- S5 → an append commit on the transaction log
+  (``sources/txlog.TxLogTable.append``).
 - S6 (TRUNCATE stage → load → CALL upsert proc) → the in-engine
   MERGE: no stage table, no procedure hop (operators/merge.py).
 
@@ -38,33 +39,6 @@ def write_partitioned_json(
     executors instead of a driver loop."""
     out = df.repartition(*partition_by) if one_file_per_partition else df
     out.write.mode(mode).partitionBy(*partition_by).json(path)
-
-
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: Sequence[str] = (),
-    mode: str = "append",
-) -> None:
-    """S4 columnar variant — what bronze *should* be at 100 TB (JSON at
-    rest is a row-oriented tax on every downstream scan)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def append_table(df: DataFrame, table: str) -> None:
-    """S5 — append to a catalog table (replaces the JDBC fact load,
-    silver.py:57-67)."""
-    df.write.mode("append").saveAsTable(table)
-
-
-def overwrite_table(df: DataFrame, table: str) -> None:
-    """D2 — TRUNCATE+reload as an atomic overwrite (the stage-table
-    replacement pattern, silver.py:104)."""
-    df.write.mode("overwrite").saveAsTable(table)
 
 
 def write_bucketed(
@@ -115,16 +89,17 @@ def compact_parquet(
     """
     from ..operators.merge import _fs, _hpath, _recover_swap, _swap
 
-    _recover_swap(spark, path)
+    fs = _fs(spark, path)
+    _recover_swap(spark, fs, path)
     df = spark.read.parquet(path)
-    size = _fs(spark, path).getContentSummary(_hpath(spark, path)).getLength()
+    size = fs.getContentSummary(_hpath(spark, path)).getLength()
     n_files = max(1, int(size // (target_file_mb * 1024 * 1024)) + 1)
     tmp = path.rstrip("/") + "__tmp_compact"
     writer = df.repartition(n_files).write.mode("overwrite")
     if partition_by:
         writer = df.repartition(n_files, *partition_by).write.mode("overwrite").partitionBy(*partition_by)
     writer.parquet(tmp)
-    _swap(spark, tmp, path)
+    _swap(spark, fs, tmp, path)
     return n_files
 
 
