@@ -14,7 +14,6 @@ from wistia_etl_pipeline_spark.functions.bpe import (
     pretokenize,
     tokenize_word,
     tokenize_words,
-    train_bpe,
     train_merges,
 )
 
@@ -52,18 +51,6 @@ def test_tokenize_word_merges_by_rank_leftmost():
     assert tokenize_word("ababa", ranks) == ["ab", "aba"]
     assert tokenize_word("ab", ranks) == ["ab"]
     assert tokenize_word("ba", ranks) == ["b", "a"]
-
-
-def test_train_bpe_distributed_matches_driver_training(spark):
-    docs = spark.createDataFrame(
-        [Row(text="the cat sat on the mat"), Row(text="the cat ate the rat")]
-    )
-    got = train_bpe(docs, "text", n_merges=10)
-    freqs: dict[str, int] = {}
-    for r in docs.collect():
-        for w in pretokenize(r.text):
-            freqs[w] = freqs.get(w, 0) + 1
-    assert got == train_merges(freqs, 10)
 
 
 def test_tokenize_words_matches_pure_python(spark):

@@ -1,5 +1,5 @@
-"""Corpus dedup: minhash determinism + Jaccard agreement, LSH recall on
-exact dups, SimHash locality, exact dup groups."""
+"""Corpus dedup: LSH recall on exact dups, Jaccard, SimHash locality
+and its two implementations' agreement."""
 
 from __future__ import annotations
 
@@ -8,13 +8,11 @@ import hashlib
 from pyspark.sql import Row, functions as F
 
 from wistia_etl_pipeline_spark.functions.dedupe import (
-    exact_dup_groups,
     hamming64,
     jaccard,
     minhash_near_dup_pairs,
-    minhash_signature,
     shingles,
-    simhash64,
+    with_simhash_pandas,
 )
 
 
@@ -25,24 +23,6 @@ def test_shingles(spark):
     # shorter than k → empty, NOT a descending-sequence artifact
     short = spark.createDataFrame([Row(t="a b")])
     assert short.select(shingles(F.col("t"), k=3).alias("s")).collect()[0].s == []
-
-
-def test_minhash_matches_python_reference(spark):
-    text = "the quick brown fox jumps"
-    df = spark.createDataFrame([Row(t=text)])
-    sig = df.select(minhash_signature(F.col("t"), num_hashes=4).alias("s")).collect()[0].s
-    toks = set(text.split())
-    expected = [
-        min(hashlib.md5(f"{t}:{i}".encode()).hexdigest() for t in toks)
-        for i in range(4)
-    ]
-    assert sig == expected
-
-
-def test_minhash_identical_texts_identical_sigs(spark):
-    df = spark.createDataFrame([Row(i=1, t="x y z w"), Row(i=2, t="x y z w")])
-    sigs = [r.s for r in df.select(minhash_signature(F.col("t")).alias("s")).collect()]
-    assert sigs[0] == sigs[1]
 
 
 def test_minhash_lsh_finds_exact_dups(spark):
@@ -98,7 +78,7 @@ def test_simhash_locality(spark):
     near = base.replace("today", "tonight")
     far = "completely different vocabulary regarding spacecraft propulsion dynamics"
     df = spark.createDataFrame([Row(i="base", t=base), Row(i="near", t=near), Row(i="far", t=far)])
-    sigs = {r.i: r.s for r in df.select(F.col("i"), simhash64(F.col("t")).alias("s")).collect()}
+    sigs = {r.i: r.simhash for r in with_simhash_pandas(df, "t").collect()}
     pair = spark.createDataFrame([Row(a=sigs["base"], b=sigs["near"], c=sigs["far"])])
     row = pair.select(
         hamming64(F.col("a"), F.col("b")).alias("near_d"),
@@ -106,16 +86,6 @@ def test_simhash_locality(spark):
     ).collect()[0]
     assert row.near_d < row.far_d  # similar texts → closer signatures
     assert sigs["base"] != 0
-
-
-def test_exact_dup_groups(spark):
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text="Same  Text"), Row(doc_id=2, text="same text"),
-         Row(doc_id=3, text="other")]
-    )
-    groups = exact_dup_groups(df, "doc_id", "text").collect()
-    assert len(groups) == 1
-    assert groups[0].dup_count == 2 and groups[0].ids == [1, 2]
 
 
 def test_simhash_pandas_matches_expression(spark):

@@ -73,25 +73,6 @@ def test_merge_into_path_refuses_mismatched_columns(spark, tmp_path, extra):
     assert len(spark.read.parquet(path).columns) == (3 if extra == "target" else 2)
 
 
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from wistia_etl_pipeline_spark.sources.writers import compact_parquet
-
-    path = str(tmp_path / "frag")
-    # fragment the table: 10 tiny appends (like 10 MERGE cycles)
-    for i in range(10):
-        spark.createDataFrame([Row(media_id=f"m{i}", v=i)]).repartition(3).write.mode(
-            "append"
-        ).parquet(path)
-    import pathlib
-
-    before = len(list(pathlib.Path(path).rglob("*.parquet")))
-    rows_before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    n = compact_parquet(spark, path, target_file_mb=128)
-    after = len(list(pathlib.Path(path).rglob("*.parquet")))
-    assert after <= n < before
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows_before
-
-
 @pytest.mark.parametrize("protocol", ["swap", "txlog"])
 def test_both_commit_protocols_write_one_merge_plan(spark, tmp_path, protocol):
     """merge_into_path and TxLogTable.merge write the same MERGE plan:
@@ -155,15 +136,4 @@ def test_merge_swap_crash_at_every_step_converges_on_replay(spark, tmp_path, cra
         spark, tmp_path, crash_swap, "merge",
         lambda path: merge_into_path(spark, base, path, ["k"]),
         lambda path: merge_into_path(spark, delta, path, ["k"]),
-    )
-
-
-def test_compact_swap_crash_at_every_step_converges_on_replay(spark, tmp_path, crash_swap):
-    from wistia_etl_pipeline_spark.sources.writers import compact_parquet
-
-    base = spark.createDataFrame([(k, f"v{k}") for k in range(100)], "k long, v string")
-    _crash_then_replay(
-        spark, tmp_path, crash_swap, "compact",
-        lambda path: base.repartition(4).write.parquet(path),
-        lambda path: compact_parquet(spark, path),
     )

@@ -1,5 +1,5 @@
 """Multimodal plumbing: Arrow-batched decode, error isolation, frame
-sampling, resize passthrough."""
+sampling."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from wistia_etl_pipeline_spark.functions.multimodal import (
     decode_media_meta,
     encode_fake_payload,
     frame_sample_plan,
-    resize_stub,
 )
 
 
@@ -44,28 +43,6 @@ def test_frame_sample_plan(spark):
     assert by_media["a"] == [0]
     assert by_media["b"] == [0, 30, 60, 90]
     assert "c" not in by_media  # corrupt rows dropped before fan-out
-
-
-def test_resize_passthrough_shape(spark):
-    out = resize_stub(_media(spark), width=224, height=224).collect()
-    assert len(out) == 3
-    assert all(r.width == 224 and r.height == 224 for r in out)
-    assert all(isinstance(bytes(r.payload), bytes) for r in out)
-
-
-def test_extract_features_shape_and_determinism(spark):
-    from wistia_etl_pipeline_spark.functions.multimodal import extract_features
-
-    media = _media(spark)
-    f1 = {r.media_id: r.feature for r in extract_features(media, dim=16).collect()}
-    f2 = {r.media_id: r.feature for r in extract_features(media, dim=16).collect()}
-    assert f1 == f2  # deterministic
-    assert all(len(v) == 16 for v in f1.values())
-    import math
-
-    for v in f1.values():
-        assert abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-5  # unit norm
-    assert f1["a"] != f1["b"]  # payload-dependent
 
 
 def test_frame_cut_positions_kernel(spark):

@@ -1,6 +1,6 @@
-"""End-to-end: bronze page files (both shapes) → normalize → flatten →
-dedup → gold rollup, with hand-computed expectations (SURVEY.md §5.3),
-plus the S4 partitioned layout."""
+"""End-to-end: API pages (both shapes) → normalize → flatten → dedup →
+gold rollup, with hand-computed expectations (SURVEY.md §5.3), plus
+corrupt-record isolation under the raw event schema."""
 
 from __future__ import annotations
 
@@ -9,8 +9,9 @@ import json
 from wistia_etl_pipeline_spark.operators.dedup import dedup_exact
 from wistia_etl_pipeline_spark.operators.flatten import flatten_events
 from wistia_etl_pipeline_spark.operators.rollup import media_daily_agg
-from wistia_etl_pipeline_spark.sources.json_source import normalize_pages
-from wistia_etl_pipeline_spark.sources.writers import write_partitioned_json
+from wistia_etl_pipeline_spark.schemas import RAW_EVENT_SCHEMA
+from wistia_etl_pipeline_spark.session import arrow_local_df
+from wistia_etl_pipeline_spark.sources.rest_source import page_shape
 
 
 def _event(key, ts, pv, visitor, media="m1"):
@@ -25,9 +26,7 @@ def _event(key, ts, pv, visitor, media="m1"):
     }
 
 
-def test_bronze_to_gold(spark, tmp_path):
-    bronze = tmp_path / "bronze" / "media_id=m1" / "dt=2024-01-01"
-    bronze.mkdir(parents=True)
+def test_bronze_to_gold(spark):
     # page 1: envelope shape; page 2: bare array; event e2 duplicated across pages
     page1 = {
         "data": [
@@ -40,11 +39,10 @@ def test_bronze_to_gold(spark, tmp_path):
         _event("e2", "2024-01-01T11:00:00Z", 0.5, "v1"),  # replayed duplicate
         _event("e3", "2024-01-01T12:00:00+00:00", 1.0, "v2"),
     ]
-    (bronze / "events_page=1.json").write_text(json.dumps(page1))
-    (bronze / "events_page=2.json").write_text(json.dumps(page2))
-
-    raw = normalize_pages(spark, str(bronze / "events_page*.json"))
-    assert raw.count() == 4  # both shapes parsed
+    rows = [r for page in (page1, page2) for r in page_shape(page)[0]]
+    assert len(rows) == 4  # both shapes parsed
+    # framed as BatchPipeline frames a pull
+    raw = arrow_local_df(spark, rows, RAW_EVENT_SCHEMA)
 
     fact = dedup_exact(flatten_events(raw), ["event_key"])
     assert fact.count() == 3  # replay removed
@@ -61,37 +59,13 @@ def test_bronze_to_gold(spark, tmp_path):
     assert abs(g.hours_watched - 3.0) < 1e-9        # (0+0.5+1)*7200/3600
 
 
-def test_partitioned_write_layout(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("m1", "2024-01-01", "e1"), ("m1", "2024-01-02", "e2"),
-         ("m2", "2024-01-01", "e3")],
-        "media_id string, dt string, event_key string",
-    )
-    out = str(tmp_path / "out")
-    write_partitioned_json(df, out)
-    # Hive-style k=v layout, identical to bronze.py:117-129's hand-built keys
-    found = {
-        str(p.relative_to(out)).rsplit("/", 1)[0]
-        for p in __import__("pathlib").Path(out).rglob("*.json")
-    }
-    assert found == {"media_id=m1/dt=2024-01-01", "media_id=m1/dt=2024-01-02",
-                     "media_id=m2/dt=2024-01-01"}
-    back = spark.read.json(out)
-    assert back.count() == 3
-    assert {r.media_id for r in back.collect()} == {"m1", "m2"}
-
-
 def test_corrupt_records_are_isolated(spark, tmp_path):
     """A malformed JSON line lands in _corrupt_record instead of
     failing the scan (PERMISSIVE, SURVEY.md S1 prod notes)."""
-    from pyspark.sql import functions as F
-
-    from wistia_etl_pipeline_spark.sources.json_source import read_events_json
-
     p = tmp_path / "events.json"
     good = _event("ok1", "2024-01-01T10:00:00Z", 0.5, "v1")
     p.write_text(json.dumps(good) + "\n{this is not json\n")
-    df = read_events_json(spark, str(p)).cache()
+    df = spark.read.schema(RAW_EVENT_SCHEMA).json(str(p)).cache()
     try:
         rows = df.collect()
         assert len(rows) == 2

@@ -123,52 +123,6 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir):
     assert joined.count() > 0
 
 
-def test_sorted_write_enables_row_group_skipping(spark, sf_dir, tmp_path):
-    """Sorted writes → disjoint tight row-group min/max on the sort key
-    (the data-skipping mechanism); unsorted writes → every row group
-    spans ~the whole domain."""
-    import pyarrow.parquet as pq
-
-    from wistia_etl_pipeline_spark.session import load_table
-    from wistia_etl_pipeline_spark.sources.writers import write_sorted_parquet
-
-    events = load_table(spark, sf_dir, "events").select("ts", "value")
-    sorted_path = str(tmp_path / "sorted")
-    unsorted_path = str(tmp_path / "unsorted")
-    # tiny block size → several row groups even at test scale
-    write_sorted_parquet(events.repartition(1), sorted_path, sort_cols=["ts"],
-                         **{"parquet.block.size": str(32 * 1024)})
-    (events.repartition(1).sortWithinPartitions("value").write
-     .option("parquet.block.size", str(32 * 1024)).parquet(unsorted_path))
-
-    def rg_spans(path, col="ts"):
-        import pathlib
-
-        f = next(pathlib.Path(path).glob("*.parquet"))
-        meta = pq.ParquetFile(str(f)).metadata
-        spans = []
-        for i in range(meta.num_row_groups):
-            rg = meta.row_group(i)
-            for j in range(rg.num_columns):
-                c = rg.column(j)
-                if c.path_in_schema == col and c.statistics is not None:
-                    spans.append((c.statistics.min, c.statistics.max))
-        return spans
-
-    s_spans = rg_spans(sorted_path)
-    u_spans = rg_spans(unsorted_path)
-    if len(s_spans) < 2:
-        import pytest
-
-        pytest.skip("single row group at this SF — nothing to skip")
-    domain = max(m for _, m in u_spans) - min(m for m, _ in u_spans)
-    avg_sorted = sum(b - a for a, b in s_spans) / len(s_spans)
-    avg_unsorted = sum(b - a for a, b in u_spans) / len(u_spans)
-    # sorted row groups cover disjoint slivers; unsorted ones cover ~all
-    assert avg_sorted < 0.5 * avg_unsorted
-    assert avg_unsorted > 0.9 * domain
-
-
 def test_simhash_pairs_join_is_equi_on_bands(spark, sf_dir):
     """SimHash pair production must band-join, never compare all pairs."""
     plan = _plan(spark, sf_dir, "dedup_simhash_pairs")
@@ -195,52 +149,6 @@ def test_correlated_subquery_decorrelates(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "HashAggregate" in plan
-
-
-def test_zorder_write_tightens_both_columns(spark, sf_dir, tmp_path):
-    """Morton-key clustering must keep row-group min/max tight on BOTH
-    cluster columns; a single-column sort only helps its own column."""
-    import pathlib
-
-    import pyarrow.parquet as pq
-
-    from wistia_etl_pipeline_spark.session import load_table
-    from wistia_etl_pipeline_spark.sources.writers import (
-        write_sorted_parquet,
-        write_zorder_parquet,
-    )
-
-    events = load_table(spark, sf_dir, "events").select("ts", "value")
-    zpath, spath = str(tmp_path / "z"), str(tmp_path / "s")
-    opts = {"parquet.block.size": str(32 * 1024)}
-    write_zorder_parquet(events, zpath, cluster_cols=["ts", "value"],
-                         n_files=1, **opts)
-    write_sorted_parquet(events.repartition(1), spath, sort_cols=["ts"], **opts)
-
-    def avg_span(path, col):
-        spans = []
-        for f in pathlib.Path(path).glob("*.parquet"):
-            meta = pq.ParquetFile(str(f)).metadata
-            for i in range(meta.num_row_groups):
-                rg = meta.row_group(i)
-                for j in range(rg.num_columns):
-                    c = rg.column(j)
-                    if c.path_in_schema == col and c.statistics is not None:
-                        spans.append(c.statistics.max - c.statistics.min)
-        return sum(spans) / len(spans), len(spans)
-
-    z_val, n = avg_span(zpath, "value")
-    if n < 4:
-        pytest.skip("too few row groups at this SF")
-    s_val, _ = avg_span(spath, "value")
-    z_ts, _ = avg_span(zpath, "ts")
-    s_ts, _ = avg_span(spath, "ts")
-    # ts-sorted layout leaves `value` row groups spanning ~the domain;
-    # z-order keeps both materially tighter than the worst case
-    assert z_val < 0.75 * s_val
-    # and ts skipping is retained within a bounded factor of the
-    # dedicated single-column sort
-    assert z_ts < 8 * s_ts
 
 
 def test_q7_date_window_pushes_to_scan(spark, sf_dir):

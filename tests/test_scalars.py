@@ -14,24 +14,10 @@ def _one(spark, col, **row):
     return spark.createDataFrame([Row(**row)]).select(col.alias("v")).collect()[0].v
 
 
-def test_iso_to_timestamp_both_forms(spark):
-    a = _one(spark, S.iso_to_timestamp(F.col("t")), t="2024-01-02T03:04:05Z")
-    b = _one(spark, S.iso_to_timestamp(F.col("t")), t="2024-01-02T03:04:05+00:00")
-    assert a == b == dt.datetime(2024, 1, 2, 3, 4, 5)
-
-
-def test_utc_date_str(spark):
-    got = _one(spark, S.utc_date_str(F.col("t")), t=dt.datetime(2024, 3, 4, 23, 59))
-    assert got == "2024-03-04"  # bronze.py:120 partition-value format
-
-
-def test_watermark_gt_and_max(spark):
+def test_max_timestamp(spark):
     df = spark.createDataFrame(
         [Row(ts=dt.datetime(2024, 1, d)) for d in (1, 5, 3)]
     )
-    wm = F.lit("2024-01-02 00:00:00").cast("timestamp")
-    kept = df.filter(S.watermark_gt("ts", wm)).collect()
-    assert {r.ts.day for r in kept} == {5, 3}
     hwm = df.agg(S.max_timestamp("ts").alias("m")).collect()[0].m
     assert hwm.day == 5
 
@@ -41,15 +27,6 @@ def test_json_extract_strip_cast(spark):
     assert v == "abc"
     assert _one(spark, S.strip(F.col("t")), t="  x  ") == "x"
     assert _one(spark, S.to_double(F.col("t")), t="123.5") == 123.5
-
-
-def test_page_url(spark):
-    got = _one(
-        spark,
-        S.page_url(F.lit("https://api.wistia.com/v1/events"), 3, 50),
-        t="ignored",
-    )
-    assert got == "https://api.wistia.com/v1/events?page=3&per_page=50"
 
 
 def test_coalesce_updated_order(spark):

@@ -52,3 +52,34 @@ def test_apply_runtime_confs_names_refused_keys(spark, monkeypatch):
         monkeypatch.undo()
         S.apply_runtime_confs(spark)
 
+
+
+def test_ship_package_raises_and_marks_only_after_success(monkeypatch):
+    """A context that refuses the package zip fails the call loudly and
+    stays unmarked, so the next call ships again; once shipped, a
+    context is not shipped twice."""
+
+    class _Context:
+        def __init__(self):
+            self.refuse = True
+            self.added = []
+
+        def addPyFile(self, path):
+            if self.refuse:
+                raise RuntimeError("addPyFile refused")
+            self.added.append(path)
+
+    class _Session:
+        def __init__(self, sc):
+            self.sparkContext = sc
+
+    monkeypatch.setattr(S, "_SHIPPED", set())
+    sc = _Context()
+    with pytest.raises(RuntimeError, match="addPyFile refused"):
+        S._ship_package(_Session(sc))
+    assert id(sc) not in S._SHIPPED
+
+    sc.refuse = False
+    S._ship_package(_Session(sc))
+    S._ship_package(_Session(sc))
+    assert len(sc.added) == 1 and id(sc) in S._SHIPPED

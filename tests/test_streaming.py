@@ -1,5 +1,5 @@
 """ST1-ST6: incremental file discovery via checkpoint, streaming dedup,
-idempotent foreachBatch merge, windowed rollup."""
+the idempotent foreachBatch MERGE sink and its crash convergence."""
 
 from __future__ import annotations
 
@@ -8,12 +8,10 @@ from collections import Counter
 
 import pytest
 
-from wistia_etl_pipeline_spark.streaming.pipeline import (
-    deduped_silver_stream,
-    read_bronze_stream,
-    run_silver_stream,
-    streaming_daily_rollup,
-)
+from wistia_etl_pipeline_spark.operators.flatten import flatten_events
+from wistia_etl_pipeline_spark.schemas import RAW_EVENT_SCHEMA
+from wistia_etl_pipeline_spark.sources.txlog import TxLogTable
+from wistia_etl_pipeline_spark.streaming.pipeline import merge_batch_sink
 
 
 def _event(key, ts, pv=0.5, visitor="v1"):
@@ -32,6 +30,25 @@ def _write_jsonl(path, events):
     path.write_text("\n".join(json.dumps(e) for e in events))
 
 
+def _bronze_stream(spark, bronze, max_files=None):
+    reader = spark.readStream.schema(RAW_EVENT_SCHEMA)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.json(str(bronze))
+
+
+def _merge_silver(spark, bronze, target, ckpt, max_files=None):
+    """bronze JSON → flatten → ``merge_batch_sink`` by event_key, one
+    bounded (availableNow) run; returns the started query."""
+    return (
+        flatten_events(_bronze_stream(spark, bronze, max_files))
+        .writeStream.foreachBatch(merge_batch_sink(target, ["event_key"]))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def test_stream_merge_resume_and_dedup(spark, tmp_path):
     bronze = tmp_path / "bronze"
     target = str(tmp_path / "silver")
@@ -42,9 +59,9 @@ def test_stream_merge_resume_and_dedup(spark, tmp_path):
         _event("e2", "2024-01-01T11:00:00Z"),
         _event("e2", "2024-01-01T11:00:00Z"),  # in-file replay
     ])
-    q = run_silver_stream(spark, str(bronze), target, ckpt)
+    q = _merge_silver(spark, bronze, target, ckpt)
     q.awaitTermination(120)
-    got = spark.read.parquet(target)
+    got = TxLogTable(target).read(spark)
     assert {r.event_key for r in got.collect()} == {"e1", "e2"}
     assert got.count() == 2
 
@@ -54,48 +71,23 @@ def test_stream_merge_resume_and_dedup(spark, tmp_path):
         _event("e2", "2024-01-01T11:00:00Z"),  # cross-run replay
         _event("e3", "2024-01-01T12:00:00Z"),
     ])
-    q = run_silver_stream(spark, str(bronze), target, ckpt)
+    q = _merge_silver(spark, bronze, target, ckpt)
     q.awaitTermination(120)
-    got = spark.read.parquet(target)
+    got = TxLogTable(target).read(spark)
     assert {r.event_key for r in got.collect()} == {"e1", "e2", "e3"}
     assert got.count() == 3
 
     # third run with nothing new: a no-op, table unchanged (idempotent)
-    q = run_silver_stream(spark, str(bronze), target, ckpt)
+    q = _merge_silver(spark, bronze, target, ckpt)
     q.awaitTermination(120)
-    assert spark.read.parquet(target).count() == 3
-
-
-def test_streaming_daily_rollup(spark, tmp_path):
-    bronze = tmp_path / "bronze"
-    _write_jsonl(bronze / "f1.json", [
-        _event("e1", "2024-01-01T10:00:00Z", pv=0.0, visitor="a"),
-        _event("e2", "2024-01-01T11:00:00Z", pv=1.0, visitor="b"),
-        _event("e3", "2024-01-02T09:00:00Z", pv=0.5, visitor="a"),
-    ])
-    stream = deduped_silver_stream(read_bronze_stream(spark, str(bronze)))
-    rollup = streaming_daily_rollup(stream, watermark_delay=None)  # already watermarked
-    q = (
-        rollup.writeStream.format("memory")
-        .queryName("gold_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {str(r.dt): r for r in spark.sql("select * from gold_stream").collect()}
-    assert rows["2024-01-01"].load_count == 2
-    assert rows["2024-01-01"].play_count == 1
-    assert rows["2024-01-01"].visitors == 2
-    assert rows["2024-01-02"].load_count == 1
-    assert abs(rows["2024-01-01"].play_rate - 0.5) < 1e-12
+    assert TxLogTable(target).read(spark).count() == 3
 
 
 def test_streaming_gold_merge_converges(spark, tmp_path):
-    """Incremental gold maintenance: the windowed rollup merged into a
-    parquet gold table via foreachBatch, across two micro-batches —
+    """Incremental gold maintenance: an update-mode daily rollup merged
+    into a gold table via foreachBatch, across two micro-batches —
     converges to the batch-computed result (ST4/ST6 + A7)."""
-    from wistia_etl_pipeline_spark.streaming.pipeline import merge_batch_sink
+    from pyspark.sql import functions as F
 
     bronze = tmp_path / "bronze"
     _write_jsonl(bronze / "f1.json", [
@@ -107,10 +99,14 @@ def test_streaming_gold_merge_converges(spark, tmp_path):
         _event("e4", "2024-01-02T09:00:00Z", pv=0.5, visitor="a"),
     ])
     gold_path = str(tmp_path / "gold")
-    stream = deduped_silver_stream(
-        read_bronze_stream(spark, str(bronze), max_files_per_trigger=1)
+    rollup = (
+        flatten_events(_bronze_stream(spark, bronze, max_files=1))
+        .groupBy("media_id", F.to_date("received_at").alias("dt"))
+        .agg(
+            F.count(F.lit(1)).alias("load_count"),
+            F.count(F.when(F.col("percent_viewed") > 0.0, 1)).alias("play_count"),
+        )
     )
-    rollup = streaming_daily_rollup(stream, watermark_delay=None)
     q = (
         rollup.writeStream.foreachBatch(merge_batch_sink(gold_path, ["media_id", "dt"]))
         .outputMode("update")
@@ -119,7 +115,7 @@ def test_streaming_gold_merge_converges(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
-    gold = {str(r.dt): r for r in spark.read.parquet(gold_path).collect()}
+    gold = {str(r.dt): r for r in TxLogTable(gold_path).read(spark).collect()}
     # day 1 was updated across batches: batch2's refreshed aggregate
     # replaced batch1's via the (media_id, dt) merge
     assert gold["2024-01-01"].load_count == 3
@@ -127,35 +123,22 @@ def test_streaming_gold_merge_converges(spark, tmp_path):
     assert gold["2024-01-02"].load_count == 1
 
 
-def test_streaming_merge_acid_sink(spark, sf_dir, tmp_path):
+def test_streaming_merge_acid_sink(spark, tmp_path):
     """foreachBatch MERGE through the transaction-log table: batches
     land as committed versions; a reader pinned before the stream ran
-    still re-collects its snapshot afterwards (no read outage)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from wistia_etl_pipeline_spark.sources.txlog import TxLogTable
-    from wistia_etl_pipeline_spark.streaming.pipeline import run_silver_stream
-
-    bronze = str(tmp_path / "bronze")
+    again still re-collects its snapshot afterwards (no read outage)."""
+    bronze = tmp_path / "bronze"
     target = str(tmp_path / "silver_tx")
+    ckpt = str(tmp_path / "ck1")
     events = [
         {"event_key": f"e{i}", "received_at": f"2024-01-01T0{i}:00:00Z",
          "percent_viewed": 0.5, "visitor_key": f"v{i}", "media_id": "m1",
          "media_name": "M1"}
         for i in range(4)
     ]
-    import json as _json
-    import os
+    _write_jsonl(bronze / "b1.json", events[:2])
 
-    os.makedirs(bronze)
-    with open(os.path.join(bronze, "b1.json"), "w") as f:
-        for e in events[:2]:
-            f.write(_json.dumps(e) + "\n")
-
-    q = run_silver_stream(spark, bronze, target, str(tmp_path / "ck1"), acid=True)
-    q.awaitTermination(60)
+    _merge_silver(spark, bronze, target, ckpt).awaitTermination(60)
     table = TxLogTable(target)
     v_after_first = table.current_version()
     assert v_after_first is not None  # at least one committed version
@@ -163,12 +146,10 @@ def test_streaming_merge_acid_sink(spark, sf_dir, tmp_path):
     assert pinned.count() == 2
 
     # second batch (new file + a replayed duplicate) through a fresh run
-    with open(os.path.join(bronze, "b2.json"), "w") as f:
-        for e in events[1:]:
-            f.write(_json.dumps(e) + "\n")
-    q2 = run_silver_stream(spark, bronze, target, str(tmp_path / "ck1"), acid=True)
-    q2.awaitTermination(60)
+    _write_jsonl(bronze / "b2.json", events[1:])
+    _merge_silver(spark, bronze, target, ckpt).awaitTermination(60)
 
+    assert table.current_version() > v_after_first
     latest = table.read(spark)
     assert latest.count() == 4  # replayed e1 converged, e2/e3 added
     assert pinned.count() == 2  # pinned snapshot still re-collects
@@ -245,61 +226,6 @@ def test_observe_metrics_on_batch(spark, sf_dir):
     assert obs.get["null_values"] == 0
 
 
-def test_streaming_session_windows_match_batch(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from wistia_etl_pipeline_spark.streaming.pipeline import streaming_session_rollup
-
-    bronze = tmp_path / "bronze_sess"
-    # visitor a: two sessions (10:00-10:30 merged by <60min gaps; 14:00
-    # alone); visitor b: one. Events deliberately out of order — the
-    # session merge must absorb late rows within the watermark.
-    _write_jsonl(bronze / "f1.json", [
-        _event("e1", "2024-01-01T10:00:00Z", visitor="a"),
-        _event("e3", "2024-01-01T14:00:00Z", visitor="a"),
-        _event("e2", "2024-01-01T10:30:00Z", visitor="a"),
-        _event("e4", "2024-01-01T11:00:00Z", visitor="b"),
-        # sentinel far in the future: advances the global watermark past
-        # every real session so append mode finalizes them all.
-        _event("flush", "2024-01-10T00:00:00Z", visitor="zz_flush"),
-    ])
-    stream = deduped_silver_stream(
-        read_bronze_stream(spark, str(bronze)), watermark_delay="1 hour"
-    )
-    sessions = streaming_session_rollup(stream, watermark_delay=None)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sess_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.visitor_key, str(r.session_start), r.n_events)
-        for r in spark.sql(
-            "select * from sess_stream where visitor_key != 'zz_flush'"
-        ).collect()
-    }
-    assert got == {
-        ("a", "2024-01-01 10:00:00", 2),
-        ("a", "2024-01-01 14:00:00", 1),
-        ("b", "2024-01-01 11:00:00", 1),
-    }
-
-    # Batch over the same files with the same session_window call must
-    # agree exactly (the backfill == live contract).
-    batch = (
-        spark.read.schema(stream.schema).json(str(bronze))
-        .groupBy("visitor_key", F.session_window("received_at", "60 minutes").alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .where(F.col("visitor_key") != "zz_flush")
-    )
-    got_batch = {
-        (r.visitor_key, str(r.sw.start), r.n_events) for r in batch.collect()
-    }
-    assert got_batch == got
-
-
 def test_rate_source_merge_exactly_once_across_crash_and_resume(spark, tmp_path):
     """Broker-shaped exactly-once demo (VERDICT r3 #6): an unbounded
     deterministic source (rate-micro-batch) drives the merge sink; the
@@ -313,8 +239,6 @@ def test_rate_source_merge_exactly_once_across_crash_and_resume(spark, tmp_path)
     import time as _time
 
     from pyspark.sql import functions as F
-
-    from wistia_etl_pipeline_spark.streaming.pipeline import merge_batch_sink
 
     target = str(tmp_path / "gold")
     ckpt = str(tmp_path / "ckpt")
@@ -357,7 +281,7 @@ def test_rate_source_merge_exactly_once_across_crash_and_resume(spark, tmp_path)
     assert crashed["done"], "injected crash did not fire"
     # batch 2's rows ARE in the target (written before the crash) but
     # its offset is uncommitted — the replay-overlap condition
-    assert spark.read.parquet(target).count() >= 3 * rows_per_batch
+    assert TxLogTable(target).read(spark).count() >= 3 * rows_per_batch
 
     q2 = start()
     deadline = _time.time() + 120
@@ -369,7 +293,7 @@ def test_rate_source_merge_exactly_once_across_crash_and_resume(spark, tmp_path)
     q2.stop()
     q2.awaitTermination(60)
 
-    got = spark.read.parquet(target)
+    got = TxLogTable(target).read(spark)
     n = got.count()
     assert n >= 6 * rows_per_batch
     # exactly-once: every key once, no gap below the high-water mark
@@ -402,7 +326,7 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
         _event("e3", "2024-01-02T09:00:00Z"),  # next day, state long expired
     ])
 
-    stream = read_bronze_stream(spark, str(bronze))
+    stream = spark.readStream.schema(RAW_EVENT_SCHEMA).json(str(bronze))
     deduped = (
         stream.select("event_key", F.col("received_at").cast("timestamp").alias("ts"))
         .withWatermark("ts", "1 hour")
@@ -788,7 +712,7 @@ def test_stream_state_partitions_unknown_size_floors(spark, tmp_path):
     spark.range(1000).write.parquet(src)
     assert S.stream_state_partitions(spark, stats_less) == S.STREAM_SHUFFLE_PARTITIONS
     assert (
-        S.stream_state_partitions(spark, [src, stats_less])
+        S.stream_state_partitions(spark, [spark.read.parquet(src), stats_less])
         == S.STREAM_SHUFFLE_PARTITIONS
     )
 
@@ -804,19 +728,16 @@ def test_stream_state_partitions_derivation(spark, tmp_path):
 
     src = str(tmp_path / "src")
     spark.range(1000).write.parquet(src)
+    src_df = spark.read.parquet(src)
 
     # no source / tiny source -> static floor
     assert S.stream_state_partitions(spark, None) == S.STREAM_SHUFFLE_PARTITIONS
     assert (
-        S.stream_state_partitions(spark, src) == S.STREAM_SHUFFLE_PARTITIONS
+        S.stream_state_partitions(spark, src_df) == S.STREAM_SHUFFLE_PARTITIONS
     )
-    # a DataFrame and a list of paths are both accepted
+    # a list of DataFrames is accepted too
     assert (
-        S.stream_state_partitions(spark, spark.read.parquet(src))
-        == S.STREAM_SHUFFLE_PARTITIONS
-    )
-    assert (
-        S.stream_state_partitions(spark, [src, src])
+        S.stream_state_partitions(spark, [src_df, src_df])
         == S.STREAM_SHUFFLE_PARTITIONS
     )
 
@@ -829,22 +750,22 @@ def test_stream_state_partitions_derivation(spark, tmp_path):
     old = S.STREAM_STATE_BYTES_PER_PARTITION
     S.STREAM_STATE_BYTES_PER_PARTITION = max(1, size // 100)  # ~100 parts
     try:
-        derived = S.stream_state_partitions(spark, src)
+        derived = S.stream_state_partitions(spark, src_df)
         assert S.STREAM_SHUFFLE_PARTITIONS < derived <= 2048
         S.STREAM_STATE_BYTES_PER_PARTITION = 1  # force the upper clamp
-        assert S.stream_state_partitions(spark, src) == 2048
+        assert S.stream_state_partitions(spark, src_df) == 2048
     finally:
         S.STREAM_STATE_BYTES_PER_PARTITION = old
 
     # the env override wins over any derivation
     os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "77"
     try:
-        assert S.stream_state_partitions(spark, src) == 77
+        assert S.stream_state_partitions(spark, src_df) == 77
     finally:
         del os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
 
     # scoped_shuffle_partitions(source=...) applies the derived width
-    with S.scoped_shuffle_partitions(spark, source=src):
+    with S.scoped_shuffle_partitions(spark, source=src_df):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(
             S.STREAM_SHUFFLE_PARTITIONS
         )
@@ -861,13 +782,20 @@ def test_stream_shuffle_override_is_read_at_call_time(spark, monkeypatch):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
 
 
-def test_merge_sink_crash_inside_swap_converges_after_restart(spark, tmp_path, crash_swap):
-    """The vanilla merge sink dies after each filesystem step of its
-    rename swaps in turn (two micro-batches, one file each); restarting
-    the query on the same checkpoint replays the uncommitted batch and
-    ends with the target of a query that never crashed."""
+def test_txlog_sink_crash_at_each_commit_boundary_converges_after_restart(
+    spark, tmp_path, monkeypatch
+):
+    """The streaming MERGE sink dies at each commit boundary of a
+    two-batch stream in turn: after a batch's files landed but before
+    its manifest is put, and after the manifest is put but before Spark
+    commits the batch's offset. Restarting the query on the same
+    checkpoint replays the batch and ends with the table of a query
+    that never crashed."""
+    import os
 
-    def scenario(root, step):
+    real_commit = TxLogTable._commit
+
+    def scenario(root, crash_at=None, boundary=None):
         bronze = root / "bronze"
         _write_jsonl(bronze / "f1.json", [
             _event("e1", "2024-01-01T10:00:00Z"),
@@ -878,26 +806,43 @@ def test_merge_sink_crash_inside_swap_converges_after_restart(spark, tmp_path, c
             _event("e3", "2024-01-01T12:00:00Z"),
         ])
         target, ckpt = str(root / "silver"), str(root / "ckpt")
+        commits = {"n": 0}
+
+        def commit(self, version, meta):
+            commits["n"] += 1
+            crash = commits["n"] == crash_at
+            if crash and boundary == "files_landed":
+                raise RuntimeError("injected crash before the manifest")
+            won = real_commit(self, version, meta)
+            if crash and boundary == "manifest_put":
+                raise RuntimeError("injected crash before the offset commit")
+            return won
 
         def run():
-            run_silver_stream(
-                spark, str(bronze), target, ckpt, max_files_per_trigger=1
-            ).awaitTermination(120)
+            _merge_silver(spark, bronze, target, ckpt, max_files=1).awaitTermination(120)
 
-        with crash_swap(step, target) as steps:
-            if step is None:
+        table = TxLogTable(target)
+        with monkeypatch.context() as m:
+            m.setattr(TxLogTable, "_commit", commit)
+            if crash_at is None:
                 run()
             else:
                 with pytest.raises(Exception, match="injected crash"):
                     run()
-        if step is not None:
+        if crash_at is not None:
+            landed = os.listdir(os.path.join(target, "data"))
+            if boundary == "files_landed":
+                # the batch's data directory is there, its version is not
+                assert len(landed) == crash_at and len(table.versions()) == crash_at - 1
+            else:
+                assert len(landed) == len(table.versions()) == crash_at
             run()  # the restart
-        return Counter(map(tuple, spark.read.parquet(target).collect())), steps["done"]
+        return Counter(map(tuple, table.read(spark).collect())), commits["n"]
 
-    want, n_steps = scenario(tmp_path / "ref", None)
+    want, n_commits = scenario(tmp_path / "ref")
     assert {r[0] for r in want} == {"e1", "e2", "e3"}
-    # the bootstrap swap takes two steps, every later one three
-    assert n_steps >= 5 and (n_steps - 2) % 3 == 0
-    for step in range(1, n_steps + 1):
-        got, _ = scenario(tmp_path / f"crash{step}", step)
-        assert got == want, f"crash after swap step {step}"
+    assert n_commits == 2  # one MERGE commit per micro-batch
+    for boundary in ("files_landed", "manifest_put"):
+        for crash_at in range(1, n_commits + 1):
+            got, _ = scenario(tmp_path / f"{boundary}{crash_at}", crash_at, boundary)
+            assert got == want, f"crash at commit {crash_at}, {boundary}"

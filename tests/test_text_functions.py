@@ -50,14 +50,6 @@ def test_fingerprints(spark):
     a = _one(spark, "Hello   World", Tx.fingerprint_md5(F.col("t")))
     b = _one(spark, "hello world", Tx.fingerprint_md5(F.col("t")))
     assert a == b == hashlib.md5(b"hello world").hexdigest()
-    # content fingerprint survives appending at the end (k=3 shingles)
-    base = "one two three four five six seven"
-    f1 = _one(spark, base, Tx.content_fingerprint(F.col("t")))
-    f2 = _one(spark, base + " eight", Tx.content_fingerprint(F.col("t")))
-    assert f1 == f2  # min-shingle unchanged by the appended tail here
-    # short docs fall back to whole-text md5
-    s = _one(spark, "one two", Tx.content_fingerprint(F.col("t")))
-    assert s == hashlib.md5(b"one two").hexdigest()
 
 
 def test_chunk_documents(spark):

@@ -11,10 +11,8 @@ from wistia_etl_pipeline_spark.incremental.watermark import (
     JsonStateStore,
     MediaState,
     decide,
-    df_to_state,
     fold_checkpoint,
     normalize_media_state,
-    state_to_df,
 )
 
 
@@ -114,35 +112,6 @@ def test_store_roundtrip_and_legacy_read(tmp_path):
     assert states["b"].next_page == 2
     store.write(states)
     assert store.read() == states  # write→read is lossless (normalized form)
-
-
-def test_state_df_roundtrip(spark):
-    states = {
-        "a": MediaState(updated="2025-04-29T18:11:20Z"),
-        "b": MediaState(updated="2025-04-30T00:00:00Z", next_page=2,
-                        last_received_at="2025-04-29T00:00:00Z"),
-    }
-    assert df_to_state(state_to_df(spark, states)) == states
-
-
-def test_filter_changed_distributed(spark):
-    from pyspark.sql import Row
-
-    from wistia_etl_pipeline_spark.incremental.watermark import filter_changed
-
-    states = {
-        "m1": MediaState(updated="2025-04-01T00:00:00Z"),
-        "m2": MediaState(updated="2025-04-05T00:00:00Z"),
-    }
-    candidates = spark.createDataFrame(
-        [
-            Row(media_id="m1", updated="2025-04-02T00:00:00Z"),  # newer → keep
-            Row(media_id="m2", updated="2025-04-05T00:00:00Z"),  # equal → skip
-            Row(media_id="m3", updated="2025-01-01T00:00:00Z"),  # unseen → keep
-        ]
-    )
-    kept = filter_changed(candidates, state_to_df(spark, states))
-    assert {r.media_id for r in kept.collect()} == {"m1", "m3"}
 
 
 def test_approx_visitors_close_to_exact(spark):

@@ -6,14 +6,11 @@ library — so this is the public BPE algorithm (Sennrich et al. 2016,
 "Neural Machine Translation of Rare Words with Subword Units")
 implemented from scratch:
 
-- **Training** (``train_merges`` / ``train_bpe``): repeatedly merge the
+- **Training** (``train_merges``): repeatedly merge the
   most frequent adjacent symbol pair over a word-frequency table. The
-  distributed part is the word count (one shuffle, output bounded by
-  vocabulary size, top-``max_words`` via ``TakeOrderedAndProject``); the
-  merge loop itself runs driver-side over that bounded table — exactly
-  how production BPE trainers work (they never stream the corpus per
-  merge), so the design scales: 100 TB of text still reduces to one
-  word-frequency aggregation.
+  merge loop runs driver-side over that bounded table — exactly how
+  production BPE trainers work (they never stream the corpus per
+  merge): a corpus reduces to one word-frequency aggregation first.
 - **Application** (``tokenize_word`` / ``tokenize_words``): split a word
   into characters, then repeatedly merge the LEFTMOST occurrence of the
   best-ranked (earliest-learned) mergeable pair. One merge per step
@@ -38,7 +35,7 @@ import re
 from functools import lru_cache
 from typing import Iterable, Iterator
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 #: Shared pre-tokenization rule (keep in sync with the registry oracles):
 #: lowercase, split on runs of anything outside [a-z0-9], drop empties.
@@ -149,33 +146,6 @@ def frozen_merges() -> tuple[tuple[str, str], ...]:
     for w in pretokenize(SEED_CORPUS):
         freqs[w] = freqs.get(w, 0) + 1
     return tuple(train_merges(freqs, N_FROZEN_MERGES))
-
-
-def train_bpe(
-    df: DataFrame,
-    text_col: str,
-    *,
-    n_merges: int,
-    max_words: int = 50_000,
-) -> list[tuple[str, str]]:
-    """Distributed BPE training: one word-count aggregation (map-side
-    partial combine → single shuffle → ``TakeOrderedAndProject`` for the
-    top ``max_words`` by frequency — vocabulary-bounded, NOT corpus
-    bounded), then the driver-side merge loop over that bounded table.
-    The tie-break (freq desc, word asc) makes the truncation
-    deterministic."""
-    rows = (
-        df.select(
-            F.explode(F.split(F.lower(F.col(text_col)), WORD_SPLIT_RE)).alias("word")
-        )
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.col("freq").desc(), F.col("word"))
-        .limit(max_words)
-        .collect()  # bounded by max_words (vocabulary, not corpus, sized)
-    )
-    return train_merges({r["word"]: r["freq"] for r in rows}, n_merges)
 
 
 def tokenize_words(

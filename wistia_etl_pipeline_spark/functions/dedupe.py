@@ -3,9 +3,9 @@ n-gram Jaccard (BASELINE.json north-star extensions).
 
 Design for 100 TB:
 
-- **Exact** (:func:`exact_dup_groups`): md5(normalized text) →
-  groupBy. One shuffle keyed by a 128-bit hash — perfectly uniform,
-  no skew, map-side partial counts.
+- **Exact** (:func:`curate_corpus`): md5(normalized text) is the key
+  (``text.fingerprint_md5``). One shuffle keyed by a 128-bit hash —
+  perfectly uniform, no skew.
 - **MinHash + LSH** (:func:`minhash_near_dup_pairs`): the only way
   near-dup discovery scales is to never compare all pairs. Shingle →
   per-seed min-hash → band keys → self-join *on band key*. The join
@@ -13,7 +13,8 @@ Design for 100 TB:
   true Jaccard so LSH false positives never reach the output. Banding
   math: P(pair in ≥1 common band) = 1-(1-j^r)^b for Jaccard j,
   r rows/band, b bands.
-- **SimHash** (:func:`simhash64`): 64-bit bit-vote signature;
+- **SimHash** (:func:`with_simhash_pandas`; :func:`with_simhash` is
+  its expression-form reference): 64-bit bit-vote signature;
   near-dups differ in ≤k bits. Bucket on bit-ranges for the scale
   path (same band-join trick on hamming pieces).
 - All hashing is md5-derived: deterministic, identical across engines
@@ -72,29 +73,6 @@ def shingles(col: Column | str, *, k: int = 3) -> Column:
             F.sequence(F.lit(1), n),
             lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
         )
-    )
-
-
-def minhash_signature(col: Column | str, *, num_hashes: int = 16, k: int = 1) -> Column:
-    """MinHash signature (array<string> of length ``num_hashes``).
-
-    Hash family: md5(shingle ‖ ':' ‖ seed) — seed-salted md5, min
-    taken lexicographically over the hex digest (a uniform total
-    order, so each seed is an independent min-hash). Empty docs get an
-    empty signature.
-    """
-    sh = F.array_distinct(shingles(col, k=k))
-
-    def _salted(i: int):
-        # NB: a closure factory, NOT `lambda s, i=i:` — PySpark calls
-        # two-parameter lambdas as (element, index) and would silently
-        # rebind the seed to the index Column.
-        salt = F.lit(f":{i}")
-        return lambda s: F.md5(F.concat(s, salt))
-
-    per_seed = [F.array_min(F.transform(sh, _salted(i))) for i in range(num_hashes)]
-    return F.when(F.size(sh) == 0, F.array().cast("array<string>")).otherwise(
-        F.array(*per_seed)
     )
 
 
@@ -419,35 +397,6 @@ def curate_corpus(
     return dataset_split(s2, id_col, test_permille=test_permille)
 
 
-def simhash64(col: Column | str, *, k: int = 1) -> Column:
-    """64-bit SimHash: each distinct shingle votes its hash bits ±1;
-    the signature takes the sign of each bit-column's sum.
-
-    Shingle hash = first 60 bits of md5 (hex→int via conv) — keeps the
-    signature engine- and version-stable. Returned as bigint (bits
-    0-59 populated).
-    """
-    sh = F.array_distinct(shingles(col, k=k))
-    h = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"))
-
-    def _vote(bit: int):
-        mask = F.lit(1 << bit)
-        return lambda acc, x: acc + F.when(x.bitwiseAND(mask) != 0, F.lit(1)).otherwise(
-            F.lit(-1)
-        )
-
-    bit_exprs = []
-    for bit in range(60):
-        votes = F.aggregate(h, F.lit(0), _vote(bit))
-        bit_exprs.append(F.when(votes > 0, F.lit(1 << bit)).otherwise(F.lit(0)))
-    total = bit_exprs[0]
-    for e in bit_exprs[1:]:
-        total = total + e
-    return F.when(F.size(sh) == 0, F.lit(0).cast("bigint")).otherwise(
-        total.cast("bigint")
-    )
-
-
 def with_simhash(df: DataFrame, text_col: str, *, k: int = 1) -> DataFrame:
     """Staged SimHash (the corpus-scale path): shingle hashes are
     materialized once per row as a projection column, then 60 bit-vote
@@ -665,19 +614,6 @@ def simhash_dup_degree(
     return sym.groupBy("doc").agg(
         F.count_distinct(F.col("nbr")).alias("dup_degree"),
         F.min("hamming").alias("min_hamming"),
-    )
-
-
-def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact duplicate groups: (fingerprint, ids, dup_count) for every
-    normalized text occurring more than once."""
-    from .text import fingerprint_md5
-
-    return (
-        df.select(F.col(id_col).alias("doc"), fingerprint_md5(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("dup_count"), F.sort_array(F.collect_list("doc")).alias("ids"))
-        .filter(F.col("dup_count") > 1)
     )
 
 

@@ -1,10 +1,10 @@
 """Multimodal (image/audio/video) column plumbing — north-star extension.
 
 Media payloads are opaque ``binary`` columns + a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages. The *Spark-side* plumbing — schema, batch
-shapes, partition sizing, UDF signatures — is real and tested; the
-codec calls themselves are stubbed (this environment ships no
+decode and PCM-energy run as Arrow-batched ``mapInPandas`` stages;
+frame sampling is pure expressions. The *Spark-side* plumbing —
+schema, batch shapes, partition sizing, UDF signatures — is real and
+tested; the codec calls themselves are stubbed (this environment ships no
 image/audio libraries): ``decode_media_batch`` parses a deterministic
 fake header, and the place a real codec (Pillow/ffmpeg/torchaudio)
 would slot in is a single clearly-marked function.
@@ -123,65 +123,6 @@ def frame_sample_plan(df: DataFrame, *, every_n: int = 10) -> DataFrame:
         F.explode(
             F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
         ).alias("frame_idx"),
-    )
-
-
-def resize_stub(df: DataFrame, *, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payloads through the same mapInPandas
-    shape a real resampler would use, emitting the TARGET dimensions +
-    an untouched payload (the codec slot is _decode_one's sibling)."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"],  # real impl: re-encoded bytes
-                }
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        run, "media_id string, width int, height int, payload binary"
-    )
-
-
-def extract_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
-    """Feature extraction plumbing: payload → fixed-width float vector,
-    Arrow-batched, written to a SEPARATE narrow table keyed by media_id
-    (downstream training then scans features without dragging payload
-    bytes through any shuffle — see module scale notes).
-
-    The featurizer itself is the codec slot's sibling — here a
-    deterministic md5-seeded fake with the right shape (unit-length
-    ``dim``-vector); a real one plugs in a vision/audio model over the
-    decoded payload without touching the Spark plumbing.
-    """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                if payload is None:
-                    feats.append(None)
-                    continue
-                # REAL IMPL SLOT: model(decode(payload)). Fake: bytes of
-                # md5(payload) → centered floats → unit norm.
-                h = hashlib.md5(bytes(payload)).digest()
-                raw = np.frombuffer((h * ((dim // 16) + 1))[:dim], dtype=np.uint8)
-                v = raw.astype(np.float64) - 127.5
-                v /= np.sqrt((v * v).sum()) or 1.0
-                feats.append([float(x) for x in v])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats})
-
-    return df.select("media_id", "payload").mapInPandas(
-        run, "media_id string, feature array<float>"
     )
 
 

@@ -12,33 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def iso_to_timestamp(col: Column | str) -> Column:
-    """F1 — ISO-8601 string → UTC timestamp.
-
-    Handles both ``…Z`` and ``…+00:00`` suffixes (the two forms in the
-    reference's watermarks.json; parsed by ``iso_to_dt`` at
-    bronze.py:79-81). Spark's ``to_timestamp`` accepts both natively
-    under a UTC session timezone — the engine pins that via
-    ``session.apply_runtime_confs``.
-    """
-    return F.to_timestamp(col)
-
-
-def utc_date_str(col: Column | str) -> Column:
-    """F2 — format a timestamp as ``YYYY-MM-DD`` (UTC partition value,
-    bronze.py:120)."""
-    return F.date_format(col, "yyyy-MM-dd")
-
-
-def watermark_gt(col: Column | str, watermark: Column) -> Column:
-    """F3 — the watermark comparison ``updated > last_seen``
-    (bronze.py:173). Operates on TimestampType; the reference's
-    lexicographic ISO-string compare (bronze.py:220) is equivalent only
-    for UTC-normalized strings, so we normalize first (F1)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return col > watermark
-
-
 def max_timestamp(col: Column | str) -> Column:
     """F4 — running high-water mark: MAX over timestamps. The reference
     folds ``max(received_at)`` across pages as strings (bronze.py:220);
@@ -62,14 +35,6 @@ def to_double(col: Column | str) -> Column:
     """F6 — string→double cast (silver.py:78)."""
     col = F.col(col) if isinstance(col, str) else col
     return col.cast("double")
-
-
-def page_url(base: Column | str, page: Column | int, per_page: Column | int) -> Column:
-    """F7 — paging URL construction (bronze.py:111-114), as a codegen
-    expression for when URLs are built per-row (distributed fetch)."""
-    page = F.lit(page) if isinstance(page, int) else page
-    per_page = F.lit(per_page) if isinstance(per_page, int) else per_page
-    return F.format_string("%s?page=%s&per_page=%s", base, page, per_page)
 
 
 def coalesce_updated(*cols: Column | str, sentinel: str | None = None) -> Column:

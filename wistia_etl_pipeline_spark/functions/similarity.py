@@ -2,16 +2,15 @@
 brute-force cosine top-k baseline + LSH-bucketed scale path
 (BASELINE.json north-star extensions).
 
-Two execution strategies, same semantics:
+Two execution strategies:
 
 - **Expression path** (:func:`cosine`): zip_with + aggregate — pure
   Catalyst expressions, no Python workers. Right choice when scanning
   once per query vector.
-- **Pandas-UDF path** (:func:`cosine_scores_pandas`): Arrow-batched
-  numpy matmul — ~10-100× the throughput of per-row evaluation when
-  scoring MANY vectors per batch (the UDF amortizes into one BLAS
-  call per Arrow batch). Right choice for batch re-ranking or k-NN
-  joins. Unit tests assert both paths agree to 1e-9.
+- **Pandas-UDF path** (:func:`random_projection_int`): Arrow-batched
+  numpy matmul — one BLAS-style call per Arrow batch instead of
+  per-row evaluation. Right choice when every row is multiplied by the
+  same matrix.
 
 Scale path (:func:`hyperplane_buckets`): random-hyperplane LSH. Sign
 bits w.r.t. ``n_planes`` fixed hyperplanes form a bucket id; cosine
@@ -27,7 +26,7 @@ column at ingest.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -80,56 +79,6 @@ def cosine_topk(
     )
 
 
-def cosine_scores_pandas(
-    df: DataFrame,
-    query: Sequence[float],
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Arrow-batched cosine scoring: one numpy matmul per batch.
-    Same semantics as the expression path (float→double, then fold)."""
-    import numpy as np
-    import pandas as pd
-
-    q = [float(x) for x in query]
-
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qv = np.asarray(q, dtype=np.float64)
-        qn = np.sqrt((qv * qv).sum())
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = (m @ qv) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            yield pd.DataFrame({id_col: pdf[id_col], "cos_sim": sims})
-
-    out_schema = f"{id_col} long, cos_sim double"
-    return df.select(id_col, vec_col).mapInPandas(score_batches, out_schema)
-
-
-def recommend_n_planes(
-    n_vectors: int, *, target_bucket_rows: int = 100_000
-) -> int:
-    """Plane count sized to the corpus — the knob that keeps LSH
-    bucketing viable at 100 TB.
-
-    Bucket-size math: ``n_planes`` sign bits split the corpus into
-    ``2^n_planes`` buckets; for roughly isotropic data the expected
-    bucket holds ``n_vectors / 2^n_planes`` rows, and the bucketed
-    self-join does ``O(bucket²)`` comparisons per bucket. A FIXED
-    8-plane setting (256 buckets) that is fine at 10⁶ vectors becomes
-    ~4·10⁸ rows per bucket at 10¹¹ — the round-1 scale flaw. Solving
-    ``n / 2^p ≤ target`` gives ``p = ⌈log2(n / target)⌉``; the floor of
-    8 keeps tiny corpora deterministic, the cap of 48 keeps signature
-    strings short. Every bucketing entrypoint takes ``n_planes``
-    explicitly — pass this helper's output (corpus count is one cheap
-    ``df.count()`` at index-build time) or a domain-informed choice."""
-    import math
-
-    if n_vectors <= 0:
-        return 8
-    return max(8, min(48, math.ceil(math.log2(max(1.0, n_vectors / target_bucket_rows)))))
-
-
 def deterministic_planes(n_planes: int, dim: int, *, salt: str = "wistia-lsh") -> list[list[float]]:
     """Fixed pseudo-random hyperplanes from md5 — no RNG state, so
     signatures are reproducible everywhere (they can be persisted as a
@@ -178,45 +127,6 @@ def hyperplane_buckets(
     )
 
 
-def ann_topk_lsh(
-    df: DataFrame,
-    query: Sequence[float],
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    n_planes: int = 8,
-    multiprobe_bits: int = 1,
-) -> DataFrame:
-    """Approximate top-k: score only vectors whose bucket is within
-    ``multiprobe_bits`` bit-flips of the query's bucket (multi-probe
-    LSH — recovers most of the recall lost to unlucky sign boundaries
-    while still pruning ~(1 - (1+n)/2^p) of the corpus)."""
-    dim = len(query)
-    planes = deterministic_planes(n_planes, dim)
-    qsig_bits = [
-        "1" if sum(float(a) * float(b) for a, b in zip(plane, query)) >= 0 else "0"
-        for plane in planes
-    ]
-    qsig = "".join(qsig_bits)
-    probes = {qsig}
-    if multiprobe_bits >= 1:
-        for i in range(n_planes):
-            flipped = qsig_bits.copy()
-            flipped[i] = "0" if flipped[i] == "1" else "1"
-            probes.add("".join(flipped))
-    bucketed = df.withColumn(
-        "bucket", hyperplane_signature(F.col(vec_col), planes)
-    ).filter(F.col("bucket").isin(sorted(probes)))
-    return cosine_topk(
-        bucketed,
-        F.array(*[F.lit(float(x)) for x in query]),
-        vec_col=vec_col,
-        id_col=id_col,
-        k=k,
-    )
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     *,
@@ -235,9 +145,8 @@ def embedding_near_dup_pairs(
     bucket-equality loses ~nothing at dedup thresholds (unlike search
     thresholds, where multi-probe matters). RAISING ``n_planes`` only
     tightens the blocking (more, smaller buckets) without changing
-    which τ-qualified pairs verify — size it with
-    :func:`recommend_n_planes` so per-bucket work stays bounded as the
-    corpus grows."""
+    which τ-qualified pairs verify; raise it as the corpus grows so
+    per-bucket work stays bounded."""
     planes = deterministic_planes(n_planes, dim)
     keyed = df.select(
         F.col(id_col).alias("vid"),

@@ -125,12 +125,12 @@ def with_fingerprints(df, text_col: str, *, k: int = 3):
 
     Materializes ``nt`` (normalized text) and the shingle-hash array as
     intermediate projection columns so each is computed once per row.
-    The single-Column form (:func:`content_fingerprint`) inlines the
-    whole tokenize subtree into every lambda element — measured ~30×
-    slower at sf0.1 because CollapseProject happily duplicates cheap-
-    looking subtrees into transform() bodies. Multi-use staged columns
-    are NOT collapsed (Catalyst only inlines attributes referenced
-    once), which is exactly the sharing we want.
+    A single-Column form would inline the whole tokenize subtree into
+    every lambda element — measured ~30× slower at sf0.1 because
+    CollapseProject happily duplicates cheap-looking subtrees into
+    transform() bodies. Multi-use staged columns are NOT collapsed
+    (Catalyst only inlines attributes referenced once), which is
+    exactly the sharing we want.
 
     Adds ``fp_md5`` and ``fp_content`` columns; drops the scratch ones.
     """
@@ -157,24 +157,6 @@ def with_fingerprints(df, text_col: str, *, k: int = 3):
             ),
         )
         .select(*out_cols)
-    )
-
-
-def content_fingerprint(col: Column | str, *, k: int = 3) -> Column:
-    """Shift-robust fingerprint: the minimum md5 over word k-shingles
-    of the normalized text (a 1-hash MinHash / winnowing-style
-    signature — insertion at one end usually preserves it, unlike
-    :func:`fingerprint_md5`). Falls back to the whole-text md5 for
-    docs shorter than k tokens.
-
-    Composable single-Column form; for corpus-scale scans use
-    :func:`with_fingerprints` (staged, ~30× faster — see its docstring).
-    """
-    from .dedupe import shingles
-
-    sh = shingles(normalize_text(col), k=k)
-    return F.when(F.size(sh) == 0, fingerprint_md5(col)).otherwise(
-        F.array_min(F.transform(sh, F.md5))
     )
 
 

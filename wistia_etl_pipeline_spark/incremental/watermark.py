@@ -11,14 +11,9 @@ decisions per media (bronze.py:173-178):
 - **full_pull**  changed and no checkpoint → start from page 1
 
 We keep that state machine as *pure functions* (unit-testable, no I/O)
-plus two storage adapters:
-
-- :class:`JsonStateStore` — a single small JSON control document, like
-  the reference's (fine: the state is O(#media), kilobytes).
-- :func:`state_to_df` / :func:`df_to_state` — the same state as a Spark
-  DataFrame (WATERMARK_SCHEMA) so a cluster job can join/filter against
-  it (e.g. broadcast the watermark table against a huge candidate list
-  — the skip-filter P5 then runs distributed instead of on the driver).
+plus one storage adapter, :class:`JsonStateStore` — a single small JSON
+control document, like the reference's (fine: the state is O(#media),
+kilobytes).
 
 Streaming equivalence: under Structured Streaming this whole module is
 replaced by ``checkpointLocation`` (offsets) + ``withWatermark`` (event
@@ -31,10 +26,6 @@ import json
 import os
 from dataclasses import dataclass
 from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import WATERMARK_SCHEMA
 
 # Decision outcomes (bronze.py:173-178)
 SKIP = "skip"
@@ -194,57 +185,3 @@ class JsonStateStore:
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump(doc, f, indent=2, sort_keys=True)  # pretty, like bronze.py:73
         os.replace(tmp, self.path)  # atomic on posix
-
-
-def state_to_df(spark: SparkSession, states: dict[str, MediaState]) -> DataFrame:
-    """State as a (tiny, broadcastable) DataFrame in WATERMARK_SCHEMA —
-    lets the P5 skip-filter run as a distributed join instead of a
-    driver loop."""
-    rows = [
-        (k, s.updated, s.next_page, s.last_received_at) for k, s in sorted(states.items())
-    ]
-    from ..session import arrow_local_df
-
-    return arrow_local_df(spark, rows, WATERMARK_SCHEMA)
-
-
-def filter_changed(
-    candidates: DataFrame,
-    state_df: DataFrame,
-    *,
-    key: str = "media_id",
-    updated_col: str = "updated",
-) -> DataFrame:
-    """Distributed skip-filter (P5 at cluster scale): keep candidate
-    rows whose ``updated`` exceeds the stored watermark (or that have
-    no state row). The tiny state table broadcasts; a million-media
-    candidate list never leaves the executors — the driver-loop
-    version of this decision (bronze.py:173-178) caps out at driver
-    memory."""
-    from pyspark.sql import functions as F
-
-    def _norm(c):
-        # same suffix normalization as _iso_key ('+00:00' sorts before
-        # 'Z' lexicographically — unnormalized mixed suffixes would
-        # keep/skip the wrong rows)
-        return F.regexp_replace(c, r"\+00:00$", "Z")
-
-    st = state_df.select(
-        F.col("media_id").alias("__k"), F.col("updated").alias("__wm")
-    )
-    joined = candidates.join(
-        F.broadcast(st), candidates[key] == F.col("__k"), "left"
-    )
-    keep = F.col("__wm").isNull() | (_norm(F.col(updated_col)) > _norm(F.col("__wm")))
-    return joined.filter(keep).drop("__k", "__wm")
-
-
-def df_to_state(df: DataFrame) -> dict[str, MediaState]:
-    return {
-        r["media_id"]: MediaState(
-            updated=r["updated"] or EPOCH,
-            next_page=r["next_page"],
-            last_received_at=r["last_received_at"],
-        )
-        for r in df.collect()
-    }

@@ -1,7 +1,6 @@
 """Grouped-map Python-worker operators — ``groupBy().applyInPandas``,
 ``cogroup().applyInPandas``, and ``cogroup().applyInArrow`` (the
-third, fourth, and sixth Python-worker shapes next to ``mapInPandas``,
-``applyInPandasWithState``, and ``mapInArrow``).
+Python-worker shapes next to ``mapInPandas`` and ``mapInArrow``).
 
 Use when per-group logic genuinely needs the WHOLE group in one pandas
 frame (order statistics, model fits, per-entity signal processing) and

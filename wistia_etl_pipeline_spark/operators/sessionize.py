@@ -1,9 +1,8 @@
-"""Sessionization — gap-based visitor sessions, three ways.
+"""Sessionization — gap-based visitor sessions, two ways.
 
 The reference's docx data model implies per-visitor engagement analysis
 (`dim_visitor`, watch-time metrics); sessionization is the canonical
-derived grain for it, and it exercises the one operator family Spark
-offers three genuinely different engines for:
+derived grain for it:
 
 - :func:`sessionize` — batch gaps-and-islands: ``lag`` + running sum
   over a (user, time) window. One shuffle on the user key; every row
@@ -12,24 +11,11 @@ offers three genuinely different engines for:
   aggregation; batch AND streaming): session-grain output. At 100 TB
   prefer this over the window-function form when only aggregates are
   needed — no row_number state, partial-mergeable.
-- :func:`streaming_sessionize` — ``applyInPandasWithState``: the
-  custom-stateful-operator escape hatch (north-star requirement).
-  Arbitrary Python session logic with explicit timeout-based state
-  eviction; use only when built-ins can't express the semantics
-  (e.g. sessions keyed by content of events, cross-field predicates).
-- :func:`streaming_sessionize_tws` — the same contract on Spark 4's
-  ``transformWithState`` (typed state handles in RocksDB, per-key
-  timers). Prefer it on clusters that ship ``google.protobuf`` (its
-  state-protocol dependency; this container doesn't, so its test
-  skips).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-from pyspark.sql import Column, DataFrame, Window, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def sessionize(
@@ -93,170 +79,3 @@ def session_rollup(
         .drop("w")
     )
 
-
-def streaming_sessionize(
-    stream: DataFrame,
-    *,
-    user: str = "visitor_key",
-    event_time: str = "received_at",
-    gap_minutes: int = 30,
-):
-    """Custom stateful sessionization with ``applyInPandasWithState``.
-
-    Emits one row per CLOSED session (on state timeout after the gap).
-    State per user: current session's start/end/count. This is the
-    template for any bespoke streaming operator: state schema, timeout
-    handling, and batch shapes are what matter — the per-group logic is
-    plain Python over pandas frames.
-    """
-    import pandas as pd
-
-    gap_ms = gap_minutes * 60 * 1000
-    out_schema = (
-        f"{user} string, session_start timestamp, session_end timestamp, n_events long"
-    )
-    state_schema = "start long, end long, n long"  # epoch millis
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            start, end, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    user: [key[0]],
-                    "session_start": [pd.Timestamp(start, unit="ms")],
-                    "session_end": [pd.Timestamp(end, unit="ms")],
-                    "n_events": [n],
-                }
-            )
-            return
-        rows: list[tuple[int, int, int]] = []  # closed sessions
-        cur = state.get if state.exists else None
-        ts_all = []
-        for pdf in pdfs:
-            ts_all.extend(int(t.value // 1_000_000) for t in pd.to_datetime(pdf[event_time]))
-        for t in sorted(ts_all):
-            if cur is None:
-                cur = (t, t, 1)
-            elif t - cur[1] > gap_ms:
-                rows.append(cur)
-                cur = (t, t, 1)
-            else:
-                cur = (cur[0], max(cur[1], t), cur[2] + 1)
-        if cur is not None:
-            state.update(cur)
-            state.setTimeoutDuration(gap_ms)
-        if rows:
-            yield pd.DataFrame(
-                {
-                    user: [key[0]] * len(rows),
-                    "session_start": [pd.Timestamp(s, unit="ms") for s, _, _ in rows],
-                    "session_end": [pd.Timestamp(e, unit="ms") for _, e, _ in rows],
-                    "n_events": [n for _, _, n in rows],
-                }
-            )
-
-    return stream.groupBy(F.col(user)).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def streaming_sessionize_tws(
-    stream: DataFrame,
-    *,
-    user: str = "visitor_key",
-    event_time: str = "received_at",
-    gap_minutes: int = 30,
-):
-    """Custom stateful sessionization on the ``transformWithState``
-    API (Spark 4) — the modern successor to ``applyInPandasWithState``
-    used by :func:`streaming_sessionize`, with the same emitted
-    contract: one row per CLOSED session.
-
-    Differences that matter at scale: state lives in named typed
-    handles (a ValueState here) inside the RocksDB state store —
-    incremental checkpointing and state far larger than executor
-    memory — and inactivity is modeled with explicit per-key TIMERS
-    instead of one GroupStateTimeout, so a processor can juggle many
-    independent deadlines per key. Requires
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider`` (the session factory leaves the
-    default HDFS provider for everything else; tests set it on the
-    stream's own session).
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_ms = gap_minutes * 60 * 1000
-    out_schema = (
-        f"{user} string, session_start timestamp, session_end timestamp, n_events long"
-    )
-
-    def _emit(key, sessions):
-        return pd.DataFrame(
-            {
-                user: [key[0]] * len(sessions),
-                "session_start": [pd.Timestamp(s, unit="ms") for s, _, _ in sessions],
-                "session_end": [pd.Timestamp(e, unit="ms") for _, e, _ in sessions],
-                "n_events": [n for _, _, n in sessions],
-            }
-        )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState("session", "start long, end long, n long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            ts_all: list[int] = []
-            for pdf in rows:
-                ts_all.extend(
-                    int(t.value // 1_000_000) for t in pd.to_datetime(pdf[event_time])
-                )
-            cur = tuple(self.state.get()) if self.state.exists() else None
-            closed: list[tuple[int, int, int]] = []
-            for t in sorted(ts_all):
-                if cur is None:
-                    cur = (t, t, 1)
-                elif t - cur[1] > gap_ms:
-                    closed.append(cur)
-                    cur = (t, t, 1)
-                else:
-                    cur = (cur[0], max(cur[1], t), cur[2] + 1)
-            if cur is not None:
-                self.state.update(cur)
-                # one inactivity deadline per key: drop stale timers,
-                # arm a fresh one a gap past now
-                for old in self.handle.listTimers():
-                    self.handle.deleteTimer(old)
-                self.handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs() + gap_ms
-                )
-            if closed:
-                yield _emit(key, closed)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if self.state.exists():
-                session = tuple(self.state.get())
-                self.state.clear()
-                yield _emit(key, [session])
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(F.col(user)).transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="processingTime",
-    )

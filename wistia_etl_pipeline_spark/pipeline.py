@@ -7,8 +7,7 @@ Differences from the reference, by design:
 - Bronze is written as *partitioned JSON-lines* (``media_id=…/dt=…``)
   by Spark, not one opaque page-payload object per S3 key from a
   driver loop: splittable files, parallel writes, and the identical
-  Hive layout (S4). ``sources.json_source.normalize_pages`` still
-  reads reference-style page files for migration.
+  Hive layout (S4).
 - Silver/gold are parquet paths maintained by in-engine MERGE (A7) —
   no JDBC hop, no stored procedures, no stage tables.
 - Each pass stages only what this run pulled (P3). Silver's stage is

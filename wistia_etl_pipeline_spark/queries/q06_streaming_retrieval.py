@@ -246,6 +246,7 @@ def streaming_gold_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources.txlog import TxLogTable
+    from ..streaming.pipeline import merge_batch_sink
 
     root = tempfile.mkdtemp(prefix="wistia_stream_gold_")
     src = os.path.join(root, "src")
@@ -267,12 +268,7 @@ def streaming_gold_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(25,6)")).cast("double"), 6
         ).alias("engagement_sum"),
     )
-    table = TxLogTable(os.path.join(root, "gold"))
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        # UPDATE mode emits the keys whose state changed this trigger,
-        # with cumulative values — upsert-by-day is the idempotent sink.
-        table.merge(batch_df.sparkSession, batch_df, ["dt"])
+    gold = os.path.join(root, "gold")
 
     # Day-grain state at the session's compute-width partitioning pays
     # per-partition store maintenance every trigger for ~30 keys — size
@@ -284,13 +280,16 @@ def streaming_gold_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         q = (
             agg.writeStream.outputMode("update")
-            .foreachBatch(_merge_batch)
+            # UPDATE mode emits the keys whose state changed this
+            # trigger, with cumulative values: upsert-by-day is the
+            # idempotent sink.
+            .foreachBatch(merge_batch_sink(gold, ["dt"]))
             .option("checkpointLocation", os.path.join(root, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    out = table.read(spark)
+    out = TxLogTable(gold).read(spark)
     return out.select("dt", "load_count", "play_count", "engagement_sum")
 
 

@@ -928,8 +928,8 @@ _IQR_ORACLE = """
 @query("grouped_agg_pandas_iqr", oracle=_IQR_ORACLE)
 def grouped_agg_pandas_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED_AGG pandas UDF — the one Arrow-UDF flavor the surface
-    was missing (scalar pandas_udf, mapInPandas, applyInPandas,
-    applyInPandasWithState, and cogroup are all registered): a
+    was missing (scalar pandas_udf, mapInPandas, applyInPandas and
+    cogroup are all registered): a
     whole-group Series -> scalar reduction usable directly inside
     groupBy().agg(), here computing exact integer quartiles/IQR with
     the value-at-rank-ceil(p*n) convention (numpy sort + take, no

@@ -586,10 +586,9 @@ def txlog_delete_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-op fast path, and read_changes' rewrite semantics).
 
     At 100 TB this is the difference between an erasure request
-    costing a table rewrite and costing a few file rewrites: the sorted
-    layout (``write_sorted_parquet``'s 1-D skipping story, applied to
-    the log's add-file stats exactly as Delta does) localizes any key
-    range to few files. The oracle computes the surviving rollup from
+    costing a table rewrite and costing a few file rewrites: a layout
+    sorted on the key (1-D skipping, applied to the log's add-file
+    stats exactly as Delta does) localizes any key range to few files. The oracle computes the surviving rollup from
     the raw events table, so the hash proves the delete removed
     EXACTLY the predicate rows across the rewrite+carry seam."""
     import tempfile
@@ -936,9 +935,9 @@ def txlog_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins files_scanned dropping on each dimension (and staying full
     before), plus rewrite semantics for read_changes.
 
-    This composes two things the engine already proves separately
-    (write_zorder_parquet's row-group skipping; the txlog's add-file
-    stats) into the production loop: cluster → stats tighten → reads
+    This composes the Morton key (``writers.zorder_value``) with the
+    txlog's add-file stats into the production loop: cluster → stats
+    tighten → reads
     AND deletes (``txlog_delete_user``'s file pruning) get cheap on
     every clustered column. The oracle is the plain rollup over the
     raw events table, so the hash proves the relayout round-trips
@@ -1847,10 +1846,11 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The three closures are independent iterative jobs whose per-round
     # actions are fixed-cost-bound at any SF; run them concurrently so
     # each one's stragglers back-fill the others' idle slots (guide
-    # §2.6). Safe on one session since r13's connected_components is
-    # per-plan-width hinted (no session-conf mutation anywhere in the
-    # closure path); results are deterministic per τ and reassembled in
-    # the fixed (50, 80, 95) order.
+    # §2.6). Safe on one session because no closure writes the session
+    # conf, and ``inheritable_thread_target`` carries the caller's job
+    # group and local properties into each pool thread. Results are
+    # deterministic per τ and reassembled in the fixed (50, 80, 95)
+    # order.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target

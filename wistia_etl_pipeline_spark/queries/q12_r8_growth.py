@@ -875,11 +875,11 @@ _ARROW_NORM_ORACLE = f"""
 
 @query("embedding_norms_arrow", oracle=_ARROW_NORM_ORACLE)
 def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``mapInArrow`` — the FIFTH Python-worker surface (mapInPandas,
-    applyInPandasWithState, applyInPandas, cogroup-applyInPandas are
-    the other four, README inventory): RecordBatches cross the Arrow
-    boundary with NO pandas materialization, the cheapest possible
-    Python hop for numeric kernels. The kernel computes each
+    """``mapInArrow`` — a Python-worker surface next to mapInPandas,
+    applyInPandas and cogroup-applyInPandas (README inventory):
+    RecordBatches cross the Arrow boundary with NO pandas
+    materialization, the cheapest possible Python hop for numeric
+    kernels. The kernel computes each
     embedding's scaled squared L2 norm straight off the Arrow list
     layout — values buffer -> one vectorized multiply, list offsets ->
     one ``np.add.reduceat`` — never building per-row Python objects

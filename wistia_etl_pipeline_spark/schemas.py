@@ -11,7 +11,6 @@ Reference DDL parity (docstrings cite reference file:line):
 - ``FACT_EVENTS_SCHEMA``  ← wistia_redshift_schemas.py:3-23
 - ``DIM_MEDIA_SCHEMA``    ← wistia_redshift_schemas.py:28-38
 - ``MEDIA_DAILY_AGG_SCHEMA`` ← wistia_redshift_schemas.py:43-52
-- ``WATERMARK_SCHEMA``    ← bronze watermark doc, wistia_pull_wistia_api.py:48-77
 
 ``TEST_TABLE_SCHEMAS`` declares the ten seed-42 test tables (TESTDATA.md)
 that ``session.load_table`` reads. Reading them by inference would cost
@@ -58,7 +57,8 @@ RAW_EVENT_SCHEMA = T.StructType(
         T.StructField("org", T.StringType()),
         T.StructField("media_id", T.StringType()),
         T.StructField("media_name", T.StringType()),
-        # populated by corrupt-record handling in sources.json_source
+        # a malformed line lands here under the JSON reader's default
+        # PERMISSIVE mode
         T.StructField("_corrupt_record", T.StringType()),
     ]
 )
@@ -138,18 +138,6 @@ MEDIA_DAILY_AGG_SCHEMA = T.StructType(
         T.StructField("visitors", T.LongType()),
     ]
 )
-
-#: Watermark/checkpoint state row — one per media id
-#: (wistia_pull_wistia_api.py:48-77; configs/watermarks.json).
-WATERMARK_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("updated", T.StringType()),  # ISO-8601 high-water mark
-        T.StructField("next_page", T.IntegerType()),  # events_checkpoint.next_page
-        T.StructField("last_received_at", T.StringType()),
-    ]
-)
-
 
 def as_nullable(dtype: T.DataType) -> T.DataType:
     """``dtype`` with every field, array element and map value nullable:

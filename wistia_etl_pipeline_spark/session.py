@@ -153,22 +153,20 @@ def stream_state_partitions(spark: SparkSession, source=None) -> int:
     key cardinality (it short-circuits the derivation entirely, and is
     read at each call).
 
-    ``source``: a batch DataFrame over the staged input, a parquet
-    path, or a list of either (stream-stream joins pass both sides).
-    A path costs a schema-inference job; a DataFrame read with the
-    staged frame's schema (``schemas.as_nullable``) costs none.
-    ``None`` keeps the static default.
+    ``source``: a batch DataFrame over the staged input, or a list of
+    them (stream-stream joins pass both sides). Read it with the staged
+    frame's schema (``schemas.as_nullable``) so it costs no
+    schema-inference job. ``None`` keeps the static default.
     """
     override = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
     if override:
         return int(override)
     if source is None:
         return STREAM_SHUFFLE_PARTITIONS
-    paths = source if isinstance(source, (list, tuple)) else [source]
+    frames = source if isinstance(source, (list, tuple)) else [source]
     unknown = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
     size = 0
-    for p in paths:
-        df = spark.read.parquet(p) if isinstance(p, str) else p
+    for df in frames:
         # leaf-relation plan statistics = total file bytes (listing
         # already cached by the schema read every call site does); no
         # job, no scan
@@ -195,9 +193,10 @@ class scoped_shuffle_partitions:
     scoped width must execute INSIDE the block (lazy frames
     materialized later see the restored session value).
 
-    ``source`` (r13): staged stream input (path/DataFrame/list) the
-    width is derived from via :func:`stream_state_partitions`; without
-    it the static ``STREAM_SHUFFLE_PARTITIONS`` default applies."""
+    ``source`` (r13): staged stream input (a DataFrame or a list of
+    them) the width is derived from via :func:`stream_state_partitions`;
+    without it the static ``STREAM_SHUFFLE_PARTITIONS`` default
+    applies."""
 
     def __init__(self, spark: SparkSession, n: int | None = None, *, source=None):
         self._spark = spark
@@ -219,31 +218,30 @@ _SHIPPED: set[int] = set()
 
 def _ship_package(spark: SparkSession) -> None:
     """Make ``wistia_etl_pipeline_spark`` importable on executors via
-    ``addPyFile`` (a zip built once per process). Harmless no-op for
-    pure-JVM plans; required for any Python-worker stage."""
+    ``addPyFile`` (a zip built once per process). Unneeded by pure-JVM
+    plans, required by any Python-worker stage: a failure to ship
+    raises here rather than as an import error inside a later task,
+    and the context is marked shipped only once ``addPyFile`` returns."""
+    import tempfile
+    import zipfile
+
     key = id(spark.sparkContext)
     if key in _SHIPPED:
         return
-    try:
-        import tempfile
-        import zipfile
-
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
-        zip_path = os.path.join(
-            tempfile.gettempdir(), f"wistia_etl_pipeline_spark_{os.getpid()}.zip"
-        )
-        if not os.path.exists(zip_path):
-            with zipfile.ZipFile(zip_path, "w") as zf:
-                for root, _dirs, files in os.walk(pkg_dir):
-                    for fn in files:
-                        if fn.endswith(".py"):
-                            full = os.path.join(root, fn)
-                            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                            zf.write(full, rel)
-        spark.sparkContext.addPyFile(zip_path)
-        _SHIPPED.add(key)
-    except Exception:
-        pass  # best-effort; plain-JVM queries don't need it
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    zip_path = os.path.join(
+        tempfile.gettempdir(), f"wistia_etl_pipeline_spark_{os.getpid()}.zip"
+    )
+    if not os.path.exists(zip_path):
+        with zipfile.ZipFile(zip_path, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                        zf.write(full, rel)
+    spark.sparkContext.addPyFile(zip_path)
+    _SHIPPED.add(key)
 
 
 #: Entries in Spark's generated-class cache (static conf

@@ -1,2 +1,2 @@
-"""Sources & sinks: schema'd JSON readers, REST paginated source,
-partitioned writers, control-file state store."""
+"""Sources & sinks: REST paginated source, transaction-log table,
+layout writers, control-file state store."""

@@ -67,8 +67,8 @@ def http_get_json(
 
 
 def page_shape(payload) -> tuple[list, int | None, int | None]:
-    """Pure twin of the declarative normalizer (bronze.py:135-146):
-    accept a bare array or an envelope; return (rows, total, per_page).
+    """The page-shape normalizer (bronze.py:135-146): accept a bare
+    array or an envelope; return (rows, total, per_page).
     """
     if isinstance(payload, list):
         return payload, None, None

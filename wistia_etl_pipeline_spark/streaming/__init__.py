@@ -1,1 +1,1 @@
-"""Structured Streaming variant of the medallion pipeline."""
+"""Structured Streaming: the foreachBatch MERGE sink."""
