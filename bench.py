@@ -29,11 +29,9 @@ sits below its warm total (291 s). Both keys stay because
 
 ``counts`` lists ``[jobs, stages]`` for every timed sample of a query,
 warm rounds then cold, as read from ``statusTracker()`` for the
-sample's job group. Jobs a query starts from its own worker threads
-carry the group only when the thread inherits the caller's local
-properties: ``dedup_threshold_sensitivity`` runs its closures on a
-``ThreadPoolExecutor`` through ``pyspark.inheritable_thread_target``,
-so they are counted; a plain thread's jobs would not be.
+sample's job group plus the job group of every streaming query the
+sample started: a stream runs its micro-batch jobs under group
+``str(runId)``, not the caller's.
 
 A run over the whole registry also writes the line to
 ``$SPARK_GRAFT_BENCH_OUT`` (default ``BENCH_LOCAL.json``), the record
@@ -47,6 +45,8 @@ import os
 import statistics
 import sys
 import time
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -69,20 +69,45 @@ def _release_cached(spark) -> None:
         jrdd.unpersist()
 
 
+class _StreamRuns(StreamingQueryListener):
+    """The run id of every streaming query started while registered.
+    ``onQueryStarted`` returns before ``start()`` does."""
+
+    def __init__(self) -> None:
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event) -> None:
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+
 def _run(spark, fn, sf_dir: str, group: str) -> tuple[float, int, int]:
     """One timed sample of query ``fn``: ``(seconds, jobs, stages)``.
 
     The noop write runs under job group ``group``; the group is cleared
-    after the timer stops, its job and stage counts are read from the
-    status tracker, and the cached state the query left is released."""
+    after the timer stops, the job and stage counts of that group and
+    of every stream started meanwhile are read from the status tracker,
+    and the cached state the query left is released."""
     sc = spark.sparkContext
+    streams = _StreamRuns()
+    spark.streams.addListener(streams)
     sc.setJobGroup(group, group)
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    seconds = time.perf_counter() - t0
-    sc._jsc.clearJobGroup()
+    try:
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        seconds = time.perf_counter() - t0
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.streams.removeListener(streams)
     tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
+    jobs = [
+        j for g in [group, *streams.run_ids] for j in tracker.getJobIdsForGroup(g)
+    ]
     stages = sum(
         len(info.stageIds) for info in map(tracker.getJobInfo, jobs) if info
     )

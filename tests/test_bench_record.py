@@ -97,3 +97,30 @@ def test_only_a_whole_registry_run_writes_the_record(
     for samples in rec["counts"].values():
         assert len(samples) == 2  # one warm, one cold
         assert all(jobs >= 1 and stages >= 1 for jobs, stages in samples)
+
+
+def test_a_sample_counts_the_jobs_of_the_streams_it_starts(spark, tmp_path):
+    """A stream runs its micro-batch jobs under job group
+    ``str(runId)``, not the sample's group; the sample's counts must
+    include them."""
+    src = tmp_path / "in"
+    spark.range(5).write.parquet(str(src))
+    run_ids = []
+
+    def one_trigger_stream(spark, sf_dir):
+        q = (
+            spark.readStream.schema("id long").parquet(str(src))
+            .writeStream.format("noop").trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / "ck")).start()
+        )
+        q.awaitTermination()
+        run_ids.append(str(q.runId))
+        return spark.range(1)
+
+    _, jobs, stages = bench._run(spark, one_trigger_stream, "", "bench:stream")
+    tracker = spark.sparkContext.statusTracker()
+    own = tracker.getJobIdsForGroup("bench:stream")
+    micro_batch = tracker.getJobIdsForGroup(run_ids[0])
+    assert len(micro_batch) >= 1
+    assert jobs == len(own) + len(micro_batch)
+    assert stages >= jobs

@@ -16,6 +16,12 @@ SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} python tools/check_correctness.py /root
 echo "== oracle sweep (sf0.01) =="
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} python tools/check_correctness.py /root/testdata/sf0.01
 
+echo "== oracle sweep (sf0.01, width 1) =="
+SPARK_GRAFT_CPUS=1 python tools/check_correctness.py /root/testdata/sf0.01
+
+echo "== oracle sweep (sf0.01, width 64) =="
+SPARK_GRAFT_CPUS=64 python tools/check_correctness.py /root/testdata/sf0.01
+
 echo "== oracle sweep (sf0.01, hostile session: plain builder, non-UTC tz) =="
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} python tools/check_correctness.py /root/testdata/sf0.01 --hostile
 

@@ -29,6 +29,8 @@ cluster, prefer ``spark.sparkContext.setCheckpointDir`` + reliable
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -37,6 +39,26 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     fwd = edges.select("src", "dst")
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return fwd.unionByName(rev).where(F.col("src") != F.col("dst"))
+
+
+def _sym_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct symmetric edge list (``src``, ``dst``) of ``edges``,
+    self-loops dropped, eagerly checkpointed: the start of every graph
+    operator but ``connected_components`` (whose node universe keeps
+    self-loop-only nodes). Ids keep their type.
+
+    The lazy cut comes BEFORE symmetrizing (r13): ``_symmetric``'s union
+    reads its input through two different projections, which compile
+    as two separate copies of the upstream pair-miner subplan (no
+    exchange reuse across differing projections — NOTES rule #7). One
+    shared RDD lets the DAGScheduler dedup its lineage stages, so the
+    miner runs once, inside the eager checkpoint's job."""
+    base = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=False)
+    )
+    return _symmetric(base).distinct().localCheckpoint(eager=True)
 
 
 def _large_star(nbr: DataFrame) -> DataFrame:
@@ -98,8 +120,7 @@ def connected_components(
     # LAZY (r13): the first convergence aggregate materializes it — the
     # DAGScheduler dedups the shared RDD's lineage stages within that
     # job, so the miner still runs exactly once but the separate eager
-    # materialization job (~0.2-0.3 s fixed, ×3 in the τ-sensitivity
-    # query's three closures) disappears.
+    # materialization job (~0.2-0.3 s fixed) disappears.
     raw = edges.select(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
@@ -127,8 +148,7 @@ def connected_components(
     cur_sig = _materialize(cur)
 
     # The star shuffles take the session's partitioning, which AQE
-    # coalesces; no conf is touched, so the τ-sensitivity query can run
-    # its three closures as concurrent jobs on one session.
+    # coalesces; no conf is touched.
     for _ in range(max_iter):
         nxt = _small_star(
             _symmetric(_large_star(_symmetric(cur)))
@@ -136,10 +156,9 @@ def connected_components(
         nxt_sig = _materialize(nxt)
         changed = nxt_sig != cur_sig or not nxt.exceptAll(cur).isEmpty()
         prev, cur, cur_sig = cur, nxt, nxt_sig
-        if not changed:
-            prev.unpersist()
-            break
         prev.unpersist()
+        if not changed:
+            break
     else:
         raise RuntimeError(
             f"connected_components: no fixpoint in {max_iter} rounds"
@@ -435,22 +454,7 @@ def kcore_peel(
     """
     if max_rounds < 1:
         raise ValueError(f"kcore_peel: max_rounds must be >= 1, got {max_rounds}")
-    # Lazy cut BEFORE symmetrization (r13): _symmetric's union reads its
-    # input through two different projections, which compile as two
-    # separate copies of the upstream pair-miner subplan (no exchange
-    # reuse across differing projections — NOTES rule #7), so the eager
-    # checkpoint below was executing the whole miner stage DAG twice.
-    # One shared RDD = the DAGScheduler dedups its lineage stages; the
-    # miner runs once inside the same materializing job.
-    base = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=False)
-    )
-    sym = _symmetric(base).distinct().localCheckpoint(eager=True)
+    sym = _sym_edges(edges, src, dst)
     small_frontier = sym.count() <= _SMALL_FRONTIER
     nodes = sym.select(F.col("src").alias("node")).distinct()
     keep_parts: list[DataFrame] = []
@@ -479,8 +483,6 @@ def kcore_peel(
             .join(probe, F.col("dst") == F.col("node"), "left_semi")
             .localCheckpoint(eager=False)
         )
-
-    from functools import reduce
 
     core_deg = cur_edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("core_deg")
@@ -545,17 +547,7 @@ def random_walks(
     the walk frontier against the ranked adjacency, walk state is one
     row per (node, walk). Python never sees a row.
     """
-    # Lazy cut before symmetrization — same single-miner-execution
-    # rationale as kcore_peel (r13).
-    base = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=False)
-    )
-    sym = _symmetric(base).distinct().localCheckpoint(eager=True)
+    sym = _sym_edges(edges, src, dst)
     # The ranked adjacency and the degree table are joined against the
     # walk frontier at EVERY step — lazy checkpoints pin each to one
     # computation instead of walk_length re-derivations (the triangle
@@ -654,15 +646,7 @@ def bfs_layers(
     every round (the module's iterative-join rule); each round is one
     equi-join + distinct + anti-join, all hash-partitioned on node.
     """
-    base = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=False)
-    sym = (
-        _symmetric(base)
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _sym_edges(edges, src, dst)
     universe = sym.select(F.col("src").alias("node")).distinct()
     layer = (
         seeds.select("node")
@@ -687,8 +671,6 @@ def bfs_layers(
         layer = nxt
     else:
         raise RuntimeError(f"bfs_layers: frontier alive after {max_rounds} rounds")
-
-    from functools import reduce
 
     return reduce(lambda a, b: a.unionByName(b), parts)
 
@@ -742,22 +724,12 @@ def label_propagation(
     otherwise); the 100 TB path keeps the shuffled join and aggregate
     exchanges unchanged.
     """
-    from pyspark.sql import Window
-
     if rounds < 1:
         # range(0) would skip the eager materialization entirely and
         # return a lazy frame the CALLER materializes outside this
         # operator's invariants (ADVICE r12).
         raise ValueError(f"label_propagation: rounds must be >= 1, got {rounds}")
-    base = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=False)
-    sym = (
-        _symmetric(base)
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _sym_edges(edges, src, dst)
     n_edges = sym.count()
     small_frontier = n_edges <= _SMALL_FRONTIER
     bcast_labels = n_edges <= _LPA_BROADCAST_EDGES

@@ -1769,7 +1769,7 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     every MinHash deployment decision ("what does moving τ actually do
     to my corpus?"): the banded candidate set is mined ONCE (with its
     exact shingle-overlap integers), then verified at τ ∈ {0.50, 0.80,
-    0.95} and each cut closed into components — per τ: surviving
+    0.95} and all cuts closed by ONE closure — per τ: surviving
     pairs, cluster count, largest cluster, docs a keep-canonical dedup
     would drop. The corpus plants all three regimes deliberately:
     exact copies (J=1), LSH-chain near-dups (~0.8+), and a 60%-PREFIX
@@ -1784,10 +1784,21 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     len_union — the INTEGER cross-multiplied form of jaccard >= τ (no
     double ever compared to a threshold; the miner's rounded-double
     path is bypassed via jaccard_threshold=None + exact re-derivation
-    of the same shingle counts). Shape at 100 TB: ONE banding
-    self-join feeds all three cuts (lazy checkpoint — the fan-out
-    lesson); each closure is the O(log n) star-contraction; everything
-    else is cluster-grain."""
+    of the same shingle counts).
+
+    One closure, three cuts: each candidate pair is kept once per level
+    ``lvl`` (0, 1, 2 for τ = .50, .80, .95) whose cut it passes, its
+    endpoints tagged ``id * 3 + lvl``, over a universe of every document
+    at every level. No edge joins two levels, so the components of this
+    disjoint union are exactly the per-level components; within a level
+    the tag is strictly increasing in the id, so a component's minimum
+    tag is ``min id * 3 + lvl`` (its level is ``pmod(tag, 3)``) and the
+    per-level sizes, counts and maxima are unchanged. ``id * 3``
+    overflows only for ids above ~3·10¹⁸, where ANSI mode raises.
+
+    Shape at 100 TB: ONE banding self-join feeds all three cuts (one
+    checkpoint — the fan-out lesson); the closure is the O(log n)
+    star-contraction; everything else is cluster-grain."""
     from ..functions.dedupe import minhash_near_dup_pairs
     from ..functions.graph import dup_clusters as _clusters
     from ..functions.text import normalize_text
@@ -1804,13 +1815,12 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = _dup_corpus(docs).unionByName(mutant)
     # Candidate pairs WITH their exact integer overlap sizes, mined
-    # once — return_counts rides the miner's internal cached shingle
-    # frame. (r6 fix: the first draft re-derived shingles through two
-    # uncached corpus-wide joins to compute li/lu — 71 s of the 99 s
-    # query at sf1, invisible to count() probes because count prunes
-    # the array payloads.)
-    # EAGER (r13): three concurrent closures consume this frame — a lazy
-    # checkpoint would let their first jobs race-materialize it.
+    # once from the miner's cached shingle frame (r6: re-deriving the
+    # shingles through uncached joins took 71 s of a 99 s query at sf1).
+    # EAGER: a lazy cut nested under the closure's own lazy cut is
+    # never truncated (only the outermost marked RDD of a job is), so
+    # every later job re-lists the miner's stages — one job fewer but
+    # some nine stages more per sf0.1 sample, at equal time.
     cand = (
         minhash_near_dup_pairs(
             corpus, "doc_id", "text",
@@ -1820,53 +1830,38 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id", "li", "lu")
         .localCheckpoint(eager=True)
     )
-
-    def _tau_stats(num: int, den: int) -> DataFrame:
-        pairs = cand.where(
-            F.col("li") * F.lit(den) >= F.lit(num) * F.col("lu")
-        ).select("a_id", "b_id")
-        n_pairs = pairs.agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-        assign = _clusters(pairs, universe=corpus)
-        sizes = assign.groupBy("cluster_id").agg(
-            F.count(F.lit(1)).alias("sz")
-        )
-        stats = sizes.agg(
-            F.lit(num * 100 // den).cast("long").alias("tau_centi"),
-            F.count(F.lit(1)).cast("long").alias("n_clusters"),
-            F.max("sz").cast("long").alias("largest_cluster"),
-            (F.sum("sz") - F.count(F.lit(1)))
-            .cast("long")
-            .alias("n_dropped"),
-        )
-        return stats.crossJoin(F.broadcast(n_pairs)).select(
-            "tau_centi", "n_pairs", "n_clusters",
-            "largest_cluster", "n_dropped",
-        )
-
-    # The three closures are independent iterative jobs whose per-round
-    # actions are fixed-cost-bound at any SF; run them concurrently so
-    # each one's stragglers back-fill the others' idle slots (guide
-    # §2.6). Safe on one session because no closure writes the session
-    # conf, and ``inheritable_thread_target`` carries the caller's job
-    # group and local properties into each pool thread. Results are
-    # deterministic per τ and reassembled in the fixed (50, 80, 95)
-    # order.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     taus = ((1, 2), (4, 5), (19, 20))
-    with ThreadPoolExecutor(max_workers=len(taus)) as pool:
-        outs = list(
-            pool.map(
-                inheritable_thread_target(lambda nd: _tau_stats(*nd)),
-                taus,
-            )
+    n = len(taus)
+    cuts = [F.col("li") * den >= num * F.col("lu") for num, den in taus]
+    n_pairs = cand.agg(F.array(*[F.count_if(c) for c in cuts]).alias("n_pairs"))
+    levels = F.broadcast(spark.createDataFrame(
+        [(lvl, num * 100 // den) for lvl, (num, den) in enumerate(taus)],
+        "lvl long, tau_centi long",
+    ))
+    tagged = (
+        cand.select(
+            "a_id", "b_id",
+            F.explode(F.array(*[F.when(c, lvl) for lvl, c in enumerate(cuts)])).alias("lvl"),
         )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+        .where(F.col("lvl").isNotNull())
+        .select(*[(F.col(c) * n + F.col("lvl")).alias(c) for c in ("a_id", "b_id")])
+    )
+    universe = corpus.crossJoin(levels).select(
+        (F.col("doc_id") * n + F.col("lvl")).alias("doc_id")
+    )
+    sizes = _clusters(tagged, universe=universe).groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias("sz")
+    )
+    stats = sizes.groupBy(F.pmod("cluster_id", F.lit(n)).alias("lvl")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_clusters"),
+        F.max("sz").cast("long").alias("largest_cluster"),
+        (F.sum("sz") - F.count(F.lit(1))).cast("long").alias("n_dropped"),
+    )
+    return stats.join(levels, "lvl").crossJoin(F.broadcast(n_pairs)).select(
+        "tau_centi",
+        F.col("n_pairs")[F.col("lvl")].cast("long").alias("n_pairs"),
+        "n_clusters", "largest_cluster", "n_dropped",
+    )
 
 
 _HEAPS_ORACLE = rf"""
