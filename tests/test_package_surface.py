@@ -1,4 +1,4 @@
-"""Guard against test-only package surface (no Spark).
+"""Guards on the package surface (no Spark).
 
 Every public module-level ``def``/``class`` in the package must be
 referenced by code outside ``tests/``: the package itself, ``tools/``,
@@ -6,6 +6,11 @@ referenced by code outside ``tests/``: the package itself, ``tools/``,
 A function only a unit test calls is code no job, query or benchmark
 runs; wire it into a registered query's path or delete it with its
 tests. Registered queries (``@query``) count as used.
+
+Only the session builder and the stream runner name
+``spark.sql.shuffle.partitions``: batch plans size their shuffles per
+plan, and a query that writes the session conf changes the width of
+every other plan running on that session.
 """
 
 from __future__ import annotations
@@ -97,4 +102,46 @@ def test_every_public_definition_has_a_code_reference():
     )
     assert not KEEP - unreferenced, (
         f"keep-list entries that are now referenced or gone: {sorted(KEEP - unreferenced)}"
+    )
+
+
+#: The functions that may name ``spark.sql.shuffle.partitions``.
+SHUFFLE_CONF_OWNERS = {
+    "session.py:get_spark",
+    "streaming/pipeline.py:run_available",
+}
+
+
+def _shuffle_conf_users() -> set[str]:
+    key = "spark.sql.shuffle.partitions"
+    found = set()
+    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+        rel = path.relative_to(ROOT / PACKAGE).as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        docstrings = {
+            id(n.value)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+        }
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and key in node.value
+                    and id(node) not in docstrings
+                ):
+                    found.add(f"{rel}:{owner}")
+    return found
+
+
+def test_only_the_session_builder_and_stream_runner_set_the_shuffle_width():
+    users = _shuffle_conf_users()
+    assert users <= SHUFFLE_CONF_OWNERS, (
+        "spark.sql.shuffle.partitions named outside get_spark and "
+        f"run_available: {sorted(users - SHUFFLE_CONF_OWNERS)}"
+    )
+    assert users == SHUFFLE_CONF_OWNERS, (
+        f"owners that no longer name it: {sorted(SHUFFLE_CONF_OWNERS - users)}"
     )

@@ -11,7 +11,10 @@ import pytest
 from wistia_etl_pipeline_spark.operators.flatten import flatten_events
 from wistia_etl_pipeline_spark.schemas import RAW_EVENT_SCHEMA
 from wistia_etl_pipeline_spark.sources.txlog import TxLogTable
-from wistia_etl_pipeline_spark.streaming.pipeline import merge_batch_sink
+from wistia_etl_pipeline_spark.streaming.pipeline import (
+    merge_batch_sink,
+    run_available,
+)
 
 
 def _event(key, ts, pv=0.5, visitor="v1"):
@@ -718,10 +721,9 @@ def test_stream_state_partitions_unknown_size_floors(spark, tmp_path):
 
 
 def test_stream_state_partitions_derivation(spark, tmp_path):
-    """r13: the streaming state width derives from staged source bytes
-    — floors at the static default for MB-scale inputs (bench SFs are
-    bit-identical to the r12 constant), scales with bytes above it,
-    honors the clamp, and the env override short-circuits everything."""
+    """The streaming state width derives from staged source bytes:
+    floors at the static default for MB-scale inputs, scales with bytes
+    above it, and honors the clamp."""
     import os
 
     from wistia_etl_pipeline_spark import session as S
@@ -757,29 +759,64 @@ def test_stream_state_partitions_derivation(spark, tmp_path):
     finally:
         S.STREAM_STATE_BYTES_PER_PARTITION = old
 
-    # the env override wins over any derivation
-    os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "77"
-    try:
-        assert S.stream_state_partitions(spark, src_df) == 77
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
-
-    # scoped_shuffle_partitions(source=...) applies the derived width
-    with S.scoped_shuffle_partitions(spark, source=src_df):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-            S.STREAM_SHUFFLE_PARTITIONS
-        )
+    # run_available starts the stream at the derived width, bounded by
+    # its checkpoint and an availableNow trigger, then restores the conf
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    writer = _StandInWriter(spark, finishes=True)
+    run_available(spark, writer, str(tmp_path / "ckpt"), src_df)
+    assert writer.width_at_start == str(S.STREAM_SHUFFLE_PARTITIONS) != before
+    assert writer.options == {"checkpointLocation": str(tmp_path / "ckpt")}
+    assert writer.trigger_args == {"availableNow": True}
+    assert not writer.query.stopped
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_stream_shuffle_override_is_read_at_call_time(spark, monkeypatch):
-    """SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS set after the session module
-    was imported still sizes the next scoped stream."""
-    import wistia_etl_pipeline_spark.session as S
+class _StandInQuery:
+    def __init__(self, finishes: bool):
+        self.finishes, self.stopped = finishes, False
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "5")
-    assert S.stream_state_partitions(spark, None) == 5
-    with S.scoped_shuffle_partitions(spark, source=spark.range(10)):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    def awaitTermination(self, timeout):
+        return self.finishes
+
+    def stop(self):
+        self.stopped = True
+
+
+class _StandInWriter:
+    """A ``DataStreamWriter`` stand-in: records the options and trigger
+    it is given and the session's shuffle width when it starts; its
+    query finishes in time or not, as told."""
+
+    def __init__(self, spark, finishes: bool):
+        self.spark, self.options = spark, {}
+        self.query = _StandInQuery(finishes)
+
+    def option(self, key, value):
+        self.options[key] = value
+        return self
+
+    def trigger(self, **kwargs):
+        self.trigger_args = kwargs
+        return self
+
+    def start(self):
+        self.width_at_start = self.spark.conf.get("spark.sql.shuffle.partitions")
+        return self.query
+
+
+def test_run_available_stops_and_raises_on_timeout(spark, tmp_path):
+    """A stream still running at the timeout is stopped, the run raises
+    naming its checkpoint, and the session's shuffle width is restored
+    on that path too."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    writer = _StandInWriter(spark, finishes=False)
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(RuntimeError, match="refusing to read a partially-written") as exc:
+        run_available(spark, writer, ckpt, None)
+    assert ckpt in str(exc.value)
+    assert writer.query.stopped
+    assert writer.width_at_start != before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_txlog_sink_crash_at_each_commit_boundary_converges_after_restart(

@@ -11,12 +11,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from ..operators.dedup import dedup_exact, dedup_latest_wins
 from ..operators.rollup import daily_rollup
 from ..schemas import as_nullable
-from ..session import (
-    apply_runtime_confs,
-    arrow_local_df,
-    load_table,
-    scoped_shuffle_partitions,
-)
+from ..session import apply_runtime_confs, arrow_local_df, load_table
+from ..streaming.pipeline import merge_batch_sink, run_available
 from ._base import query
 from .q01_core_gold_silver import _DUP_SHIFT, _NORM, _TOKS, _dup_corpus
 
@@ -246,7 +242,6 @@ def streaming_gold_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources.txlog import TxLogTable
-    from ..streaming.pipeline import merge_batch_sink
 
     root = tempfile.mkdtemp(prefix="wistia_stream_gold_")
     src = os.path.join(root, "src")
@@ -269,26 +264,16 @@ def streaming_gold_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("engagement_sum"),
     )
     gold = os.path.join(root, "gold")
-
-    # Day-grain state at the session's compute-width partitioning pays
-    # per-partition store maintenance every trigger for ~30 keys — size
-    # state partitions to state volume (session.scoped_shuffle_partitions;
-    # the r9 statestore_join_state_audit lesson). Values are partition-
-    # count independent; only the store/commit bill changes.
-    with scoped_shuffle_partitions(
-        spark, source=spark.read.schema(schema).parquet(src)
-    ):
-        q = (
-            agg.writeStream.outputMode("update")
-            # UPDATE mode emits the keys whose state changed this
-            # trigger, with cumulative values: upsert-by-day is the
-            # idempotent sink.
-            .foreachBatch(merge_batch_sink(gold, ["dt"]))
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available(
+        spark,
+        # UPDATE mode emits the keys whose state changed this trigger,
+        # with cumulative values: upsert-by-day is the idempotent sink.
+        agg.writeStream.outputMode("update").foreachBatch(
+            merge_batch_sink(gold, ["dt"])
+        ),
+        os.path.join(root, "ckpt"),
+        spark.read.schema(schema).parquet(src),
+    )
     out = TxLogTable(gold).read(spark)
     return out.select("dt", "load_count", "play_count", "engagement_sum")
 
@@ -947,22 +932,19 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    # Session-merge state is per-user and watermark-bounded — state
-    # partitions sized to state volume, not compute width (the shared
-    # streaming-family rule; see session.scoped_shuffle_partitions).
-    with scoped_shuffle_partitions(
-        spark, source=spark.read.schema(schema).parquet(src)
-    ):
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0)
+    run_available(
+        spark,
+        sessions.writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append"),
+        os.path.join(root, "ckpt"),
+        spark.read.schema(schema).parquet(src),
+    )
+    return (
+        spark.read.schema(sessions.schema)
+        .parquet(out)
+        .filter(F.col("user_id") >= 0)
+    )
 
 
 @query(
@@ -1648,21 +1630,15 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    # Dedup state holds only in-window keys — state partitions sized to
-    # state volume (session.scoped_shuffle_partitions, shared rule).
-    with scoped_shuffle_partitions(
-        spark, source=spark.read.schema(schema).parquet(src)
-    ):
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out)
+    run_available(
+        spark,
+        deduped.writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append"),
+        os.path.join(root, "ckpt"),
+        spark.read.schema(schema).parquet(src),
+    )
+    return spark.read.schema(deduped.schema).parquet(out)
 
 
 def _pq_blocks(m: int = 4, k: int = 8, dims: int = 64) -> str:

@@ -11,12 +11,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from ..operators.dedup import dedup_exact, dedup_latest_wins
 from ..operators.rollup import daily_rollup
 from ..schemas import as_nullable
-from ..session import (
-    apply_runtime_confs,
-    arrow_local_df,
-    load_table,
-    scoped_shuffle_partitions,
-)
+from ..session import apply_runtime_confs, arrow_local_df, load_table
+from ..streaming.pipeline import run_available
 from ._base import query
 from .q01_core_gold_silver import _DUP_CORPUS_SQL, _NORM, _TOKS, _dup_corpus
 
@@ -952,22 +948,17 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     )
     out = os.path.join(root, "out")
-    # A stream-stream join keeps 4 state stores per shuffle partition
-    # per side, all paying maintenance every trigger — state partitions
-    # sized to the 90-minute state horizon, not compute width (the r9
-    # statestore_join_state_audit measurement, via the shared
-    # session.scoped_shuffle_partitions rule).
-    with scoped_shuffle_partitions(spark, source=[v_src, p_src]):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    pairs = spark.read.parquet(out)
+    # the width comes from both sides: the join keeps 4 state stores per
+    # partition per side
+    run_available(
+        spark,
+        joined.writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append"),
+        os.path.join(root, "ckpt"),
+        [v_src, p_src],
+    )
+    pairs = spark.read.schema(joined.schema).parquet(out)
     return pairs.groupBy(F.to_date("vts").alias("dt")).agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.count_distinct("v_user").cast("long").alias("n_users"),

@@ -11,12 +11,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from ..operators.dedup import dedup_exact, dedup_latest_wins
 from ..operators.rollup import daily_rollup
 from ..schemas import as_nullable
-from ..session import (
-    apply_runtime_confs,
-    arrow_local_df,
-    load_table,
-    scoped_shuffle_partitions,
-)
+from ..session import apply_runtime_confs, arrow_local_df, load_table
+from ..streaming.pipeline import run_available
 from ._base import query
 from .q01_core_gold_silver import _DUP_CORPUS_SQL, _DUP_SHIFT, _NORM, _dup_corpus
 from .q07_sketches_graph import _minhash_pairs_ctes
@@ -2742,7 +2738,11 @@ def datasource_writer_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from ..sources.staged_sink import StagedJsonDataSource, read_manifest
+    from ..sources.staged_sink import (
+        StagedJsonDataSource,
+        committed_files,
+        read_manifest,
+    )
 
     from ..functions.dedupe import fan_out
 
@@ -2770,7 +2770,7 @@ def datasource_writer_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest_rows = int(read_manifest(out)["total_rows"])
     back = spark.read.schema(
         "event_type string, user_id long, value double, ts_str string"
-    ).json(os.path.join(out, "part-*.json"))
+    ).json(committed_files(out))
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
@@ -2809,12 +2809,10 @@ def streaming_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at 100 TB: the sink's commit path is manifest-sized (counts
     + checksums, never data); per-epoch work is the micro-batch's own;
     nothing accumulates driver-side."""
-    import glob
-    import json as _json
     import os
     import tempfile
 
-    from ..sources.staged_sink import StagedJsonDataSource
+    from ..sources.staged_sink import StagedJsonDataSource, committed_files
     from ..streaming.staging import stage_time_ordered
 
     spark.dataSource.register(StagedJsonDataSource)
@@ -2840,34 +2838,17 @@ def streaming_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_str"),
         )
     )
-    # Stateless epochs through a Python sink — per-trigger task count
-    # scoped to the micro-batch's size, not compute width
-    # (session.scoped_shuffle_partitions, shared streaming-family rule).
-    with scoped_shuffle_partitions(
-        spark, source=spark.read.schema(schema).parquet(src)
-    ):
-        q = (
-            stream.writeStream.format("staged_json")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    committed = []
-    for mf in sorted(glob.glob(os.path.join(out, "_MANIFEST-*.json"))):
-        with open(mf, encoding="utf-8") as f:
-            m = _json.load(f)
-        prefix = f"epoch-{m['batch_id']:06d}-"
-        committed.extend(
-            os.path.join(out, fi["path"])
-            for fi in m["files"]
-            if fi["path"].startswith(prefix)
-        )
+    run_available(
+        spark,
+        stream.writeStream.format("staged_json")
+        .option("path", out)
+        .outputMode("append"),
+        os.path.join(root, "ckpt"),
+        spark.read.schema(schema).parquet(src),
+    )
     back = spark.read.schema(
         "event_type string, value double, ts_str string"
-    ).json(committed)
+    ).json(committed_files(out))
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(

@@ -18,12 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..schemas import as_nullable
-from ..session import (
-    apply_runtime_confs,
-    arrow_local_df,
-    load_table,
-    scoped_shuffle_partitions,
-)
+from ..session import apply_runtime_confs, arrow_local_df, load_table
+from ..streaming.pipeline import run_available
 from ._base import query
 
 # ---------------------------------------------------------------------------
@@ -1181,23 +1177,16 @@ def streaming_hll_sketch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         table.merge(sess, new, ["bucket"])
 
-    # Stateless stream; each foreachBatch fold shuffles to <= 64
-    # register rows — scoped to state volume, not compute width
-    # (session.scoped_shuffle_partitions, shared streaming-family rule).
-    with scoped_shuffle_partitions(
-        spark, source=spark.read.schema(schema).parquet(src)
-    ):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .writeStream.outputMode("append")
-            .foreachBatch(_fold_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available(
+        spark,
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+        .writeStream.outputMode("append")
+        .foreachBatch(_fold_batch),
+        os.path.join(root, "ckpt"),
+        spark.read.schema(schema).parquet(src),
+    )
 
     state = table.read(spark)
     batch_regs = regs_of(events)

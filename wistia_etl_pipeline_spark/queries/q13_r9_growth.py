@@ -36,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schemas import as_nullable
-from ..session import load_table, scoped_shuffle_partitions
+from ..session import load_table
+from ..streaming.pipeline import run_available
 from ._base import query
 from .q01_core_gold_silver import _dup_corpus
 from .q02_sessions_events_e2e import _simhash_pairs_oracle
@@ -417,31 +418,13 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("CAST(floor(value * 1000000) AS BIGINT)")).alias("s"),
         )
     )
-    # State partitions sized to the ~5-key aggregation state, not
-    # compute width (session.scoped_shuffle_partitions — the same rule
-    # statestore_join_state_audit below measured and documented); the
-    # state source reads numPartitions from checkpoint metadata.
-    with scoped_shuffle_partitions(
-        spark, source=spark.read.schema(schema).parquet(src)
-    ):
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(300)
-    if not done:
-        # Timing out and reading anyway would audit a PARTIAL checkpoint
-        # and surface as a baffling hash mismatch (r9 advice) — fail
-        # loudly with the actual cause instead.
-        q.stop()
-        raise RuntimeError(
-            "statestore_reader_audit: streaming aggregation did not "
-            "finish within 300 s; refusing to read a partially-written "
-            "checkpoint"
-        )
+    # the state source reads numPartitions from checkpoint metadata
+    run_available(
+        spark,
+        stream.writeStream.outputMode("complete").format("noop"),
+        ckpt,
+        spark.read.schema(schema).parquet(src),
+    )
 
     meta = (
         spark.read.format("state-metadata")
@@ -778,16 +761,9 @@ def statestore_join_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding (state-skew per key, stuck watermarks) without stopping
     the stream.
 
-    State-partition sizing: a stream-stream join keeps FOUR state
-    stores per shuffle partition per side (keyToNumValues +
-    keyWithIndex × 2 sides), and every micro-batch pays maintenance on
-    all of them whether or not they hold data — at the session's 32
-    shuffle partitions that is 256 store snapshots per batch for
-    kilobytes of state (measured: ~4× the whole query's runtime). The
-    stream therefore starts at 8 partitions (restored after), the
-    knob a real deployment sizes to its state volume, not its compute
-    parallelism; the state source reads numPartitions from checkpoint
-    metadata, so the audit is unaffected."""
+    The stream runs at the state width ``run_available`` derives from
+    both staged sides; the state source reads numPartitions from
+    checkpoint metadata, so the audit is unaffected."""
     import os
     import tempfile
 
@@ -802,14 +778,16 @@ def statestore_join_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vp, pp = os.path.join(root, "v"), os.path.join(root, "p")
     views.repartition(2).write.parquet(vp)
     purch.repartition(2).write.parquet(pp)
+    v_src = spark.read.schema(as_nullable(views.schema)).parquet(vp)
+    p_src = spark.read.schema(as_nullable(purch.schema)).parquet(pp)
     v_stream = (
-        spark.readStream.schema(as_nullable(views.schema))
+        spark.readStream.schema(v_src.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(vp)
         .withWatermark("vts", "3650 days")
     )
     p_stream = (
-        spark.readStream.schema(as_nullable(purch.schema))
+        spark.readStream.schema(p_src.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(pp)
         .withWatermark("pts", "3650 days")
@@ -822,22 +800,7 @@ def statestore_join_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     )
     ck = os.path.join(root, "ck")
-    with scoped_shuffle_partitions(spark, n=8):
-        q = (
-            joined.writeStream.format("noop")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # Same rule as statestore_reader_audit: never open the state
-            # source on a checkpoint the stream hasn't finished writing.
-            q.stop()
-            raise RuntimeError(
-                "statestore_join_state_audit: stream-stream join did "
-                "not finish within 300 s; refusing to read a "
-                "partially-written checkpoint"
-            )
+    run_available(spark, joined.writeStream.format("noop"), ck, [v_src, p_src])
 
     meta = (
         spark.read.format("state-metadata")

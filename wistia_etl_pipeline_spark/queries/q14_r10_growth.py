@@ -60,11 +60,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schemas import as_nullable
-from ..session import (
-    load_table,
-    scoped_shuffle_partitions,
-    stream_state_partitions,
-)
+from ..session import load_table
+from ..streaming.pipeline import run_available
 from ._base import query
 
 # ---------------------------------------------------------------------------
@@ -292,27 +289,15 @@ def foreachbatch_replay_exactly_once(
         )
 
     def run() -> None:
-        # Stateless stream, but each foreachBatch aggregate still
-        # shuffles at the session width for ~5 groups — scoped down
-        # (session.scoped_shuffle_partitions, shared rule).
-        with scoped_shuffle_partitions(
-            spark, source=spark.read.schema(schema).parquet(src)
-        ):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
-                .writeStream.foreachBatch(sink_batch)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "foreachbatch_replay_exactly_once: stream did not finish "
-                    "within 300 s"
-                )
+        run_available(
+            spark,
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+            .writeStream.foreachBatch(sink_batch),
+            ck,
+            spark.read.schema(schema).parquet(src),
+        )
 
     run()
     commits = sorted(
@@ -552,34 +537,23 @@ def statestore_change_feed_audit(
             "append"
         ).parquet(src)
     schema = as_nullable(micro.schema)
-    # State partitions sized to the ~5-key state, not compute width
-    # (session.scoped_shuffle_partitions, shared streaming-family
-    # rule); the statestore/changelog readers take numPartitions from
-    # checkpoint metadata, so the audit itself is unaffected.
-    with scoped_shuffle_partitions(
-        spark, source=spark.read.schema(schema).parquet(src)
-    ):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("m").alias("s"),
-            )
-            .writeStream.outputMode("complete")
-            .format("noop")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+    # the statestore/changelog readers take numPartitions from
+    # checkpoint metadata
+    run_available(
+        spark,
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("m").alias("s"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "statestore_change_feed_audit: stream did not finish within "
-                "300 s; refusing to read a partially-written checkpoint"
-            )
+        .writeStream.outputMode("complete")
+        .format("noop"),
+        ck,
+        spark.read.schema(schema).parquet(src),
+    )
     feed = (
         spark.read.format("statestore")
         .option("readChangeFeed", "true")
@@ -673,36 +647,24 @@ def rocksdb_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark.conf.set(log_key, "true")
     try:
-        # One RocksDB instance spins up per shuffle partition per
-        # trigger — state partitions sized to the 5-key state, not
-        # compute width (session.scoped_shuffle_partitions, shared
-        # streaming-family rule).
-        with scoped_shuffle_partitions(
-            spark, source=spark.read.schema(schema).parquet(src)
-        ):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "2")
-                .parquet(src)
-                .groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(
-                        F.expr("CAST(floor(value * 1000000) AS BIGINT)")
-                    ).alias("s"),
-                )
-                .writeStream.outputMode("complete")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        # one RocksDB instance opens per state partition per trigger
+        run_available(
+            spark,
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "2")
+            .parquet(src)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(
+                    F.expr("CAST(floor(value * 1000000) AS BIGINT)")
+                ).alias("s"),
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "rocksdb_statestore_audit: stream did not finish within "
-                    "300 s; refusing to read a partially-written checkpoint"
-                )
+            .writeStream.outputMode("complete")
+            .format("noop"),
+            ckpt,
+            spark.read.schema(schema).parquet(src),
+        )
         meta = (
             spark.read.format("state-metadata")
             .load(ckpt)
@@ -1028,50 +990,39 @@ def chained_windowed_aggregation(
     micro.repartition(4).write.parquet(src)
     schema = as_nullable(micro.schema)
     max_ts = micro.agg(F.max("ts")).collect()[0][0]
-    # TWO stateful operators pay per-partition store maintenance each
-    # trigger for calendar-grain state — state partitions sized to state
-    # volume (session.stream_state_partitions, shared streaming-family
-    # rule). Both runs resume the same checkpoint, so the width is
-    # derived once, before the sentinel lands, and pinned for both.
-    width = stream_state_partitions(spark, spark.read.schema(schema).parquet(src))
+
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+        .withWatermark("ts", "1 minute")
+    )
+    daily = stream.groupBy(
+        F.window("ts", "1 day").alias("w"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n"))
+    weekly = daily.groupBy(
+        F.window(F.window_time("w"), "7 days").alias("w7"), "event_type"
+    ).agg(
+        F.max("n").alias("max_daily"),
+        F.sum("n").alias("total_events"),
+    ).select(
+        "event_type",
+        F.unix_micros("w7.start").alias("week_start_us"),
+        "max_daily",
+        "total_events",
+    )
 
     def run_once() -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-            .withWatermark("ts", "1 minute")
+        # the second run resumes the checkpoint, whose offset metadata
+        # keeps the first run's state width
+        run_available(
+            spark,
+            weekly.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", sink),
+            ck,
+            spark.read.schema(schema).parquet(src),
         )
-        daily = stream.groupBy(
-            F.window("ts", "1 day").alias("w"), "event_type"
-        ).agg(F.count(F.lit(1)).alias("n"))
-        weekly = daily.groupBy(
-            F.window(F.window_time("w"), "7 days").alias("w7"), "event_type"
-        ).agg(
-            F.max("n").alias("max_daily"),
-            F.sum("n").alias("total_events"),
-        )
-        with scoped_shuffle_partitions(spark, n=width):
-            q = (
-                weekly.select(
-                    "event_type",
-                    F.unix_micros("w7.start").alias("week_start_us"),
-                    "max_daily",
-                    "total_events",
-                )
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "chained_windowed_aggregation: stream did not finish "
-                    "within 300 s"
-                )
 
     run_once()
     # The flush sentinel lands in a SECOND file-source discovery, so
@@ -1085,7 +1036,8 @@ def chained_windowed_aggregation(
     run_once()
 
     return (
-        spark.read.parquet(sink)
+        spark.read.schema(weekly.schema)
+        .parquet(sink)
         .where(F.col("event_type") != "zz_flush")
         .select(
             "event_type",

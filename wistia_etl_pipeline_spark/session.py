@@ -105,25 +105,11 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-#: State-partition count for the engine's bounded-state streaming
-#: demonstrations (env-overridable for cluster sizing). The r9
-#: ``statestore_join_state_audit`` lesson, generalized in r12: every
-#: micro-batch pays state-store maintenance on EVERY shuffle partition
-#: of every stateful operator whether or not it holds data (a
-#: stream-stream join keeps 4 stores per partition per side — at 32
-#: session partitions that was measured at ~4x the whole query's
-#: runtime for kilobytes of state). All of this engine's streaming
-#: state is BOUNDED by construction (calendar-grain aggregates,
-#: watermark-horizon join buffers, 64-register sketches), so a small
-#: state-partition count is the honest production sizing too — the
-#: knob scales with state volume, not compute parallelism.
-STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8")
-)
+#: Floor of the streaming state width (see ``stream_state_partitions``;
+#: the width rule is ``streaming.pipeline.run_available``'s docstring).
+STREAM_SHUFFLE_PARTITIONS = 8
 
-#: Source-bytes-per-state-partition target for the data-adaptive
-#: derivation below (r13, the VERDICT r12 item): 1 GiB of staged stream
-#: input per state partition.
+#: Source bytes per state partition for ``stream_state_partitions``.
 STREAM_STATE_BYTES_PER_PARTITION = 1 << 30
 
 #: Upper clamp for the derived width — bounds the per-trigger
@@ -133,34 +119,21 @@ _STREAM_STATE_MAX_PARTITIONS = 2048
 
 
 def stream_state_partitions(spark: SparkSession, source=None) -> int:
-    """Data-adaptive state-partition count for stateful streaming
-    operators (r13; mirrors ``graph._SMALL_FRONTIER``'s derive-from-data
-    rule instead of the r12 constant).
-
-    Why input bytes: every micro-batch pays state-store maintenance on
-    EVERY shuffle partition of every stateful operator, so the width
-    must track STATE volume, not compute width. The engine's streaming
-    state is grain/watermark-bounded, so distinct state keys grow (at
-    most linearly, usually far slower) with the staged input — whose
-    on-disk size is known from the file listing the stream source has
-    already done, i.e. derivable WITHOUT running a job. One state
-    partition per ``STREAM_STATE_BYTES_PER_PARTITION`` (1 GiB default)
-    of input, clamped to [``STREAM_SHUFFLE_PARTITIONS``, 2048]: at the
-    bench SFs (MB-scale sources) this floors to the r12-measured 8 —
-    bit-identical bench behavior — while a 100 TB backfill derives a
-    cluster-scale width instead of serializing on 8 stores. The env
-    var stays the operator override for deployments that know their
-    key cardinality (it short-circuits the derivation entirely, and is
-    read at each call).
+    """State-partition count for a stream over ``source``: one
+    partition per ``STREAM_STATE_BYTES_PER_PARTITION`` (1 GiB) of
+    staged input, clamped to [``STREAM_SHUFFLE_PARTITIONS``, 2048]. At
+    the bench SFs (MB-scale sources) this floors to 8; a 100 TB
+    backfill derives a cluster-scale width instead of serializing on 8
+    stores. Why the width follows input bytes is written at
+    ``streaming.pipeline.run_available``.
 
     ``source``: a batch DataFrame over the staged input, or a list of
-    them (stream-stream joins pass both sides). Read it with the staged
-    frame's schema (``schemas.as_nullable``) so it costs no
-    schema-inference job. ``None`` keeps the static default.
+    them (stream-stream joins pass both sides). Its size comes from the
+    plan statistics of the file listing, so no job runs; read it with
+    the staged frame's schema (``schemas.as_nullable``) so it costs no
+    schema-inference job either. ``None``, or a source without
+    statistics, gives the floor.
     """
-    override = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if override:
-        return int(override)
     if source is None:
         return STREAM_SHUFFLE_PARTITIONS
     frames = source if isinstance(source, (list, tuple)) else [source]
@@ -181,36 +154,6 @@ def stream_state_partitions(spark: SparkSession, source=None) -> int:
     return max(
         STREAM_SHUFFLE_PARTITIONS, min(_STREAM_STATE_MAX_PARTITIONS, derived)
     )
-
-
-class scoped_shuffle_partitions:
-    """Context manager: set ``spark.sql.shuffle.partitions`` for the
-    duration of a block and restore it on exit (both paths). Safe under
-    the engine's documented sequential-per-session invariant. Its users
-    are the stateful streams, whose state stores take their partition
-    count from this conf; batch operators size their shuffles per plan
-    (``repartition``) instead. Every action that should run at the
-    scoped width must execute INSIDE the block (lazy frames
-    materialized later see the restored session value).
-
-    ``source`` (r13): staged stream input (a DataFrame or a list of
-    them) the width is derived from via :func:`stream_state_partitions`;
-    without it the static ``STREAM_SHUFFLE_PARTITIONS`` default
-    applies."""
-
-    def __init__(self, spark: SparkSession, n: int | None = None, *, source=None):
-        self._spark = spark
-        self._n = stream_state_partitions(spark, source) if n is None else n
-        self._prev: str | None = None
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
 
 
 _SHIPPED: set[int] = set()

@@ -71,47 +71,51 @@ class StagedJsonWriter(DataSourceWriter):
 
     # -- driver side ------------------------------------------------------
     def commit(self, messages) -> None:
-        files = []
-        total = 0
-        xor60 = 0
-        for i, m in enumerate(messages):
-            if m is None or m.rows == 0:
-                if m is not None:
-                    os.remove(m.staged_path)
-                continue
-            final = os.path.join(self.path, f"part-{i:05d}.json")
-            os.replace(m.staged_path, final)
-            files.append(
-                {
-                    "path": os.path.basename(final),
-                    "rows": m.rows,
-                    "xor60": m.xor60,
-                }
-            )
-            total += m.rows
-            xor60 ^= m.xor60
-        manifest = {
-            "files": files,
-            "total_rows": total,
-            "xor60": xor60,
-        }
-        tmp = os.path.join(self.path, f"_manifest-{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.path, "_MANIFEST.json"))
-        staging = os.path.join(self.path, "_staging")
+        _commit(self.path, messages, "", "_MANIFEST.json", {})
         try:
-            os.rmdir(staging)
+            os.rmdir(os.path.join(self.path, "_staging"))
         except OSError:
             pass  # a raced writer may still be staging — leave it
 
     def abort(self, messages) -> None:
-        for m in messages:
+        _remove_staged(messages)
+
+
+def _commit(
+    path: str, messages, prefix: str, manifest_name: str, header: dict
+) -> None:
+    """Rename each staged file to ``<prefix>part-<i>.json`` in ``path``
+    (empty ones are deleted), THEN write the manifest ``manifest_name``
+    — ``header`` plus the files, total rows and XOR checksum — through
+    a temp file and an atomic replace: the manifest is the commit
+    record."""
+    files = []
+    total = 0
+    xor60 = 0
+    for i, m in enumerate(messages):
+        if m is None or m.rows == 0:
             if m is not None:
-                try:
-                    os.remove(m.staged_path)
-                except OSError:
-                    pass
+                os.remove(m.staged_path)
+            continue
+        name = f"{prefix}part-{i:05d}.json"
+        os.replace(m.staged_path, os.path.join(path, name))
+        files.append({"path": name, "rows": m.rows, "xor60": m.xor60})
+        total += m.rows
+        xor60 ^= m.xor60
+    manifest = {**header, "files": files, "total_rows": total, "xor60": xor60}
+    tmp = os.path.join(path, f"_manifest-{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(path, manifest_name))
+
+
+def _remove_staged(messages) -> None:
+    for m in messages:
+        if m is not None:
+            try:
+                os.remove(m.staged_path)
+            except OSError:
+                pass
 
 
 class StagedJsonDataSource(DataSource):
@@ -129,6 +133,20 @@ class StagedJsonDataSource(DataSource):
 def read_manifest(path: str) -> dict:
     with open(os.path.join(path, "_MANIFEST.json"), encoding="utf-8") as f:
         return json.load(f)
+
+
+def committed_files(path: str) -> list[str]:
+    """Paths of the files the committed manifests in ``path`` list —
+    the batch ``_MANIFEST.json`` or the per-epoch
+    ``_MANIFEST-<id>.json`` ones, in manifest-name order. A file no
+    manifest names (an epoch that died before its manifest landed) is
+    never returned."""
+    files = []
+    for name in sorted(os.listdir(path)):
+        if name.startswith("_MANIFEST") and name.endswith(".json"):
+            with open(os.path.join(path, name), encoding="utf-8") as f:
+                files += [os.path.join(path, e["path"]) for e in json.load(f)["files"]]
+    return files
 
 
 class StagedJsonStreamWriter(DataSourceStreamWriter):
@@ -151,44 +169,13 @@ class StagedJsonStreamWriter(DataSourceStreamWriter):
         ).write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        files = []
-        total = 0
-        xor60 = 0
-        for i, m in enumerate(messages):
-            if m is None or m.rows == 0:
-                if m is not None:
-                    os.remove(m.staged_path)
-                continue
-            final = os.path.join(
-                self.path, f"epoch-{batchId:06d}-part-{i:05d}.json"
-            )
-            os.replace(m.staged_path, final)
-            files.append(
-                {
-                    "path": os.path.basename(final),
-                    "rows": m.rows,
-                    "xor60": m.xor60,
-                }
-            )
-            total += m.rows
-            xor60 ^= m.xor60
-        manifest = {
-            "batch_id": batchId,
-            "files": files,
-            "total_rows": total,
-            "xor60": xor60,
-        }
-        tmp = os.path.join(self.path, f"_manifest-{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(manifest, f)
-        os.replace(
-            tmp, os.path.join(self.path, f"_MANIFEST-{batchId:06d}.json")
+        _commit(
+            self.path,
+            messages,
+            f"epoch-{batchId:06d}-",
+            f"_MANIFEST-{batchId:06d}.json",
+            {"batch_id": batchId},
         )
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None:
-                try:
-                    os.remove(m.staged_path)
-                except OSError:
-                    pass
+        _remove_staged(messages)
