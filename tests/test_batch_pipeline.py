@@ -1,11 +1,13 @@
 """EP1→EP3 end-to-end: incremental runs with skip/full-pull/resume,
 idempotent silver/gold, event-time partition layout, and the per-run
 work P3 allows: silver from the pulled batch, dim only on a full pull,
-no schema-inference job."""
+no schema-inference job; and the failure windows of a run whose silver
+and dim MERGE writes overlap its bronze write."""
 
 from __future__ import annotations
 
 import json
+import time
 import uuid
 from collections import Counter
 
@@ -225,7 +227,7 @@ def test_bronze_write_failure_advances_nothing(spark, tmp_path):
 
     s1 = pipe.run_once(["m1", "m2"])
     assert all(v["action"] == "error" for v in s1.values())
-    assert not (tmp_path / "silver").exists()  # no partial stage ran
+    assert not (tmp_path / "silver").exists()  # nothing was published
     assert pipe.state_store.read() == {}  # no watermark advanced
 
     s2 = pipe.run_once(["m1", "m2"])  # outage over: full re-pull
@@ -340,11 +342,13 @@ def test_resume_without_dim_table_seeds_it(spark, tmp_path):
 
 
 def test_silver_merge_failure_converges_on_rerun(spark, tmp_path, monkeypatch):
-    """A run whose silver MERGE raises after its bronze batch landed,
-    followed by runs until every media skips, ends with the silver, dim
-    and gold of a run that never failed: no watermark moved, so the
-    rerun re-pulls the same pages (here a RESUME next to a FULL_PULL)."""
-    real = pipeline_mod.merge_into_path
+    """A run whose silver MERGE write raises, while its bronze batch
+    lands, followed by runs until every media skips, ends with the
+    silver, dim and gold of a run that never failed: no watermark moved,
+    so the rerun re-pulls the same pages (here a RESUME next to a
+    FULL_PULL). The error is raised only once bronze has landed and no
+    job of the run is left running."""
+    real = pipeline_mod.prepare_merge
 
     def scenario(root, fail_silver_merge):
         fake = FakeWistia()
@@ -355,7 +359,7 @@ def test_silver_merge_failure_converges_on_rerun(spark, tmp_path, monkeypatch):
         fake.events["m2"].append(_event("m2e2", "2024-01-02T15:00:00Z", 1.0, "v9", "m2"))
         calls = {"silver": 0}
 
-        def merge(spark_, stage, path, keys):
+        def prepare(spark_, stage, path, keys):
             if path == pipe.silver_path:
                 calls["silver"] += 1
                 if fail_silver_merge and calls["silver"] == 1:
@@ -363,15 +367,108 @@ def test_silver_merge_failure_converges_on_rerun(spark, tmp_path, monkeypatch):
             return real(spark_, stage, path, keys)
 
         with monkeypatch.context() as m:
-            m.setattr(pipeline_mod, "merge_into_path", merge)
+            m.setattr(pipeline_mod, "prepare_merge", prepare)
             if fail_silver_merge:
                 with pytest.raises(OSError, match="injected"):
                     pipe.run_once(["m1", "m2"])
+                assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
                 assert (root / "bronze" / "media_id=m2").exists()
         _run_until_skip(pipe, ["m1", "m2"])
         return _tables(spark, root)
 
     assert scenario(tmp_path / "failed", True) == scenario(tmp_path / "ref", False)
+
+
+def _listing(root) -> dict:
+    """Every file of the silver, dim and gold directories, with its size."""
+    return {
+        t: {p.name: p.stat().st_size for p in (root / t).iterdir()}
+        for t in ("silver", "dim", "gold")
+    }
+
+
+def test_bronze_failure_after_merge_writes_publishes_nothing(spark, tmp_path):
+    """Bronze fails on a run against existing tables after the silver
+    and dim MERGEs have written their temp directories: no table
+    changes, no ``__old`` directory is left, the watermark stays put,
+    no job of the run is left running, and a rerun ends where a run
+    that never failed ends."""
+
+    def scenario(root, fail_bronze):
+        fake = FakeWistia()
+        pipe = _mk(spark, root, fake)
+        pipe.gold_exact = True  # bit-identical gold across the two runs
+        pipe.run_once(["m1", "m2"])
+        fake.events["m1"].append(_event("m1e4", "2024-01-02T15:00:00Z", 1.0, "v9", "m1"))
+        fake.meta["m1"]["updated"] = "2024-01-03T00:00:00Z"
+        if fail_bronze:
+            real = pipe._write_bronze_batch
+
+            def failing(batch):
+                # fail only once both MERGE writes have landed their temp
+                # directories, so nothing but the publish is left
+                written = [root / f"{t}__tmp_merge" / "_SUCCESS" for t in ("silver", "dim")]
+                deadline = time.monotonic() + 120
+                while not all(p.exists() for p in written):
+                    assert time.monotonic() < deadline, "MERGE writes did not land"
+                    time.sleep(0.05)
+                raise OSError("injected bronze outage")
+
+            before, state = _listing(root), pipe.state_store.read()
+            pipe._write_bronze_batch = failing
+            summary = pipe.run_once(["m1", "m2"])
+            assert summary["m1"]["action"] == "error"
+            assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+            assert (root / "silver__tmp_merge").exists() and (root / "dim__tmp_merge").exists()
+            assert _listing(root) == before
+            assert not list(root.glob("*__old"))
+            assert pipe.state_store.read() == state
+            pipe._write_bronze_batch = real
+        _run_until_skip(pipe, ["m1", "m2"])
+        return _tables(spark, root)
+
+    assert scenario(tmp_path / "failed", True) == scenario(tmp_path / "ref", False)
+
+
+def test_bronze_failure_reports_a_failed_merge_write(spark, tmp_path, monkeypatch):
+    """Bronze and the silver MERGE write both fail: the run reports both
+    errors, instead of dropping the one its futures held."""
+    real = pipeline_mod.prepare_merge
+    pipe = _mk(spark, tmp_path, FakeWistia())
+
+    def prepare(spark_, stage, path, keys):
+        if path == pipe.silver_path:
+            raise OSError("injected silver MERGE failure")
+        return real(spark_, stage, path, keys)
+
+    def bronze(batch):
+        raise OSError("injected bronze outage")
+
+    monkeypatch.setattr(pipeline_mod, "prepare_merge", prepare)
+    pipe._write_bronze_batch = bronze
+    error = pipe.run_once(["m1"])["m1"]["error"]
+    assert "injected bronze outage" in error and "injected silver MERGE" in error
+    assert pipe.state_store.read() == {}
+
+
+def test_gold_drops_a_day_that_lost_its_last_event(spark, tmp_path):
+    """m2's only event is re-delivered with a later ``received_at``:
+    silver holds it on the new day only, and gold keeps no row for the
+    day it left, because gold replaces each re-rolled media's rows."""
+    fake = FakeWistia()
+    pipe = _mk(spark, tmp_path, fake)
+    pipe.run_once(["m2"])
+    fake.events["m2"] = [_event("m2e1", "2024-01-02T08:00:00Z", 1.0, "v3", "m2")]
+    fake.meta["m2"]["updated"] = "2024-01-03T00:00:00Z"
+    assert pipe.run_once(["m2"])["m2"]["action"] == "full_pull"
+    silver = spark.read.parquet(str(tmp_path / "silver"))
+    assert [tuple(r) for r in silver.selectExpr(
+        "event_key", "CAST(to_date(received_at) AS STRING)"
+    ).collect()] == [("m2e1", "2024-01-02")]
+    gold = spark.read.parquet(str(tmp_path / "gold")).collect()
+    assert [(r.media_id, str(r.dt), r.load_count) for r in gold] == [
+        ("m2", "2024-01-02", 1)
+    ]
 
 
 def test_row_naming_another_media_reaches_silver_and_gold(spark, tmp_path):

@@ -11,6 +11,12 @@ Only the session builder and the stream runner name
 ``spark.sql.shuffle.partitions``: batch plans size their shuffles per
 plan, and a query that writes the session conf changes the width of
 every other plan running on that session.
+
+Every thread target the package hands to an executor (``submit``) or a
+``Thread(target=…)`` is wrapped in ``inheritable_thread_target``: the
+jobs of a thread that does not inherit the caller's job group drop out
+of every count by group (``bench._run``, perfbench, the job-count
+tests), and nothing fails.
 """
 
 from __future__ import annotations
@@ -144,4 +150,42 @@ def test_only_the_session_builder_and_stream_runner_set_the_shuffle_width():
     )
     assert users == SHUFFLE_CONF_OWNERS, (
         f"owners that no longer name it: {sorted(SHUFFLE_CONF_OWNERS - users)}"
+    )
+
+
+def _call_name(func) -> str | None:
+    return getattr(func, "id", None) or getattr(func, "attr", None)
+
+
+def _thread_targets():
+    """(file:line, target node) of every ``….submit(target, …)`` and
+    ``Thread(target=…)`` call in the package."""
+    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+        rel = path.relative_to(ROOT / PACKAGE).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            name = _call_name(node.func)
+            if name == "submit" and node.args:
+                yield f"{rel}:{node.lineno}", node.args[0]
+            elif name == "Thread":
+                target = [k.value for k in node.keywords if k.arg == "target"]
+                yield f"{rel}:{node.lineno}", (target or node.args[1:2] or [None])[0]
+
+
+def _inherits_job_group(target) -> bool:
+    """``inheritable_thread_target(fn)`` or ``inheritable_thread_target(spark)(fn)``."""
+    if not isinstance(target, ast.Call):
+        return False
+    wrapper = target.func.func if isinstance(target.func, ast.Call) else target.func
+    return _call_name(wrapper) == "inheritable_thread_target"
+
+
+def test_every_thread_target_inherits_the_job_group():
+    sites = dict(_thread_targets())
+    assert sites, "no thread target found: the scan no longer sees run_once's pool"
+    bare = sorted(where for where, target in sites.items() if not _inherits_job_group(target))
+    assert not bare, (
+        "thread targets not wrapped in inheritable_thread_target (their jobs "
+        f"leave the caller's job group): {bare}"
     )

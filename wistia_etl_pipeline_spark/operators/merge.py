@@ -26,7 +26,9 @@ Scale notes (100 TB):
   delta-sized (a day's delta vs years of history), so the anti-join
   never shuffles the 100 TB target. The only exchange over the target
   is the key clustering of the rewrite.
-- :func:`merge_into_path` materializes via write-temp-then-swap. On
+- :func:`merge_into_path` materializes via write-temp-then-swap;
+  :func:`prepare_merge` is its write half, for callers that publish
+  later (the medallion run lands bronze first). On
   vanilla Parquet, overwrite-in-place is not atomic for concurrent
   readers (SURVEY.md §7.4); on a table format with ACID commit
   semantics (Delta/Iceberg) a real ``MERGE INTO`` replaces this whole
@@ -40,7 +42,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import json
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -69,8 +71,12 @@ def merge_plan(
         # Spark does not reuse a broadcast exchange as a union input,
         # so an expensive stage (a JSON-parse+dedup delta, an exact
         # rollup) would execute twice per merge (r12; NOTES rule #7).
-        # One lazy cut point = one computation, and the checkpoint is
-        # delta-sized by the incremental contract.
+        # One cut point = one computation, and the checkpoint is
+        # delta-sized by the incremental contract. Under AQE the cut is
+        # not lazy despite ``eager=False``: the call runs the stage's
+        # shuffle stages at once, in an SQL execution of its own (the
+        # separate 1-job silver and 3-job gold executions of a traced
+        # medallion tick), and only the checkpointed RDD is deferred.
         merged = upsert(target, stage.localCheckpoint(eager=False), keys)
     # Cluster the rewrite by key before it lands (guide §6 output
     # sizing, r13): without this the file count is whatever the merged
@@ -85,14 +91,20 @@ def merge_plan(
     return merged.repartition(*[F.col(k) for k in keys])
 
 
-def merge_into_path(
+def prepare_merge(
     spark: SparkSession, stage: DataFrame, path: str, keys: Sequence[str]
-) -> None:
-    """Materialized MERGE against a Parquet path: read target, write
-    :func:`merge_plan` to a temp path, swap. The swap is a rename —
+) -> Callable[[], None]:
+    """The write half of a MERGE against a Parquet path: recover an
+    interrupted swap, read the target, write :func:`merge_plan` to
+    ``<path>__tmp_merge``. Returns the publish half, the :func:`_swap`
+    that renames the temp directory in. The swap is a rename —
     near-atomic on posix/HDFS, best-effort on object stores (use
     Delta/Iceberg for true ACID; this is the vanilla-Parquet fallback,
     SURVEY.md §7.4).
+
+    Until the returned call runs, the table is untouched: a caller that
+    never publishes leaves only the temp directory, which the next
+    MERGE into ``path`` overwrites (so publish before that one starts).
 
     The target is read with the stage's schema (:func:`_read_target`),
     so the MERGE runs no schema-inference job; a target whose columns
@@ -104,7 +116,15 @@ def merge_into_path(
     target = _read_target(spark, fs, path, stage.schema)
     tmp = path.rstrip("/") + "__tmp_merge"
     merge_plan(stage, target, keys).write.mode("overwrite").parquet(tmp)
-    _swap(spark, fs, tmp, path)
+    return lambda: _swap(spark, fs, tmp, path)
+
+
+def merge_into_path(
+    spark: SparkSession, stage: DataFrame, path: str, keys: Sequence[str]
+) -> None:
+    """Materialized MERGE against a Parquet path: :func:`prepare_merge`,
+    then publish at once."""
+    prepare_merge(spark, stage, path, keys)()
 
 
 def _read_target(

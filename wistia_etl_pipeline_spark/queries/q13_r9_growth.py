@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..schemas import as_nullable
 from ..session import load_table
 from ..streaming.pipeline import run_available
+from ..streaming.staging import stamp_name_order
 from ._base import query
 from .q01_core_gold_silver import _dup_corpus
 from .q02_sessions_events_e2e import _simhash_pairs_oracle
@@ -776,8 +777,12 @@ def statestore_join_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("p_user"), F.col("ts").alias("pts")
     )
     vp, pp = os.path.join(root, "v"), os.path.join(root, "p")
+    # name-ordered mtimes: the same files form the same micro-batches
+    # on every run, so the job count does not move from run to run
     views.repartition(2).write.parquet(vp)
     purch.repartition(2).write.parquet(pp)
+    stamp_name_order(vp)
+    stamp_name_order(pp)
     v_src = spark.read.schema(as_nullable(views.schema)).parquet(vp)
     p_src = spark.read.schema(as_nullable(purch.schema)).parquet(pp)
     v_stream = (

@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..schemas import as_nullable
 from ..session import load_table
 from ..streaming.pipeline import run_available
+from ..streaming.staging import stamp_name_order
 from ._base import query
 
 # ---------------------------------------------------------------------------
@@ -988,6 +989,7 @@ def chained_windowed_aggregation(
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     micro = ev.select("event_type", "ts")
     micro.repartition(4).write.parquet(src)
+    stamp_name_order(src)  # same micro-batches on every run
     schema = as_nullable(micro.schema)
     max_ts = micro.agg(F.max("ts")).collect()[0][0]
 

@@ -21,14 +21,19 @@ order — from ONE scan and ONE write job:
    hash slot writes it), and the job scans the input once;
 3. move each ``__rng=i/part-*.parquet`` file up into the flat staging
    root and stamp an EXPLICIT, deterministic, strictly-increasing mtime
-   per range (``os.utime``) — replay order is then a property of the
-   staged bytes, not of write-job scheduling.
+   per range (``os.utime``, :func:`stamp_name_order`) — replay order is
+   then a property of the staged bytes, not of write-job scheduling.
 
 The explicit-utime step is what makes this equivalent to the sequential
 writes: we own the temp files, and FileStreamSource orders by the very
 field we set. Rows WITHIN a range still share a file exactly as before,
 so watermark semantics (range k+1 strictly newer than watermark(k)) are
 unchanged — which is what the stream==batch driver hash checks.
+
+An input staged by one plain write job gets the same property from
+``stamp_name_order`` alone: its part files get strictly increasing
+mtimes in name order, so ``maxFilesPerTrigger`` groups the same files
+into the same micro-batches on every run.
 """
 
 from __future__ import annotations
@@ -77,14 +82,20 @@ def stage_time_ordered(
         .parquet(tmp)
     )
     os.makedirs(path, exist_ok=True)
-    seq = 0
     for i in range(n):
-        files = sorted(glob.glob(os.path.join(tmp, f"__rng={i}", "*.parquet")))
-        for src in files:
-            dst = os.path.join(path, f"range-{i:04d}-{os.path.basename(src)}")
-            shutil.move(src, dst)
-            mtime = _MTIME_BASE + seq
-            os.utime(dst, (mtime, mtime))
-            seq += 1
+        for src in sorted(glob.glob(os.path.join(tmp, f"__rng={i}", "*.parquet"))):
+            shutil.move(src, os.path.join(path, f"range-{i:04d}-{os.path.basename(src)}"))
     shutil.rmtree(tmp, ignore_errors=True)
+    stamp_name_order(path)  # "range-{i:04d}-" names sort in range order
     return path
+
+
+def stamp_name_order(path: str) -> None:
+    """Stamp the data files directly under ``path`` (Spark's rule: no
+    ``_`` or ``.`` prefix) with deterministic, strictly increasing mtimes
+    in file-name order, so FileStreamSource replays them in that order.
+    A plain write job numbers its part files by partition and gives them
+    one shared mtime, a tie FileStreamSource breaks by listing order."""
+    for seq, f in enumerate(sorted(glob.glob(os.path.join(path, "[!_.]*")))):
+        mtime = _MTIME_BASE + seq
+        os.utime(f, (mtime, mtime))
